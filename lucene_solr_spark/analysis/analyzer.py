@@ -39,12 +39,6 @@ ENGLISH_STOP_WORDS = frozenset(
 _TOKEN_RE = re.compile(r"[A-Za-z0-9_]+(?:['.:][A-Za-z0-9_]+)*")
 
 
-def tokenize_raw(text: str) -> list[str]:
-    """Tokenizer output before lowercase/stop filtering (255-rule applied
-    by the caller so position accounting stays in one place)."""
-    return _TOKEN_RE.findall(text)
-
-
 def analyze(text: str) -> list[str]:
     """Full chain, terms only: tokenize -> 255-drop -> lowercase -> stop."""
     out = []

@@ -19,10 +19,15 @@ Pipeline (two passes over the corpus, minimum materialization):
     field_stats come from the same count job; no extra pass.
 
   pass 2 (postings): read docmap (column-pruned to doc_id/norm_byte/
-    text), tokenize + explode + salt in one Arrow kernel, ONE shuffle
-    into groupBy(term, salt).applyInPandas block encoding.  Blocks store
-    idf-free metadata (sum_tf, max_ratio) so exact term_stats are a cheap
-    rollup of block metadata afterwards — no second corpus-wide shuffle.
+    text), tokenize + invert + salt + block-encode per input partition
+    in one Arrow kernel, tagging each chunk with its term bucket; ONE
+    shuffle (repartition by bucket, sorted by (field, term, salt,
+    first_doc) within each partition) feeds a streaming mapInPandas
+    merge that walks the sorted groups and writes final blocks straight
+    into the bucket-partitioned table — one Python call per partition,
+    not per term.  Blocks store idf-free metadata (sum_tf, max_tf,
+    min_ntab) so exact term_stats are a cheap rollup of block metadata
+    afterwards — no second corpus-wide shuffle.
 
 Scale design (10^12 turns, SURVEY.md §7):
 - docIDs: dense global rank over the stable (conv_id, turn_idx) order via
@@ -94,8 +99,9 @@ KEYWORD_FIELDS = ("role", "tool")
 CHUNK_SCHEMA = (
     "field string, term string, salt int, kind int, first_doc long, "
     "last_doc long, doc_count int, sum_tf long, max_tf int, payload binary, "
-    "norms binary, pos binary"
+    "norms binary, pos binary, bucket int"
 )
+CHUNK_COLS = [c.split()[0] for c in CHUNK_SCHEMA.split(", ")]
 
 POSTINGS_SCHEMA = (
     "field string, term string, salt int, block_id int, kind int, "
@@ -103,6 +109,7 @@ POSTINGS_SCHEMA = (
     "payload binary, norms_payload binary, pos_payload binary, max_tf int, "
     "min_ntab float, bucket int"
 )
+POSTINGS_COLS = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ")]
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
@@ -443,12 +450,14 @@ def _hot_terms_from_sidecar(sidecar_dir: str, cfg: BuildConfig) -> dict[str, int
 
 
 def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
-                              positions: bool = False, an_opts=None):
+                              n_buckets: int, positions: bool = False,
+                              an_opts=None):
     """mapInPandas kernel: the DWPT analogue.  Tokenizes + inverts the
     whole input partition in RAM, then flushes per-(field, term, salt)
     ENCODED chunk blocks — so the term shuffle moves compressed postings,
     not raw rows (map-side combine at segment granularity,
     index/DocumentsWriterPerThread.java:409 + FreqProxTermsWriter.flush).
+    Each chunk carries its term's bucket, the one shuffle key.
 
     Inversion is a tight per-doc loop over the C regex's token list.
     VERDICT r1 item 8 proposed vectorizing it; the experiment was run
@@ -470,6 +479,7 @@ def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
         docs must be ascending (poslists: list of per-posting position
         arrays, or None when positions are off)."""
         n_salt = hot_salts.get((field, term), 1) if hot_salts else 1
+        bucket = term_bucket(term, n_buckets)
         if n_salt > 1:
             salts = (docs * n_salt // max(max_doc, 1)).astype(np.int32)
             bounds = (np.flatnonzero(np.diff(salts)) + 1).tolist()
@@ -496,7 +506,7 @@ def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
                         blk["last_doc"], blk["doc_count"],
                         int(pd_tfs[off:e].sum()), blk["max_tf"],
                         blk["payload"], pd_norms[off:e].tobytes(),
-                        pos_payload,
+                        pos_payload, bucket,
                     )
                 )
                 off = e
@@ -560,23 +570,21 @@ def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
                 pl = [pl[j] for j in order]
             _emit(rows, field, term, docs, tfs, norms, pl)
         if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "field", "term", "salt", "kind", "first_doc", "last_doc",
-                    "doc_count", "sum_tf", "max_tf", "payload", "norms",
-                    "pos",
-                ],
-            )
+            yield pd.DataFrame(rows, columns=CHUNK_COLS)
 
     return invert
 
 
-def _merge_group_factory(n_buckets: int, positions: bool = False):
-    """applyInPandas kernel over one (term, salt) group: the SegmentMerger
-    analogue (index/SegmentMerger.java:80-133) — decode the per-partition
-    chunk blocks, merge into one globally doc-sorted list, re-encode as
-    final blocks.
+def _merge_sorted_factory(positions: bool = False):
+    """mapInPandas kernel over one shuffle partition of chunks sorted by
+    (field, term, salt, first_doc): the SegmentMerger analogue
+    (index/SegmentMerger.java:80-133).  It walks the partition group by
+    group — per (field, term, salt) it decodes the per-partition chunk
+    blocks, merges them into one doc-sorted list and re-encodes final
+    blocks — so one Python call serves the whole partition instead of
+    one pandas call per group.  A group may straddle Arrow batches: the
+    open group is carried into the next batch, so a task holds at most
+    one (salt-bounded) group plus one batch.
 
     Per-block (max_tf, min_ntab) is the block-max metadata that replaces
     Lucene's skip lists (SURVEY.md §4.2) and feeds WAND/MaxScore pruning:
@@ -587,67 +595,66 @@ def _merge_group_factory(n_buckets: int, positions: bool = False):
     — the query engine plugs in the CURRENT global avgdl.  The encoder
     therefore needs no global statistics at all: exact term_stats are
     rolled up FROM the blocks afterwards."""
-    from .codec import decode_block, decode_positions, encode_positions
+    from .codec import (
+        BLOCK_SIZE, decode_block, decode_positions, encode_positions,
+    )
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        field = pdf["field"].iloc[0]
-        term = pdf["term"].iloc[0]
-        salt = int(pdf["salt"].iloc[0])
+    cols = ("field", "term", "salt", "kind", "first_doc", "doc_count",
+            "payload", "norms", "pos", "bucket")
+
+    def merge_group(chunks: list[tuple], out: list[tuple]) -> None:
+        field, term, salt = chunks[0][:3]
+        bucket = chunks[0][9]
         # positions travel only with analyzed text postings (keyword
         # fields are IndexOptions.DOCS: no positions, StringField)
         has_pos = positions and field == "text"
         d_parts, t_parts, n_parts, p_parts = [], [], [], []
-        for r in pdf.itertuples(index=False):
-            d, t = decode_block(
-                dict(kind=r.kind, payload=r.payload, doc_count=r.doc_count,
-                     first_doc=r.first_doc)
-            )
+        for _, _, _, kind, first_doc, doc_count, payload, nb, pos, _ in chunks:
+            d, t = decode_block(dict(kind=kind, payload=payload,
+                                     doc_count=doc_count, first_doc=first_doc))
             d_parts.append(d)
             t_parts.append(t)
-            n_parts.append(np.frombuffer(r.norms, dtype=np.uint8))
+            n_parts.append(np.frombuffer(nb, dtype=np.uint8))
             if has_pos:
-                p_parts.extend(decode_positions(r.pos, t))
+                p_parts.extend(decode_positions(pos, t))
         docs = np.concatenate(d_parts)
         tfs = np.concatenate(t_parts)
         norms = np.concatenate(n_parts)
+        # chunks of one input partition are disjoint runs, but partitions
+        # may interleave in doc order: sort the merged list
         order = np.argsort(docs, kind="stable")
         docs, tfs, norms = docs[order], tfs[order], norms[order]
         if has_pos:
             p_parts = [p_parts[j] for j in order]
-        rows = []
-        blocks = encode_blocks(docs, tfs)
         ntab = NORM_TABLE[norms]
-        bucket = term_bucket(term, n_buckets)
-        for blk in blocks:
-            s, e = blk["block_id"] * 128, blk["block_id"] * 128 + blk["doc_count"]
-            rows.append(
+        for blk in encode_blocks(docs, tfs):
+            s = blk["block_id"] * BLOCK_SIZE
+            e = s + blk["doc_count"]
+            out.append(
                 (
-                    field,
-                    term,
-                    salt,
-                    blk["block_id"],
-                    blk["kind"],
-                    blk["first_doc"],
-                    blk["last_doc"],
-                    blk["doc_count"],
-                    int(tfs[s:e].sum()),
-                    blk["payload"],
-                    norms[s:e].tobytes(),
+                    field, term, salt, blk["block_id"], blk["kind"],
+                    blk["first_doc"], blk["last_doc"], blk["doc_count"],
+                    int(tfs[s:e].sum()), blk["payload"], norms[s:e].tobytes(),
                     encode_positions(p_parts[s:e]) if has_pos else None,
-                    blk["max_tf"],
-                    float(ntab[s:e].min()),
-                    bucket,
+                    blk["max_tf"], float(ntab[s:e].min()), bucket,
                 )
             )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "field", "term", "salt", "block_id", "kind", "first_doc",
-                "last_doc", "doc_count", "sum_tf", "payload",
-                "norms_payload", "pos_payload", "max_tf", "min_ntab",
-                "bucket",
-            ],
-        )
+
+    def merge(batches):
+        group: list[tuple] = []  # chunk rows of the open group
+        for pdf in batches:
+            out: list[tuple] = []
+            for row in zip(*(pdf[c].tolist() for c in cols)):
+                if group and row[:3] != group[0][:3]:
+                    merge_group(group, out)
+                    group = []
+                group.append(row)
+            if out:
+                yield pd.DataFrame(out, columns=POSTINGS_COLS)
+        if group:
+            out = []
+            merge_group(group, out)
+            yield pd.DataFrame(out, columns=POSTINGS_COLS)
 
     return merge
 
@@ -662,21 +669,24 @@ def _stage_postings(spark: SparkSession, index_dir: str, cfg: BuildConfig,
     if max_doc > cfg.salt_df_threshold:
         hot_salts = _hot_terms_from_sidecar(_hotstats_dir(index_dir, seg), cfg)
 
+    n_buckets = max(cfg.n_buckets, 1)
     docs = spark.read.parquet(
         os.path.join(index_dir, "docmap", f"seg={seg}")
     ).select("doc_id", "norm_byte", "text", *KEYWORD_FIELDS)
     chunks = docs.mapInPandas(
-        _partial_postings_factory(hot_salts, max_doc, cfg.positions,
-                                  cfg.analyzer_opts()),
+        _partial_postings_factory(hot_salts, max_doc, n_buckets,
+                                  cfg.positions, cfg.analyzer_opts()),
         CHUNK_SCHEMA,
     )
-    merge = _merge_group_factory(cfg.n_buckets, cfg.positions)
-    postings = chunks.groupBy("field", "term", "salt").applyInPandas(
-        merge, POSTINGS_SCHEMA
+    # the only shuffle: an explicit-count repartition, which adaptive
+    # execution does not coalesce, so the merge runs as n_buckets tasks
+    postings = (
+        chunks.repartition(n_buckets, "bucket")
+        .sortWithinPartitions("field", "term", "salt", "first_doc")
+        .mapInPandas(_merge_sorted_factory(cfg.positions), POSTINGS_SCHEMA)
     )
     (
-        postings.repartition(max(cfg.n_buckets, 1), "bucket")
-        .sortWithinPartitions("field", "term", "salt", "block_id")
+        postings.sortWithinPartitions("field", "term", "salt", "block_id")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(index_dir, "postings", f"seg={seg}"))
@@ -895,14 +905,7 @@ def _compact_group_factory(n_buckets: int, positions: bool, max_doc: int,
             if has_pos:
                 p_parts = [p for p, lv in zip(p_parts, live) if lv]
             if docs.size == 0:
-                return pd.DataFrame(
-                    columns=[
-                        "field", "term", "salt", "block_id", "kind",
-                        "first_doc", "last_doc", "doc_count", "sum_tf",
-                        "payload", "norms_payload", "pos_payload", "max_tf",
-                        "min_ntab", "bucket",
-                    ]
-                )
+                return pd.DataFrame(columns=POSTINGS_COLS)
         n_salt = (
             int(np.ceil(docs.size / salt_target))
             if docs.size > salt_df_threshold else 1
@@ -938,15 +941,7 @@ def _compact_group_factory(n_buckets: int, positions: bool, max_doc: int,
                     )
                 )
                 off = e
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "field", "term", "salt", "block_id", "kind", "first_doc",
-                "last_doc", "doc_count", "sum_tf", "payload",
-                "norms_payload", "pos_payload", "max_tf", "min_ntab",
-                "bucket",
-            ],
-        )
+        return pd.DataFrame(rows, columns=POSTINGS_COLS)
 
     return merge
 

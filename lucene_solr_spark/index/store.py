@@ -74,10 +74,7 @@ def commit_stage(index_dir: str, stage: str, info: dict | None = None) -> dict:
         m = read_manifest(index_dir)
         m["version"] += 1
         m["committed"][stage] = {"at": time.time(), **(info or {})}
-        tmp = manifest_path(index_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, sort_keys=True)
-        os.replace(tmp, manifest_path(index_dir))
+        write_manifest(index_dir, m)
         return m
 
 
@@ -94,28 +91,24 @@ def record_batch(index_dir: str, batch_id: int) -> None:
         m["applied_batches"] = sorted(
             set(m.get("applied_batches", [])) | {int(batch_id)}
         )
-        tmp = manifest_path(index_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, sort_keys=True)
-        os.replace(tmp, manifest_path(index_dir))
+        write_manifest(index_dir, m)
+
+
+def record_bootstrap(index_dir: str, batch_id: int) -> None:
+    """Record which streaming batch bootstraps the index, BEFORE its
+    build starts: only a replay of that batch may resume the build
+    (streaming/nrt.py)."""
+    with _MANIFEST_LOCK:
+        m = read_manifest(index_dir)
+        m["bootstrap_batch"] = int(batch_id)
+        write_manifest(index_dir, m)
 
 
 def set_params(index_dir: str, params: dict) -> None:
     m = read_manifest(index_dir)
     m["params"].update(params)
-    tmp = manifest_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=1, sort_keys=True)
-    os.replace(tmp, manifest_path(index_dir))
+    write_manifest(index_dir, m)
 
 
 def get_params(index_dir: str) -> dict:
     return read_manifest(index_dir)["params"]
-
-
-def dir_bytes(path: str) -> int:
-    total = 0
-    for root, _, files in os.walk(path):
-        for fn in files:
-            total += os.path.getsize(os.path.join(root, fn))
-    return total

@@ -1,12 +1,12 @@
 """Deduplication operators for training-data pipelines.
 
-Exact dedup, MinHash+LSH near-dup, SimHash, and n-gram Jaccard — all as
+MinHash+LSH near-dup, SimHash, and n-gram Jaccard — all as
 pure built-in-function DataFrame plans (no Python UDFs: every hash is
 md5 over strings so whole-stage codegen applies and a DuckDB oracle can
 reproduce results bit-for-bit).
 
 Scale notes (100 TB): every operator here is a narrow map plus one
-hash-partitioned shuffle (groupBy text-hash / band / shingle); the LSH
+hash-partitioned shuffle (groupBy band / shingle); the LSH
 band join replaces the O(n^2) all-pairs comparison with
 O(sum of bucket^2) on near-duplicate buckets only — the standard
 MinHash banding argument.  Hot buckets (boilerplate text) are bounded by
@@ -23,14 +23,6 @@ from pyspark.sql import DataFrame
 MINHASH_K = 8
 LSH_BANDS = 4
 LSH_ROWS = 2
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                key_col: str = "doc_id") -> DataFrame:
-    """Exact duplicate groups by content hash: (text_hash, cnt, keep)."""
-    return docs.groupBy(F.md5(F.col(text_col)).alias("text_hash")).agg(
-        F.count("*").alias("cnt"), F.min(key_col).alias("keep_doc_id")
-    )
 
 
 def _tokens(text_col: str):

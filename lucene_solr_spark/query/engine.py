@@ -96,9 +96,6 @@ class _TermPostings:
             pos.extend(decode_positions(b["pos_payload"], self.decode(i)[1]))
         return docs, tfs, norms, pos
 
-    def decode_positions_all(self):
-        return self.decode_positions_blocks(list(range(len(self.blocks))))
-
     def decode_blocks(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         if len(idxs) == 0:
             return (

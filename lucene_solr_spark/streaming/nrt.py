@@ -16,13 +16,16 @@ idempotent per batch_id to give effectively-once segment appends.  The
 manifest records every applied batch_id in the SAME atomic write that
 publishes the segment (`applied_batches`); a replayed batch — crash
 after the append but before the Spark checkpoint commit — is detected
-and skipped.  The bootstrap-vs-append decision is likewise gated on
-that record (not on stage-commit state), so a replay over a PARTIALLY
-committed bootstrap resumes the same batch's build instead of treating
-the next batch as the bootstrap.
+and skipped.  The bootstrap batch_id is recorded (`bootstrap_batch`)
+before the bootstrap build starts, and only a batch with that id takes
+the bootstrap branch: a replay over a PARTIALLY committed bootstrap
+resumes the same batch's build, while any other batch — including the
+first batch fed to an index made by `build_index` — appends a segment.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,32 +39,43 @@ def index_batch(spark: SparkSession, batch_df: DataFrame, index_dir: str,
     """Index one micro-batch idempotently.
 
     - batch_id already recorded in the manifest -> no-op (replay).
-    - no batch ever recorded -> this is the bootstrap batch: (re)run the
-      staged build (resume=True picks up a partially committed prior
-      attempt of the SAME batch — stages are deterministic functions of
-      the batch).
+    - nothing built or started yet, or batch_id is the recorded bootstrap
+      batch -> (re)run the staged build (resume=True picks up a partially
+      committed prior attempt of the SAME batch — stages are
+      deterministic functions of the batch).
     - otherwise -> append one new segment, recording batch_id atomically
       with the segment publish.
 
-    Empty batches are skipped without recording (nothing to replay).
+    Without a batch_id, a batch bootstraps until a build has completed
+    and appends afterwards.  Empty batches are skipped without recording
+    (nothing to replay).
     """
     if not batch_df.take(1):
         return
     m = store.read_manifest(index_dir)
     applied = m.get("applied_batches", [])
-    if batch_id is not None and int(batch_id) in applied:
+    if batch_id is None:
+        bootstrap = not applied and "lineage" not in m["committed"]
+    elif int(batch_id) in applied:
         return  # replayed batch: the segment is already published
-    if applied or (batch_id is None
-                   and store.stage_committed(index_dir, "lineage")):
-        append_segment(spark, batch_df, index_dir, cfg, batch_id=batch_id)
     else:
-        # bootstrap — or a REPLAY of the bootstrap batch whose record
-        # didn't land: resume=True re-runs only uncommitted stages (a
-        # fully built index makes this a no-op), so the replay can never
-        # append the bootstrap's rows as a duplicate segment
-        build_index(spark, batch_df, index_dir, cfg)
-        if batch_id is not None:
-            store.record_batch(index_dir, int(batch_id))
+        boot = m.get("bootstrap_batch")
+        bootstrap = boot == int(batch_id) or (
+            boot is None and not m["committed"]
+        )
+    if not bootstrap:
+        append_segment(spark, batch_df, index_dir, cfg, batch_id=batch_id)
+        return
+    # bootstrap — or a REPLAY of the bootstrap batch whose record didn't
+    # land: resume=True re-runs only uncommitted stages (a fully built
+    # index makes this a no-op), so the replay can never append the
+    # bootstrap's rows as a duplicate segment
+    if batch_id is not None:
+        os.makedirs(index_dir, exist_ok=True)
+        store.record_bootstrap(index_dir, int(batch_id))
+    build_index(spark, batch_df, index_dir, cfg)
+    if batch_id is not None:
+        store.record_batch(index_dir, int(batch_id))
 
 
 def start_incremental_indexing(spark: SparkSession, stream_df: DataFrame,

@@ -184,6 +184,57 @@ def test_index_batch_idempotent_per_batch_id(spark, tmp_path):
     assert read_field_stats(idx) == fs_before
 
 
+def test_index_batch_after_build_index_appends(spark, tmp_path):
+    """A batch fed to an index made by build_index (no bootstrap batch
+    recorded) is appended, whatever its batch_id — it must not be taken
+    for a replay of the bootstrap and dropped."""
+    from lucene_solr_spark.streaming.nrt import index_batch
+
+    idx = str(tmp_path / "built")
+    b0 = gen_transcripts_df(spark, n_convs=6, seed=21)
+    b1 = gen_transcripts_df(spark, n_convs=4, seed=22)
+    cfg = BuildConfig(n_buckets=2)
+    build_index(spark, b0, idx, cfg)
+    n0, n1 = b0.count(), b1.count()
+    index_batch(spark, b1, idx, cfg, batch_id=1)
+    assert read_field_stats(idx)["max_doc"] == n0 + n1
+    index_batch(spark, b1, idx, cfg, batch_id=1)  # replay: no-op
+    assert read_field_stats(idx)["max_doc"] == n0 + n1
+
+
+def test_index_batch_resumes_interrupted_bootstrap(spark, tmp_path,
+                                                   monkeypatch):
+    """A bootstrap batch that fails after its docmap commit is resumed
+    by its replay — one segment, no duplicate rows — and the next batch
+    appends."""
+    from lucene_solr_spark.index import builder as B
+    from lucene_solr_spark.index import store
+    from lucene_solr_spark.streaming.nrt import index_batch
+
+    idx = str(tmp_path / "boot")
+    b0 = gen_transcripts_df(spark, n_convs=6, seed=21)
+    b1 = gen_transcripts_df(spark, n_convs=4, seed=22)
+    cfg = BuildConfig(n_buckets=2)
+
+    def boom(*a, **kw):
+        raise RuntimeError("simulated failure mid-bootstrap")
+
+    orig = B._stage_postings
+    monkeypatch.setattr(B, "_stage_postings", boom)
+    with pytest.raises(RuntimeError):
+        index_batch(spark, b0, idx, cfg, batch_id=0)
+    assert store.stage_committed(idx, "docmap")
+    assert store.read_manifest(idx).get("applied_batches", []) == []
+    monkeypatch.setattr(B, "_stage_postings", orig)
+    index_batch(spark, b0, idx, cfg, batch_id=0)  # replay resumes
+    n0 = b0.count()
+    assert read_field_stats(idx)["max_doc"] == n0
+    assert sorted(os.listdir(os.path.join(idx, "postings"))) == ["seg=0"]
+    assert store.read_manifest(idx)["applied_batches"] == [0]
+    index_batch(spark, b1, idx, cfg, batch_id=1)
+    assert read_field_stats(idx)["max_doc"] == n0 + b1.count()
+
+
 def test_streaming_windowed_counts(spark, tmp_path):
     """Watermarked tumbling-window counts: with no late data the
     streamed result equals the batch groupBy twin."""
