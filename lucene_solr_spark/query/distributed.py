@@ -5,36 +5,45 @@ This is the cluster path (Solr's distributed GET_TOP_IDS phase, SURVEY.md
 global top-k is a TakeOrderedAndProject merge — never a full sort
 (TopDocs.merge semantics, search/TopDocs.java:90-114).
 
-Plan shape per query:
-- scan postings parquet with bucket partition pruning + term predicate
-  pushdown (block payloads are only materialized for surviving rows),
-- decode + score blocks in one Arrow-batched mapInPandas (float32 per-term
-  scores, broadcast {term: doc_freq} + global stats),
-- boolean tree:   AND -> inner join on doc_id (clause-order double sum);
-                  OR  -> union + groupBy(doc_id) with clause-index-sorted
-                         aggregation so the double-sum order is
-                         deterministic and equals the oracle's,
-- top-k: orderBy(score desc, doc_id asc).limit(k)  [per-partition heaps +
-  driver merge under AQE — the TopScoreDocCollector/TopDocs.merge shape].
+Every query has the same plan shape:
+- leaves, each tagged with a clause index `cidx`: every text-term leaf
+  comes from ONE bucket-pruned, term-pushed postings scan and ONE
+  Arrow-batched decode + score mapInPandas (float32 per-term scores,
+  term stats read on the driver and captured in the kernel closure);
+  phrase, span, keyword-field, ts-range and synonym leaves keep their
+  own subplans; all emit rows (doc_id, cidx, score) into one union,
+- ONE groupBy(doc_id) collecting the per-doc map m: cidx -> score,
+- the boolean tree, compiled once on the driver into ONE Spark SQL
+  expression over m (null = no match): AND / OR / minShouldMatch /
+  dismax as one clause-order fold over the children, andnot / filter /
+  reqopt / boost as null-aware arithmetic — the score type cast at every
+  node and double sums in clause order, so scores equal the oracle's,
+- the deletes anti-join, then top-k: orderBy(score desc, doc_id
+  asc).limit(k)  [per-partition heaps + driver merge under AQE — the
+  TopScoreDocCollector/TopDocs.merge shape].
 
 Scores are float32 end-to-end and rank-identical to the LocalSearcher and
 the numpy oracle (dtype="float32", the serving default).  dtype="float64"
 is the GATE mode: per-term scores computed in double precision from the
 exact decoded tf and the exact doc length (docmap `dl`, not the quantized
 norm byte) so an ANSI-SQL engine (DuckDB) reproduces them bit-stably —
-the same plan shapes, a DuckDB-checkable scoring surface.
+the same compiled expression, a DuckDB-checkable scoring surface.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import itertools
 import json
 import math
 import os
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..index.builder import term_bucket
 from ..index.codec import decode_block
@@ -90,13 +99,41 @@ class DistributedSearcher:
         fs = read_field_stats(index_dir)
         self.doc_count = int(fs["doc_count"] or 0)
         self.sum_ttf = int(fs["sum_total_term_freq"] or 0)
-        self._postings_path = os.path.join(index_dir, "postings")
-        self._term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        # point-in-time relations, read once like the field stats above
+        self._postings = spark.read.parquet(
+            os.path.join(index_dir, "postings")
+        )
+        self._docmap = spark.read.parquet(os.path.join(index_dir, "docmap"))
+        ts_path = os.path.join(index_dir, "term_stats")
+        self._term_stats = spark.read.parquet(ts_path)
+        self._terms_ds = pads.dataset(ts_path, format="parquet")
 
     # ------------------------------------------------------------ plan
     @property
     def _text_stats(self) -> DataFrame:
+        """The text-field term dictionary as a DataFrame — multi-term
+        rewrites scan it; per-query stats come from `_stats`."""
         return self._term_stats.filter(F.col("field") == "text")
+
+    def _stats(self, terms, field: str = "text") -> dict:
+        """{term: (doc_freq, total_term_freq)} for the given terms of one
+        field, read on the driver — a pyarrow scan of term_stats with
+        the (field, term) predicate pushed down (the table is (field,
+        term)-sorted, so row-group statistics prune it), bounded by the
+        query's own terms; no Spark job."""
+        terms = sorted(set(terms))
+        if not terms:
+            return {}
+        tbl = self._terms_ds.to_table(
+            columns=["term", "doc_freq", "total_term_freq"],
+            filter=(pads.field("field") == field)
+            & pads.field("term").isin(terms),
+        )
+        return {
+            t: (int(d), int(f)) for t, d, f in zip(
+                *(tbl.column(c).to_pylist() for c in tbl.column_names)
+            )
+        }
 
     #: broadcast the tombstone set only while its on-disk footprint is
     #: small; a BroadcastExchange still collects the build side into the
@@ -118,8 +155,6 @@ class DistributedSearcher:
         back to a plain shuffle left_anti, which scales to billions of
         tombstones.  Scores/stats stay unchanged until compaction,
         exactly the reference's pre-merge delete semantics."""
-        import glob
-
         dels = glob.glob(
             os.path.join(self.index_dir, "deletes", "del-*.parquet")
         )
@@ -135,17 +170,14 @@ class DistributedSearcher:
                          field: str = "text") -> DataFrame:
         """Posting-block scan for the given terms of one field: bucket
         partition pruning + field/term predicate pushdown, column-pruned
-        to `cols`."""
+        to `cols`.  The predicate is SQL text: one JVM call however
+        many terms a multi-term expansion brings."""
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        return (
-            self.spark.read.parquet(self._postings_path)
-            .filter(
-                F.col("bucket").isin(buckets)
-                & (F.col("field") == field)
-                & F.col("term").isin(terms)
-            )
-            .select(*cols)
-        )
+        return self._postings.where(
+            f"bucket IN ({', '.join(map(str, buckets))}) "
+            f"AND field = {_sql_str(field)} "
+            f"AND term IN ({', '.join(map(_sql_str, terms))})"
+        ).select(*cols)
 
     def _decoded_tf_df(self, terms: list[str]) -> DataFrame:
         """DF(term, doc_id, tf int) decoded from posting blocks."""
@@ -203,27 +235,17 @@ class DistributedSearcher:
             dec, "term string, doc_id long, tf int, norm int"
         )
 
-    def _synonym_plan(self, terms: list[str],
-                      clause_idx: list[int]) -> DataFrame:
+    def _synonym_plan(self, terms: list[str], i: int) -> DataFrame | None:
         """SynonymQuery plan (search/SynonymQuery.java): one pruned
         decode of the synonym terms, groupBy(doc_id) summing freqs
         (SynonymScorer — same doc => same norm byte, F.first is safe),
         then ONE pseudo-term scoring pass with docFreq = max over
         terms, totalTermFreq = sum (:134-147), through the shared
-        freq->score kernel in both modes."""
-        i = clause_idx[0]
-        clause_idx[0] += 1
+        freq->score kernel in both modes.  None when no term exists."""
         terms = sorted(set(terms))
-        stats = {
-            r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
-            for r in self._text_stats.filter(
-                F.col("term").isin(terms)
-            ).collect()
-        }
+        stats = self._stats(terms)
         if not stats:
-            return self.spark.createDataFrame(
-                [], f"doc_id long, score {self._st}, cidx int"
-            )
+            return None
         df_max = max(s[0] for s in stats.values())
         ttf_sum = sum(s[1] for s in stats.values())
         agg = (
@@ -232,10 +254,7 @@ class DistributedSearcher:
             .agg(F.sum("tf").alias("tf"), F.first("norm").alias("norm"))
         )
         if self.dtype == "float64":
-            dl = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "dl")
-            agg = agg.join(dl, "doc_id")
+            agg = agg.join(self._docmap.select("doc_id", "dl"), "doc_id")
         dc, k1d, bd, avgdl_d = self.doc_count, self.k1, self.b, self._avgdl
         sttf = self.sum_ttf
         dtype, st, sim = self.dtype, self._st, self.similarity
@@ -270,19 +289,33 @@ class DistributedSearcher:
             if self.sum_ttf > 0 and self.doc_count > 0 else 1.0
         )
 
-    def _scored_terms_df_double(self, terms: list[str]) -> DataFrame:
-        """Gate-mode per-term scores: double-precision scoring from
-        exact tf/df/dl (docmap doc length, not the quantized norm byte)
-        — bit-stable against an ANSI-SQL twin; formula per
-        self.similarity."""
-        tp = self._decoded_tf_df(terms)
-        ts = (
-            self._text_stats.filter(F.col("term").isin(terms))
-            .select("term", "doc_freq", "total_term_freq")
+    def _scored_terms_df_double(self, cidx_of: dict) -> DataFrame:
+        """Gate-mode term leaves: DF(doc_id, cidx, score double) scored
+        in double precision from exact tf/df/dl (docmap doc length, not
+        the quantized norm byte) — bit-stable against an ANSI-SQL twin;
+        formula per self.similarity.  The per-term stats and clause
+        indexes enter the plan as literal map columns."""
+        terms = sorted(cidx_of)
+        stats = self._stats(terms)
+
+        def by_term(value) -> Column:
+            """Literal map {t: value(t)} looked up at the row's term."""
+            return F.create_map(*[
+                c for t in terms for c in (F.lit(t), value(t))
+            ])[F.col("term")]
+
+        def stat(j: int) -> Column:
+            return by_term(
+                lambda t: F.lit(stats.get(t, (0, 0))[j]).cast("long")
+            )
+
+        tp = self._decoded_tf_df(terms).select(
+            "doc_id", "tf",
+            stat(0).alias("doc_freq"), stat(1).alias("total_term_freq"),
+            F.explode(by_term(
+                lambda t: F.array(*map(F.lit, cidx_of[t]))
+            )).alias("cidx"),
         )
-        dl = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "dl")
         dc, avgdl, k1, b = self.doc_count, self._avgdl, self.k1, self.b
         if self.similarity == "lmd":
             # all-double lmd with exact dl and pc = (ttf+1)/(sttf+1):
@@ -336,22 +369,19 @@ class DistributedSearcher:
                 )
             )
         return (
-            tp.join(F.broadcast(ts), "term")
-            .join(dl, "doc_id")
-            .withColumn("score", score)
-            .select("term", "doc_id", "score")
+            tp.join(self._docmap.select("doc_id", "dl"), "doc_id")
+            .select("doc_id", "cidx", score.alias("score"))
         )
 
-    def _scored_terms_df(self, terms: list[str]) -> DataFrame:
-        """DF(term, doc_id, score) for all query terms in ONE
-        partition-pruned scan + decode pass (score dtype per mode)."""
-        terms = sorted(set(terms))
+    def _scored_terms_df(self, cidx_of: dict) -> DataFrame:
+        """DF(doc_id, cidx, score) for every text-term leaf in ONE
+        partition-pruned scan + decode pass (score dtype per mode):
+        `cidx_of` maps each term to the clause indexes of its leaves,
+        and a term's scored postings are emitted once per index."""
         if self.dtype == "float64":
-            return self._scored_terms_df_double(terms)
-        dfs = {
-            r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
-            for r in self._text_stats.filter(F.col("term").isin(terms)).collect()
-        }
+            return self._scored_terms_df_double(cidx_of)
+        terms = sorted(cidx_of)
+        dfs = self._stats(terms)
         post = self._pruned_postings(
             terms, ["term", "salt", "block_id", "kind", "first_doc",
                     "doc_count", "payload", "norms_payload"],
@@ -367,7 +397,6 @@ class DistributedSearcher:
         cache = (k1 * ((np.float32(1.0) - b) + b * NORM_TABLE / avgdl)).astype(
             np.float32
         )
-        bc_dfs = self.spark.sparkContext.broadcast(dfs)
         classic = self.similarity == "classic"
         lmd = self.similarity == "lmd"
         lmjm = self.similarity == "lmjm"
@@ -404,7 +433,7 @@ class DistributedSearcher:
                     norms = np.frombuffer(row.norms_payload, dtype=np.uint8)
                     wv = wv_cache.get(row.term)
                     if wv is None:
-                        df_t, ttf_t = bc_dfs.value.get(row.term, (0, 0))
+                        df_t, ttf_t = dfs.get(row.term, (0, 0))
                         if simbase:
                             # SimilarityBase weight IS the stats pair
                             wv = (df_t, ttf_t)
@@ -461,35 +490,27 @@ class DistributedSearcher:
                         sc = (wv * freq / (freq + cache[norms])).astype(
                             np.float32
                         )
-                    outs.append(
+                    outs.extend(
                         pd.DataFrame(
-                            {"term": row.term, "doc_id": docs, "score": sc}
+                            {"doc_id": docs, "cidx": np.int32(i), "score": sc}
                         )
+                        for i in cidx_of[row.term]
                     )
                 if outs:
                     yield pd.concat(outs, ignore_index=True)
 
         return post.mapInPandas(
-            score_blocks, "term string, doc_id long, score float"
+            score_blocks, "doc_id long, cidx int, score float"
         )
 
-    def _fterm_plan(self, field: str, value: str,
-                    clause_idx: list[int]) -> DataFrame:
+    def _fterm_plan(self, field: str, value: str, i: int) -> DataFrame:
         """Keyword-field TermQuery plan: decode the (field, value)
         posting list (bucket-pruned scan) and attach the constant
         omitNorms BM25 score (tf is always 1 for StringField values, so
         the score idf*(k1+1)*1/(1+k1) is a per-query literal computed
         with the engine's float discipline)."""
-        i = clause_idx[0]
-        clause_idx[0] += 1
         docs = self._decoded_tf_df_for_field(field, value)
-        row = (
-            self._term_stats.filter(
-                (F.col("field") == field) & (F.col("term") == value)
-            ).select("doc_freq", "total_term_freq").collect()
-        )
-        df_t = int(row[0]["doc_freq"]) if row else 0
-        ttf_t = int(row[0]["total_term_freq"]) if row else 0
+        df_t, ttf_t = self._stats([value], field).get(value, (0, 0))
         from ..index.builder import read_field_stats
 
         fs_f = read_field_stats(self.index_dir, field)
@@ -698,8 +719,7 @@ class DistributedSearcher:
         )
         return None, None, idf_sum_d, None
 
-    def _phrase_plan(self, clauses, slop: int,
-                     clause_idx: list[int]) -> DataFrame:
+    def _phrase_plan(self, clauses, slop: int, i: int) -> DataFrame:
         """Distributed Exact/SloppyPhraseScorer (VERDICT r1 item 2 — the
         proven DF plan folded in from the gate): decode positions for the
         phrase terms in one pruned scan, inner-join clauses on doc_id (so
@@ -709,8 +729,6 @@ class DistributedSearcher:
         the summed clause idfs — float32 in serving mode, double + exact
         dl in gate mode (semantics per search/ExactPhraseScorer.java and
         SloppyPhraseScorer.java)."""
-        i = clause_idx[0]
-        clause_idx[0] += 1
         terms = [t for t, _ in clauses]
         pos_df = self._phrase_positions_df(sorted(set(terms)))
         joined = None
@@ -720,16 +738,10 @@ class DistributedSearcher:
                 sel.append("norm")
             cdf = pos_df.filter(F.col("term") == t).select(*sel)
             joined = cdf if joined is None else joined.join(cdf, "doc_id")
-        dfs = {
-            r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
-            for r in self._text_stats.filter(F.col("term").isin(terms))
-            .collect()
-        }
+        dfs = self._stats(terms)
         if self.dtype == "float64":
-            dl_df = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "dl")
-            joined = joined.join(dl_df, "doc_id")
+            joined = joined.join(self._docmap.select("doc_id", "dl"),
+                                 "doc_id")
         rels = [rel for _, rel in clauses]
         n_cl = len(clauses)
         dc, k1d, bd, avgdl_d = self.doc_count, self.k1, self.b, self._avgdl
@@ -851,7 +863,7 @@ class DistributedSearcher:
             )
         raise ValueError(kind)
 
-    def _span_plan(self, node, clause_idx: list[int]) -> DataFrame:
+    def _span_plan(self, node, i: int) -> DataFrame:
         """Distributed span execution (SpanWeight.java /
         NearSpansOrdered.java:88-118 / SpanScorer.java:90-110 — VERDICT
         r2 item 1): ONE pruned position scan for every span term, a
@@ -863,8 +875,6 @@ class DistributedSearcher:
         over only the candidate docs — no driver-side evaluation."""
         from .spans import span_terms
 
-        i = clause_idx[0]
-        clause_idx[0] += 1
         all_terms = sorted(set(span_terms(node)))
         pos_df = self._phrase_positions_df(all_terms)
         cand = self._span_cand_df(node, self._decoded_tf_df(all_terms))
@@ -877,18 +887,11 @@ class DistributedSearcher:
             )
         )
         if self.dtype == "float64":
-            dl_df = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "dl")
-            agg = agg.join(dl_df, "doc_id")
+            agg = agg.join(self._docmap.select("doc_id", "dl"), "doc_id")
         # scoring weight: summed idf of the DEDUPLICATED scoring terms
         # (SpanWeight.buildSimWeight term map)
         sterms = sorted(set(span_terms(node, scoring=True, top=True)))
-        dfs = {
-            r["term"]: (int(r["doc_freq"]), int(r["total_term_freq"]))
-            for r in self._text_stats.filter(F.col("term").isin(sterms))
-            .collect()
-        }
+        dfs = self._stats(sterms)
         dc, k1d, bd, avgdl_d = self.doc_count, self.k1, self.b, self._avgdl
         sttf = self.sum_ttf
         dtype, st = self.dtype, self._st
@@ -940,203 +943,117 @@ class DistributedSearcher:
             score_spans, f"doc_id long, score {st}, cidx int"
         )
 
-    def _plan(self, node, scored: DataFrame, clause_idx: list[int]) -> DataFrame:
-        """Recursively build DF(doc_id, score, cidx) for a query node
-        (score typed per self.dtype)."""
+    def _tsrange_plan(self, node, i: int) -> DataFrame:
+        """PointRangeQuery analogue: the ts predicate pushes into the
+        docmap parquet scan (constant score 1.0 as a scoring clause)."""
+        _, lo, hi, il, ih = node
+        ts = F.col("ts")
+        cond = ts.isNotNull()
+        if lo is not None:
+            lov = F.lit(lo).cast("timestamp")
+            cond = cond & (ts >= lov if il else ts > lov)
+        if hi is not None:
+            hiv = F.lit(hi).cast("timestamp")
+            cond = cond & (ts <= hiv if ih else ts < hiv)
+        return self._docmap.filter(cond).select(
+            "doc_id", F.lit(i).alias("cidx"),
+            F.lit(1.0).cast(self._st).alias("score"),
+        )
+
+    def _plan(self, node) -> DataFrame | None:
+        """DF(doc_id, score) of every doc the rewritten query matches
+        (score typed per self.dtype), in the one plan shape of the
+        module docstring: leaves scored once into (doc_id, cidx, score)
+        rows, ONE groupBy(doc_id) into the per-doc map m: cidx -> score,
+        and the boolean tree compiled into ONE Spark SQL expression over
+        m (built as text: one JVM call, not one per Column operation).
+        None when the query has no leaf that can match."""
+        st = self._st
+        if node is None or node[0] == "matchnone":
+            return None
         from .spans import SPAN_KINDS
 
-        st = self._st
-        kind = node[0]
-        if kind in SPAN_KINDS:
-            return self._span_plan(node, clause_idx)
-        if kind == "term":
-            i = clause_idx[0]
-            clause_idx[0] += 1
-            return (
-                scored.filter(F.col("term") == node[1])
-                .select("doc_id", "score")
-                .withColumn("cidx", F.lit(i))
-            )
-        if kind == "matchnone":
-            i = clause_idx[0]
-            clause_idx[0] += 1
-            return self.spark.createDataFrame(
-                [], f"doc_id long, score {st}, cidx int"
-            )
-        if kind == "synonym":
-            return self._synonym_plan(list(node[1]), clause_idx)
-        if kind == "const_or":
-            # constant-score union (MultiTermQueryConstantScoreWrapper)
-            i = clause_idx[0]
-            clause_idx[0] += 1
-            return (
-                scored.filter(F.col("term").isin(list(node[1])))
-                .select("doc_id")
-                .distinct()
-                .select(
-                    "doc_id",
-                    F.lit(1.0).cast(st).alias("score"),
-                    F.lit(i).alias("cidx"),
-                )
-            )
-        if kind == "boost":
-            ch = self._plan(node[1], scored, clause_idx)
-            return ch.withColumn(
-                "score",
-                (F.col("score") * F.lit(float(node[2]))).cast(st),
-            )
-        if kind == "andnot":
-            pos = self._plan(node[1], scored, clause_idx)
-            neg = self._plan(node[2], scored, clause_idx)
-            return pos.join(neg.select("doc_id"), "doc_id", "left_anti")
-        if kind == "reqopt":
-            req = self._plan(node[1], scored, clause_idx)
-            opt = self._plan(node[2], scored, clause_idx)
-            j = req.join(
-                opt.select("doc_id", F.col("score").alias("opt_s")),
-                "doc_id",
-                "left_outer",
-            )
-            return j.select(
-                "doc_id",
-                (
-                    F.col("score").cast("double")
-                    + F.coalesce(F.col("opt_s").cast("double"), F.lit(0.0))
-                ).cast(st).alias("score"),
-                "cidx",
-            )
-        if kind == "fterm":
-            return self._fterm_plan(node[1], node[2], clause_idx)
-        if kind == "tsrange":
-            # PointRangeQuery analogue: the ts predicate pushes into the
-            # docmap parquet scan (constant score 1.0 as a scoring clause)
-            i = clause_idx[0]
-            clause_idx[0] += 1
-            _, lo, hi, il, ih = node
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", "ts")
-            cond = F.col("ts").isNotNull()
-            if lo is not None:
-                lov = F.lit(lo).cast("timestamp")
-                cond = cond & (F.col("ts") >= lov if il else F.col("ts") > lov)
-            if hi is not None:
-                hiv = F.lit(hi).cast("timestamp")
-                cond = cond & (F.col("ts") <= hiv if ih else F.col("ts") < hiv)
-            return dm.filter(cond).select(
-                "doc_id",
-                F.lit(1.0).cast(st).alias("score"),
-                F.lit(i).alias("cidx"),
-            )
-        if kind == "reqfilter":
-            pos = self._plan(node[1], scored, clause_idx)
-            filt = self._plan(node[2], scored, clause_idx)
-            return pos.join(
-                filt.select("doc_id"), "doc_id", "left_semi"
-            )
-        if kind == "filter0":
-            filt = self._plan(node[1], scored, clause_idx)
-            return filt.select(
-                "doc_id",
-                F.lit(0.0).cast(st).alias("score"),
-                "cidx",
-            )
-        if kind == "phrase":
-            return self._phrase_plan(
-                node[1], node[2] if len(node) > 2 else 0, clause_idx
-            )
-        if kind == "msm_or":
-            # MinShouldMatchSumScorer: keep docs matching >= n SHOULD
-            # clauses, clause-order double sum of the matching scores
-            n = node[1]
-            children = [self._plan(c, scored, clause_idx) for c in node[2]]
-            u = children[0]
-            for ch in children[1:]:
-                u = u.unionByName(ch)
-            agg = u.groupBy("doc_id").agg(
-                F.aggregate(
-                    F.sort_array(
-                        F.collect_list(F.struct("cidx", F.col("score")))
-                    ),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x["score"].cast("double"),
-                ).alias("s"),
-                F.count("*").alias("nm"),
-                F.min("cidx").alias("cidx"),
-            ).filter(F.col("nm") >= n)
-            return agg.select(
-                "doc_id", F.col("s").cast(st).alias("score"), "cidx"
-            )
-        if kind == "dismax":
-            return self._dismax_plan(node, scored, clause_idx)
-        children = [self._plan(c, scored, clause_idx) for c in node[1]]
-        if kind == "and":
-            acc = children[0].select(
-                "doc_id", F.col("score").cast("double").alias("s"), "cidx"
-            )
-            for ch in children[1:]:
-                acc = acc.join(
-                    ch.select("doc_id", F.col("score").cast("double").alias("s2")),
-                    "doc_id",
-                ).select(
-                    "doc_id", (F.col("s") + F.col("s2")).alias("s"), "cidx"
-                )
-            return acc.select(
-                "doc_id", F.col("s").cast(st).alias("score"), "cidx"
-            )
-        if kind == "or":
-            u = children[0]
-            for ch in children[1:]:
-                u = u.unionByName(ch)
-            # deterministic clause-order double sum (matches
-            # DisjunctionSumScorer accumulation in clause order)
-            agg = u.groupBy("doc_id").agg(
-                F.aggregate(
-                    F.sort_array(
-                        F.collect_list(F.struct("cidx", F.col("score")))
-                    ),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x["score"].cast("double"),
-                ).alias("s"),
-                F.min("cidx").alias("cidx"),
-            )
-            return agg.select(
-                "doc_id", F.col("s").cast(st).alias("score"), "cidx"
-            )
-        raise ValueError(kind)
+        absent = f"CAST(NULL AS {st})"
+        cidx = itertools.count()
+        cidx_of: dict[str, list[int]] = {}  # text-term leaves
+        subplans: list[DataFrame] = []  # every other leaf
 
-    def _dismax_plan(self, node, scored: DataFrame,
-                     clause_idx: list[int]) -> DataFrame:
-        """DisjunctionMaxScorer as ONE hash aggregate
-        (DisjunctionMaxQuery.java:47-63, DisjunctionMaxScorer.java:
-        49-61): union the disjunct plans (each already a pruned scan /
-        subplan), then per doc score = max + tie * (sum - max) with
-        the or-node's deterministic clause-order double sum and a
-        double max — the same single-shuffle shape as a plain OR, so
-        the tie-break scoring adds no extra exchange at any scale."""
-        st = self._st
-        tie = float(node[2])
-        children = [self._plan(c, scored, clause_idx) for c in node[1]]
-        u = children[0]
-        for ch in children[1:]:
-            u = u.unionByName(ch)
-        agg = u.groupBy("doc_id").agg(
-            F.aggregate(
-                F.sort_array(
-                    F.collect_list(F.struct("cidx", F.col("score")))
-                ),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x["score"].cast("double"),
-            ).alias("s"),
-            F.max(F.col("score").cast("double")).alias("mx"),
-            F.min("cidx").alias("cidx"),
-        )
-        return agg.select(
-            "doc_id",
-            (F.col("mx")
-             + (F.col("s") - F.col("mx")) * F.lit(tie))
-            .cast(st).alias("score"),
-            "cidx",
+        def term(t: str) -> int:
+            i = next(cidx)
+            cidx_of.setdefault(t, []).append(i)
+            return i
+
+        def subplan(make) -> str:
+            i = next(cidx)
+            df = make(i)
+            if df is None:
+                return absent
+            subplans.append(df)
+            return f"m[{i}]"
+
+        def comp(n) -> str:
+            kind = n[0]
+            if kind == "term":
+                return f"m[{term(n[1])}]"
+            if kind == "const_or":
+                # constant-score union (MultiTermQueryConstantScoreWrapper);
+                # one index per expanded term keeps map keys unique
+                ids = [term(t) for t in n[1]]
+                return (f"CASE WHEN exists(map_keys(m), c -> c BETWEEN "
+                        f"{ids[0]} AND {ids[-1]}) THEN CAST(1 AS {st}) END")
+            if kind == "matchnone":
+                return absent
+            if kind in SPAN_KINDS:
+                return subplan(lambda i: self._span_plan(n, i))
+            if kind == "phrase":
+                return subplan(lambda i: self._phrase_plan(
+                    n[1], n[2] if len(n) > 2 else 0, i))
+            if kind == "synonym":
+                return subplan(lambda i: self._synonym_plan(list(n[1]), i))
+            if kind == "fterm":
+                return subplan(lambda i: self._fterm_plan(n[1], n[2], i))
+            if kind == "tsrange":
+                return subplan(lambda i: self._tsrange_plan(n, i))
+            if kind == "boost":
+                return f"CAST({comp(n[1])} * {_double(n[2])} AS {st})"
+            if kind in ("andnot", "reqfilter", "reqopt"):
+                pos, other = comp(n[1]), comp(n[2])
+                if kind == "andnot":
+                    return f"CASE WHEN {other} IS NULL THEN {pos} END"
+                if kind == "reqfilter":
+                    return f"CASE WHEN {other} IS NOT NULL THEN {pos} END"
+                return (f"CAST(CAST({pos} AS DOUBLE) + coalesce("
+                        f"CAST({other} AS DOUBLE), 0D) AS {st})")
+            if kind == "filter0":
+                return (f"CASE WHEN {comp(n[1])} IS NOT NULL "
+                        f"THEN CAST(0 AS {st}) END")
+            if kind == "msm_or":
+                # MinShouldMatchSumScorer: >= n SHOULD clauses match
+                return _fold([comp(c) for c in n[2]], st,
+                             f"CASE WHEN a.n >= {int(n[1])} THEN a.s END")
+            if kind == "dismax":
+                # DisjunctionMaxScorer: max + tie * (sum - max)
+                return _fold([comp(c) for c in n[1]], st,
+                             f"a.mx + (a.s - a.mx) * {_double(n[2])}")
+            if kind == "and":
+                return _fold([comp(c) for c in n[1]], st,
+                             f"CASE WHEN a.n = {len(n[1])} THEN a.s END")
+            if kind == "or":
+                return _fold([comp(c) for c in n[1]], st, "a.s")
+            raise ValueError(kind)
+
+        score = comp(node)
+        if cidx_of:
+            subplans.insert(0, self._scored_terms_df(cidx_of))
+        if not subplans:
+            return None
+        return (
+            functools.reduce(DataFrame.unionByName, subplans)
+            .groupBy("doc_id")
+            .agg(F.map_from_entries(
+                F.collect_list(F.struct("cidx", "score"))).alias("m"))
+            .select("doc_id", F.expr(score).alias("score"))
+            .filter(F.col("score").isNotNull())
         )
 
     # ---------------------------------------------------------- rewrite
@@ -1235,6 +1152,19 @@ class DistributedSearcher:
         return node
 
     # ------------------------------------------------------------- api
+    def _hits(self, query, live: bool = True) -> DataFrame:
+        """DF(doc_id, score) of every doc a query string or tree
+        matches, through parse -> rewrite -> `_plan`; `live` masks
+        tombstoned docs."""
+        node = (parse_query(query, opts=self.analyzer_opts)
+                if isinstance(query, str) else query)
+        plan = self._plan(self.rewrite(node))
+        if plan is None:
+            return self.spark.createDataFrame(
+                [], f"doc_id long, score {self._st}"
+            )
+        return self._live(plan) if live else plan
+
     def search_df(self, query, k: int = 10, after=None) -> DataFrame:
         """Top-k as a DataFrame(doc_id long, score float) — composable
         with join-back to the source table (stored-fields fetch).
@@ -1242,15 +1172,7 @@ class DistributedSearcher:
         after it in (score desc, docID asc) order are returned (the
         distributed searchAfter — TopDocs.merge honors the cursor on
         every shard before the final merge)."""
-        node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
-        node = self.rewrite(node)
-        if node is None or node[0] == "matchnone":
-            return self.spark.createDataFrame(
-                [], f"doc_id long, score {self._st}"
-            )
-        terms = _terms_of(node)
-        scored = self._scored_terms_df(terms)
-        plan = self._live(self._plan(node, scored, [0]))
+        plan = self._hits(query)
         if after is not None:
             a_doc, a_score = int(after[0]), float(after[1])
             s_lit = F.lit(a_score).cast(self._st)
@@ -1258,11 +1180,7 @@ class DistributedSearcher:
                 (F.col("score") < s_lit)
                 | ((F.col("score") == s_lit) & (F.col("doc_id") > a_doc))
             )
-        return (
-            plan.select("doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return plan.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search(self, query, k: int = 10) -> list[tuple[int, float]]:
         return [
@@ -1274,12 +1192,7 @@ class DistributedSearcher:
         """ALL matching docIDs, no ranking — the needsScores=false /
         FILTER path (BooleanQuery.java:184-205; Solr fq).  Returns
         DataFrame(doc_id long)."""
-        node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
-        node = self.rewrite(node)
-        if node is None or node[0] == "matchnone":
-            return self.spark.createDataFrame([], "doc_id long")
-        scored = self._scored_terms_df(_terms_of(node))
-        return self._live(self._plan(node, scored, [0])).select("doc_id")
+        return self._hits(query).select("doc_id")
 
     def search_conversations(self, query, k: int = 10,
                              mode: str = "max") -> DataFrame:
@@ -1290,22 +1203,9 @@ class DistributedSearcher:
         DataFrame(conv_id, score float, n_hits) top-k by (score desc,
         conv_id asc)."""
         agg = {"max": F.max, "sum": F.sum, "avg": F.avg}[mode]
-        node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
-        node = self.rewrite(node)
-        if node is None or node[0] == "matchnone":
-            return self.spark.createDataFrame(
-                [], f"conv_id string, score {self._st}, n_hits long"
-            )
-        terms = _terms_of(node)
-        scored = self._scored_terms_df(terms)
-        plan = self._live(
-            self._plan(node, scored, [0])
-        ).select("doc_id", "score")
-        docmap = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", "conv_id")
         return (
-            plan.join(docmap, "doc_id")
+            self._hits(query)
+            .join(self._docmap.select("doc_id", "conv_id"), "doc_id")
             .groupBy("conv_id")
             .agg(
                 agg(F.col("score").cast("double")).cast(self._st).alias("score"),
@@ -1339,19 +1239,10 @@ class DistributedSearcher:
         collapsing."""
         from pyspark.sql import Window
 
-        node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
-        node = self.rewrite(node)
-        if node is None or node[0] == "matchnone":
-            return self.spark.createDataFrame(
-                [], f"group string, doc_id long, score {self._st}, rank int"
-            )
-        scored = self._scored_terms_df(_terms_of(node))
-        plan = self._live(
-            self._plan(node, scored, [0])
-        ).select("doc_id", "score")
-        docmap = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", F.col(field).cast("string").alias("group"))
+        plan = self._hits(query)
+        docmap = self._docmap.select(
+            "doc_id", F.col(field).cast("string").alias("group")
+        )
         keep_n = 1 + max(0, expand_k)
         w_part = Window.partitionBy("group", "_pid").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -1395,14 +1286,7 @@ class DistributedSearcher:
         k rows total.  One extra broadcast join over the normal plan —
         the elevation set is configuration-sized."""
         st = self._st
-        node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
-        node = self.rewrite(node)
-        organic = (
-            self._live(self._plan(node, self._scored_terms_df(
-                _terms_of(node)), [0])).select("doc_id", "score")
-            if node is not None and node[0] != "matchnone"
-            else self.spark.createDataFrame([], f"doc_id long, score {st}")
-        )
+        organic = self._hits(query)
         elev = self.spark.createDataFrame(
             [(int(d), i) for i, d in enumerate(elevated_ids)],
             "doc_id long, _pos int",
@@ -1450,20 +1334,9 @@ class DistributedSearcher:
         use is recency/quality boosting.  Evaluated entirely JVM-side
         (Catalyst expression), then the usual top-k."""
         st = self._st
-        node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
-        node = self.rewrite(node)
-        if node is None or node[0] == "matchnone":
-            return self.spark.createDataFrame(
-                [], f"doc_id long, score {st}"
-            )
-        organic = self._live(
-            self._plan(node, self._scored_terms_df(_terms_of(node)), [0])
-        ).select("doc_id", "score")
-        dm = self.spark.read.parquet(
-            os.path.join(self.index_dir, "docmap")
-        ).select("doc_id", *cols)
         return (
-            organic.join(dm, "doc_id")
+            self._hits(query)
+            .join(self._docmap.select("doc_id", *cols), "doc_id")
             .withColumn(
                 "score",
                 (F.col("score").cast("double")
@@ -1501,9 +1374,7 @@ class DistributedSearcher:
             "doc_id", F.col("score").cast("double").alias("s1")
         )
         if rescore_expr is not None:
-            dm = self.spark.read.parquet(
-                os.path.join(self.index_dir, "docmap")
-            ).select("doc_id", *cols)
+            dm = self._docmap.select("doc_id", *cols)
             joined = first.join(dm, "doc_id").withColumn(
                 "s2", F.expr(rescore_expr).cast("double")
             )
@@ -1514,16 +1385,8 @@ class DistributedSearcher:
             else:
                 comb = F.col("s1") + F.lit(float(weight)) * F.col("s2")
         else:
-            node2 = (parse_query(rescore_query)
-                     if isinstance(rescore_query, str) else rescore_query)
-            node2 = self.rewrite(node2)
-            second = (
-                self._plan(node2, self._scored_terms_df(_terms_of(node2)),
-                           [0]).select(
-                    "doc_id", F.col("score").cast("double").alias("s2")
-                )
-                if node2 is not None and node2[0] != "matchnone"
-                else self.spark.createDataFrame([], "doc_id long, s2 double")
+            second = self._hits(rescore_query, live=False).select(
+                "doc_id", F.col("score").cast("double").alias("s2")
             )
             # first-pass set is n rows — broadcast so the second pass
             # is a map-side probe, no shuffle of the second plan
@@ -1541,8 +1404,7 @@ class DistributedSearcher:
         """Two-phase fetch (Solr GET_FIELDS): broadcast-join the tiny top-k
         back to docmap + source table for stored fields."""
         top = self.search_df(query, k)
-        docmap = self.spark.read.parquet(os.path.join(self.index_dir, "docmap"))
-        ids = docmap.join(F.broadcast(top), "doc_id")
+        ids = self._docmap.join(F.broadcast(top), "doc_id")
         return (
             transcripts.join(
                 F.broadcast(ids.select("doc_id", "score", "conv_id", "turn_idx")),
@@ -1641,29 +1503,30 @@ def _score_freq_batch(freqs, pdf, sim, dtype, wv, cache, idf_sum_d,
     )
 
 
-def _terms_of(node) -> list[str]:
-    """Text-field terms the shared scored-terms scan must cover (fterm /
-    tsrange / span nodes plan their own pruned scans)."""
-    from .spans import SPAN_KINDS
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal for `s`."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    kind = node[0]
-    if kind in SPAN_KINDS:
-        return []
-    if kind == "term":
-        return [node[1]]
-    if kind == "const_or":
-        return list(node[1])
-    if kind == "synonym":
-        return []  # plans its own summed-tf scan (_synonym_plan)
-    if kind in ("matchnone", "fterm", "tsrange"):
-        return []
-    if kind in ("andnot", "reqopt", "reqfilter"):
-        return _terms_of(node[1]) + _terms_of(node[2])
-    if kind in ("boost", "filter0"):
-        return _terms_of(node[1])
-    if kind == "phrase":
-        return [t for t, _ in node[1]]
-    out = []
-    for c in (node[2] if kind == "msm_or" else node[1]):
-        out.extend(_terms_of(c))
-    return out
+
+def _double(x) -> str:
+    """Spark SQL DOUBLE literal equal to the Python float `x` (repr
+    round-trips, and Spark parses it to the same IEEE double)."""
+    return f"CAST('{float(x)!r}' AS DOUBLE)"
+
+
+def _fold(children: list[str], st: str, finish: str) -> str:
+    """Spark SQL for one clause-order pass over a node's child scores
+    (null = the child does not match).  The accumulator `a` carries `s`,
+    the double sum of the present children in clause order (null while
+    none is), `n`, their count, and `mx`, their max; `finish` maps it to
+    the node's score (null = no match), cast to `st`.  Every child
+    expression appears once, so a nested tree compiles to an expression
+    linear in the query's size."""
+    kids = ", ".join(f"CAST({c} AS DOUBLE)" for c in children)
+    return (
+        f"CAST(aggregate(array({kids}), named_struct('s', CAST(NULL AS "
+        "DOUBLE), 'n', 0, 'mx', CAST(NULL AS DOUBLE)), (a, x) -> CASE WHEN "
+        "x IS NULL THEN a ELSE named_struct('s', coalesce(a.s, 0D) + x, "
+        "'n', a.n + 1, 'mx', greatest(a.mx, x)) END, "
+        f"a -> {finish}) AS {st})"
+    )

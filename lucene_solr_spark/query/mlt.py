@@ -70,11 +70,7 @@ def more_like_this_df(searcher, text: str, exclude_doc: int | None = None,
     terms, _ = analyze_detailed(text)
     cand = sorted({t for t, c in Counter(terms).items()
                    if c >= kw.get("min_term_freq", 2)})
-    dfs = {
-        r["term"]: int(r["doc_freq"])
-        for r in searcher._text_stats.filter(F.col("term").isin(cand))
-        .collect()
-    } if cand else {}
+    dfs = {t: df for t, (df, _) in searcher._stats(cand).items()}
     node = mlt_query_node(text, dfs, searcher.doc_count, **kw)
     if node[0] == "matchnone":
         return searcher.spark.createDataFrame(

@@ -22,14 +22,16 @@ def main(sf_dir: str) -> None:
     spark = get_spark("explain", cores=8, shuffle_partitions=8)
     qs = E.queries()
     picks = [
-        ("bm25_and", "boolean AND: pruned postings scan -> decode -> join"),
+        ("bm25_and", "boolean AND: pruned postings scan -> decode -> ONE "
+                     "groupBy(doc_id) score map -> compiled AND expression"),
         ("field_filter_bm25",
          "text BM25 + keyword/ts FILTER clauses: field+term pushdown, "
-         "ts row-group pruning, left_semi filters"),
+         "ts row-group pruning, filters as leaves of the doc_id map"),
         ("phrase_query",
          "distributed phrase: pruned positional scan -> doc_id join -> "
-         "Arrow freq/score kernel"),
-        ("bm25_msm", "minShouldMatch: union agg + match-count filter"),
+         "Arrow freq/score kernel -> one leaf of the doc_id map"),
+        ("bm25_msm", "minShouldMatch: one doc_id map agg + compiled "
+                     "present-clause count >= n"),
         ("span_near_membership",
          "distributed span: pruned position scan -> doc-level candidate "
          "conjunction -> executor Arrow span kernel (r3)"),
@@ -68,9 +70,9 @@ def main(sf_dir: str) -> None:
          "SynonymQuery: pruned decode -> groupBy(doc_id) freq sum -> "
          "one pseudo-term scoring pass (r4)"),
         ("dismax_topk",
-         "DisjunctionMax: clause plans union -> ONE groupBy(doc_id) "
-         "computing max + clause-order sum — same single-shuffle "
-         "shape as a plain OR (r5)"),
+         "DisjunctionMax: leaves -> ONE groupBy(doc_id) score map -> "
+         "compiled max + tie * (clause-order sum - max) — the same "
+         "single-shuffle shape as every query"),
         ("rescore_topk",
          "QueryRescorer: first-pass top-n broadcast-probes the second "
          "query's pruned plan; no rescan beyond the candidates (r5)"),
