@@ -228,10 +228,10 @@ SELECT doc_id, ROUND(score, 4) AS score FROM (
 
 def _simbase_term_sql(sim: str, term: str) -> str:
     """Single-term gate twin for the SimilarityBase family — the score
-    expression comes from similarities.oracle_sql_score so the DuckDB
-    operation order is the same module that defines the Spark gate
-    column (similarities.gate_sql_col)."""
-    from lucene_solr_spark.query.similarities import oracle_sql_score
+    expression comes from oracle.simbase_sql.oracle_sql_score, written
+    apart from the engine's gate columns (query/similarities.py
+    ``gate_col``) that it checks."""
+    from lucene_solr_spark.oracle.simbase_sql import oracle_sql_score
 
     return f"""
 WITH {_TOK_CTE}
@@ -733,12 +733,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         idx = _ensure_index(spark, sf)
         ds = DistributedSearcher(spark, idx, dtype="float64")
         terms = ["batch", "query", "dup"]
-        dfs = {
-            r["term"]: int(r["doc_freq"])
-            for r in ds._text_stats.filter(
-                F.col("term").isin(terms)
-            ).collect()
-        }
+        dfs = {t: df for t, (df, _) in ds._stats(terms).items()}
         max_doc = int(read_field_stats(idx)["max_doc"] or 0)
         node = common_terms_node(dfs, max_doc, terms,
                                  max_term_frequency=0.3)

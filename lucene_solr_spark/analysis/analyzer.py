@@ -79,57 +79,6 @@ def analyze_detailed(text: str) -> tuple[list[str], list[int]]:
     return terms, positions
 
 
-def analyze_batch(texts):
-    """Pandas-vectorized full chain over a BATCH of texts.
-
-    MEASURED OUTCOME (r2, kept for the record): this is ~3.5x SLOWER
-    than the plain per-doc `analyze()` loop on the build corpus (90k
-    docs / 3.3M tokens, same host window: loop 2.9s vs batch 10.3s).
-    The C regex pass is already ~75% of the loop's cost; constructing
-    multi-million-row pandas object Series and running the str
-    accessors costs more than the tight Python loop they replace.  The
-    build kernels therefore use the per-doc loop (index/builder.py);
-    this function stays as the documented experiment + a second
-    implementation for the parity test.
-
-    The position of each surviving token is its RAW token index,
-    because every dropped token advances the next survivor's increment
-    by exactly one (the skippedPositions discipline,
-    StandardTokenizer.java:178-188 + FilteringTokenFilter.java:49-63).
-
-    Returns (terms object-ndarray, doc_idx int64, positions int64,
-    dls int64-per-doc); semantically identical to analyze_detailed per
-    doc (locked by tests/test_analyzer.py batch-parity).
-    """
-    import itertools
-
-    import numpy as np
-    import pandas as pd
-
-    toks_per = [_TOKEN_RE.findall(t or "") for t in texts]
-    counts = np.fromiter(
-        (len(x) for x in toks_per), dtype=np.int64, count=len(toks_per)
-    )
-    total = int(counts.sum())
-    n = len(texts)
-    if total == 0:
-        return (
-            np.empty(0, dtype=object), np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int64), np.zeros(n, dtype=np.int64),
-        )
-    flat = pd.Series(
-        list(itertools.chain.from_iterable(toks_per)), dtype=object
-    )
-    doc_idx = np.repeat(np.arange(n, dtype=np.int64), counts)
-    starts = np.cumsum(counts) - counts
-    raw_pos = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-    lens = flat.str.len().to_numpy()
-    low = flat.str.lower()
-    keep = (lens <= MAX_TOKEN_LENGTH) & ~low.isin(ENGLISH_STOP_WORDS).to_numpy()
-    dls = np.bincount(doc_idx[keep], minlength=n).astype(np.int64)
-    return low.to_numpy()[keep], doc_idx[keep], raw_pos[keep], dls
-
-
 def analyze_query_terms(query_text: str) -> list[str]:
     """Analyze one query atom (QueryParser runs the field analyzer on
     query text; stopwords vanish — the all-stopword query matches nothing)."""

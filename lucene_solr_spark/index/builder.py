@@ -464,9 +464,8 @@ def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
     and MEASURED SLOWER (same 90k-doc corpus, same host window: per-doc
     loop 2.9s vs pandas-batch 10.3s) — the C regex pass is ~75% of the
     analysis cost already and pandas object-Series construction +
-    str-accessor passes cost more than the plain loop they replace.
-    `analysis.analyzer.analyze_batch` (kept, parity-tested) documents
-    the attempt; the loop below is the measured winner."""
+    str-accessor passes cost more than the plain loop they replace, so
+    the loop below is the measured winner."""
     from ..analysis.analyzer import (
         AnalyzerOptions, analyze_detailed_with, analyze_with,
     )

@@ -36,7 +36,6 @@ import functools
 import glob
 import itertools
 import json
-import math
 import os
 
 import numpy as np
@@ -47,35 +46,24 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..index.builder import term_bucket
 from ..index.codec import decode_block
-from ..oracle.smallfloat import NORM_TABLE
+from .engine import rewrite
 from .parser import parse_query
+from .similarities import make_similarity
 
 
 class DistributedSearcher:
-    """`similarity` mirrors LocalSearcher: "bm25" (default, k1/b from
-    the index params), "classic" (TF-IDF, ClassicSimilarity.java —
-    sqrt(tf) * (ln((docCount+1)/(docFreq+1))+1) * norm, where norm is
-    byte315ToFloat(norm byte) in serving mode and the exact 1/sqrt(dl)
-    in float64 gate mode), or "lmd" (LMDirichletSimilarity.java:66-71 —
-    per-term max(0, ln(1 + tf/(mu*pc)) + ln(mu/(dl+mu))), pc the term's
-    collection probability).  In serving mode lmd keeps the reference's
-    float discipline (float32 pc, norm-byte-decoded docLen — rank-
-    identical to LocalSearcher); in float64 gate mode the whole formula
-    is double with exact dl and pc = (ttf+1)/(sttf+1), bit-stable
-    against an ANSI-SQL twin (same deviation discipline as bm25).
-    "lmjm" and the round-4 SimilarityBase family ("dfr", "ib", "dfi",
-    "ax", "bool" — see query/similarities.py for formulas and
-    citations) follow the same two-mode discipline."""
+    """`similarity`, `mu` and `lmjm_lambda` mirror LocalSearcher: one
+    Similarity object (query/similarities.py) scores every leaf.  In
+    serving mode (dtype="float32") it keeps the reference's float
+    discipline over the quantized norm byte, rank-identical to
+    LocalSearcher; in gate mode (dtype="float64") the model's all-double
+    rendering with the exact docmap doc length is bit-stable against an
+    ANSI-SQL twin."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  dtype: str = "float32", similarity: str = "bm25",
                  mu: float = 2000.0, lmjm_lambda: float = 0.1):
-        from .similarities import SIMBASE
-
         assert dtype in ("float32", "float64")
-        assert similarity in ("bm25", "classic", "lmd", "lmjm") + SIMBASE
-        self.mu = float(mu)
-        self.lmjm_lambda = float(lmjm_lambda)
         self.spark = spark
         self.index_dir = index_dir
         self.dtype = dtype
@@ -92,29 +80,28 @@ class DistributedSearcher:
         self.analyzer_opts = AnalyzerOptions.from_manifest(
             self.params.get("analyzer")
         )
-        self.k1 = float(self.params.get("k1", 1.2))
-        self.b = float(self.params.get("b", 0.75))
         from ..index.builder import read_field_stats
 
         fs = read_field_stats(index_dir)
         self.doc_count = int(fs["doc_count"] or 0)
         self.sum_ttf = int(fs["sum_total_term_freq"] or 0)
+        #: the scoring model over one field's stats; `sim` is the text
+        #: field's, keyword-field leaves build theirs in `_fterm_plan`
+        self._make_sim = functools.partial(
+            make_similarity, similarity, k1=self.params.get("k1", 1.2),
+            b=self.params.get("b", 0.75), mu=mu, lmjm_lambda=lmjm_lambda,
+        )
+        self.sim = self._make_sim(self.doc_count, self.sum_ttf)
         # point-in-time relations, read once like the field stats above
         self._postings = spark.read.parquet(
             os.path.join(index_dir, "postings")
         )
         self._docmap = spark.read.parquet(os.path.join(index_dir, "docmap"))
-        ts_path = os.path.join(index_dir, "term_stats")
-        self._term_stats = spark.read.parquet(ts_path)
-        self._terms_ds = pads.dataset(ts_path, format="parquet")
+        self._terms_ds = pads.dataset(
+            os.path.join(index_dir, "term_stats"), format="parquet"
+        )
 
     # ------------------------------------------------------------ plan
-    @property
-    def _text_stats(self) -> DataFrame:
-        """The text-field term dictionary as a DataFrame — multi-term
-        rewrites scan it; per-query stats come from `_stats`."""
-        return self._term_stats.filter(F.col("field") == "text")
-
     def _stats(self, terms, field: str = "text") -> dict:
         """{term: (doc_freq, total_term_freq)} for the given terms of one
         field, read on the driver — a pyarrow scan of term_stats with
@@ -240,8 +227,8 @@ class DistributedSearcher:
         decode of the synonym terms, groupBy(doc_id) summing freqs
         (SynonymScorer — same doc => same norm byte, F.first is safe),
         then ONE pseudo-term scoring pass with docFreq = max over
-        terms, totalTermFreq = sum (:134-147), through the shared
-        freq->score kernel in both modes.  None when no term exists."""
+        terms, totalTermFreq = sum (:134-147), through `_freq_scorer`
+        in both modes.  None when no term exists."""
         terms = sorted(set(terms))
         stats = self._stats(terms)
         if not stats:
@@ -255,24 +242,13 @@ class DistributedSearcher:
         )
         if self.dtype == "float64":
             agg = agg.join(self._docmap.select("doc_id", "dl"), "doc_id")
-        dc, k1d, bd, avgdl_d = self.doc_count, self.k1, self.b, self._avgdl
-        sttf = self.sum_ttf
-        dtype, st, sim = self.dtype, self._st, self.similarity
-        mu, lam = self.mu, self.lmjm_lambda
+        st = self._st
         # pseudo single-clause weight: df = max, ttf = sum
-        wv, cache, idf_sum_d, lmd_w = self._freq_weights(
-            {"__syn__": (df_max, ttf_sum)}, ["__syn__"]
-        )
+        score = self._freq_scorer([(df_max, ttf_sum)])
 
         def score_syn(batches):
             for pdf in batches:
-                freqs = pdf["tf"].to_numpy().astype(
-                    np.float32 if dtype == "float32" else np.float64
-                )
-                sc = _score_freq_batch(
-                    freqs, pdf, sim, dtype, wv, cache, idf_sum_d,
-                    k1d, bd, avgdl_d, lmd_w, mu, lam, dc, sttf,
-                )
+                sc = score(pdf["tf"].to_numpy(), pdf)
                 yield pd.DataFrame(
                     {"doc_id": pdf["doc_id"].to_numpy(), "score": sc}
                 )
@@ -282,19 +258,13 @@ class DistributedSearcher:
             .withColumn("cidx", F.lit(i))
         )
 
-    @property
-    def _avgdl(self) -> float:
-        return (
-            self.sum_ttf / float(self.doc_count)
-            if self.sum_ttf > 0 and self.doc_count > 0 else 1.0
-        )
-
     def _scored_terms_df_double(self, cidx_of: dict) -> DataFrame:
         """Gate-mode term leaves: DF(doc_id, cidx, score double) scored
         in double precision from exact tf/df/dl (docmap doc length, not
         the quantized norm byte) — bit-stable against an ANSI-SQL twin;
-        formula per self.similarity.  The per-term stats and clause
-        indexes enter the plan as literal map columns."""
+        the formula is the Similarity's ``gate_col``.  The per-term
+        stats and clause indexes enter the plan as literal map
+        columns."""
         terms = sorted(cidx_of)
         stats = self._stats(terms)
 
@@ -316,58 +286,7 @@ class DistributedSearcher:
                 lambda t: F.array(*map(F.lit, cidx_of[t]))
             )).alias("cidx"),
         )
-        dc, avgdl, k1, b = self.doc_count, self._avgdl, self.k1, self.b
-        if self.similarity == "lmd":
-            # all-double lmd with exact dl and pc = (ttf+1)/(sttf+1):
-            # LN(1+x) (not log1p) so an ANSI-SQL twin is bit-stable
-            mu, sttf = self.mu, self.sum_ttf
-            pc = (F.col("total_term_freq") + F.lit(1.0)) / F.lit(
-                sttf + 1.0
-            )
-            score = F.greatest(
-                F.lit(0.0),
-                F.log(F.lit(1.0)
-                      + F.col("tf").cast("double") / (F.lit(mu) * pc))
-                + F.log(F.lit(mu) / (F.col("dl") + F.lit(mu))),
-            )
-        elif self.similarity == "lmjm":
-            # all-double lmjm (LMJelinekMercerSimilarity.java:54-59)
-            lam, sttf = self.lmjm_lambda, self.sum_ttf
-            pc = (F.col("total_term_freq") + F.lit(1.0)) / F.lit(
-                sttf + 1.0
-            )
-            score = F.log(
-                F.lit(1.0)
-                + (F.lit(1.0 - lam) * F.col("tf").cast("double")
-                   / F.col("dl"))
-                / (F.lit(lam) * pc)
-            )
-        elif self.similarity == "classic":
-            score = (
-                F.sqrt(F.col("tf").cast("double"))
-                * (F.log((F.lit(dc) + 1.0) / (F.col("doc_freq") + 1.0))
-                   + F.lit(1.0))
-                / F.sqrt(F.col("dl").cast("double"))
-            )
-        elif self.similarity in ("dfr", "ib", "dfi", "ax", "bool"):
-            # SimilarityBase family (similarities.py): all-double gate
-            # formula with exact dl, same operation order as the
-            # DuckDB twins
-            from .similarities import gate_sql_col
-
-            score = gate_sql_col(self.similarity, dc, self.sum_ttf)
-        else:
-            score = (
-                F.log(F.lit(1.0) + (F.lit(dc) - F.col("doc_freq") + 0.5)
-                      / (F.col("doc_freq") + 0.5))
-                * F.lit(k1 + 1.0)
-                * F.col("tf").cast("double")
-                / (
-                    F.col("tf").cast("double")
-                    + F.lit(k1) * (F.lit(1.0 - b)
-                                   + F.lit(b) * F.col("dl") / F.lit(avgdl))
-                )
-            )
+        score = self.sim.gate_col()
         return (
             tp.join(self._docmap.select("doc_id", "dl"), "doc_id")
             .select("doc_id", "cidx", score.alias("score"))
@@ -386,38 +305,10 @@ class DistributedSearcher:
             terms, ["term", "salt", "block_id", "kind", "first_doc",
                     "doc_count", "payload", "norms_payload"],
         )
-        k1 = np.float32(self.k1)
-        b = np.float32(self.b)
-        doc_count = self.doc_count
-        avgdl = (
-            np.float32(self.sum_ttf / float(doc_count))
-            if self.sum_ttf > 0
-            else np.float32(1.0)
-        )
-        cache = (k1 * ((np.float32(1.0) - b) + b * NORM_TABLE / avgdl)).astype(
-            np.float32
-        )
-        classic = self.similarity == "classic"
-        lmd = self.similarity == "lmd"
-        lmjm = self.similarity == "lmjm"
-        from .similarities import SIMBASE
-
-        simbase = self.similarity in SIMBASE
-        sim = self.similarity
-        mu, lam = self.mu, self.lmjm_lambda
-        sum_ttf = self.sum_ttf
+        sim = self.sim
 
         def score_blocks(batches):
-            from ..oracle.smallfloat import byte315_to_float
-
-            cnorm = (
-                byte315_to_float(np.arange(256, dtype=np.uint8))
-                if classic else None
-            )
-            if lmd or lmjm:
-                # SimilarityBase docLen decode == BM25's NORM_TABLE
-                from ..oracle.smallfloat import NORM_TABLE as lmd_dl
-            wv_cache: dict[str, np.float32] = {}
+            weights: dict = {}
             for pdf in batches:
                 outs = []
                 for row in pdf.itertuples(index=False):
@@ -431,65 +322,12 @@ class DistributedSearcher:
                         )
                     )
                     norms = np.frombuffer(row.norms_payload, dtype=np.uint8)
-                    wv = wv_cache.get(row.term)
-                    if wv is None:
-                        df_t, ttf_t = dfs.get(row.term, (0, 0))
-                        if simbase:
-                            # SimilarityBase weight IS the stats pair
-                            wv = (df_t, ttf_t)
-                        elif lmd or lmjm:
-                            # float32 pc (DefaultCollectionModel +1F)
-                            wv = np.float32(
-                                np.float32(ttf_t + 1.0)
-                                / np.float32(sum_ttf + 1.0)
-                            )
-                        elif classic:
-                            wv = np.float32(
-                                np.log((doc_count + 1) / float(df_t + 1))
-                                + 1.0
-                            )
-                        else:
-                            idf = np.float32(
-                                np.log(1 + (doc_count - df_t + 0.5)
-                                       / (df_t + 0.5))
-                            )
-                            wv = np.float32(idf * (k1 + np.float32(1.0)))
-                        wv_cache[row.term] = wv
-                    freq = tfs.astype(np.float32)
-                    if simbase:
-                        # LocalSearcher float discipline via the shared
-                        # kernel (similarities.serving_scores)
-                        from .similarities import serving_scores
-
-                        sc = serving_scores(
-                            sim, freq, norms, [wv], doc_count, sum_ttf,
-                            avgdl,
+                    w = weights.get(row.term)
+                    if w is None:
+                        w = weights[row.term] = sim.weight(
+                            [dfs.get(row.term, (0, 0))]
                         )
-                    elif lmd:
-                        # LocalSearcher._lmd_score float discipline
-                        dl64 = lmd_dl[norms].astype(np.float64)
-                        s = (
-                            np.log1p(freq.astype(np.float64)
-                                     / (mu * float(wv)))
-                            + np.log(mu / (dl64 + mu))
-                        ).astype(np.float32)
-                        sc = np.maximum(s, np.float32(0.0))
-                    elif lmjm:
-                        # LocalSearcher._lmjm_score float discipline
-                        dl64 = lmd_dl[norms].astype(np.float64)
-                        sc = np.log1p(
-                            ((1.0 - lam) * freq.astype(np.float64) / dl64)
-                            / (lam * float(wv))
-                        ).astype(np.float32)
-                    elif classic:
-                        raw = (np.sqrt(freq, dtype=np.float32) * wv).astype(
-                            np.float32
-                        )
-                        sc = (raw * cnorm[norms]).astype(np.float32)
-                    else:
-                        sc = (wv * freq / (freq + cache[norms])).astype(
-                            np.float32
-                        )
+                    sc = sim.score(w, tfs.astype(np.float32), norms)
                     outs.extend(
                         pd.DataFrame(
                             {"doc_id": docs, "cidx": np.int32(i), "score": sc}
@@ -506,85 +344,20 @@ class DistributedSearcher:
     def _fterm_plan(self, field: str, value: str, i: int) -> DataFrame:
         """Keyword-field TermQuery plan: decode the (field, value)
         posting list (bucket-pruned scan) and attach the constant
-        omitNorms BM25 score (tf is always 1 for StringField values, so
-        the score idf*(k1+1)*1/(1+k1) is a per-query literal computed
-        with the engine's float discipline)."""
+        omitNorms score — tf is always 1 for StringField values, so the
+        model over the FIELD's stats gives one per-query literal."""
         docs = self._decoded_tf_df_for_field(field, value)
-        df_t, ttf_t = self._stats([value], field).get(value, (0, 0))
         from ..index.builder import read_field_stats
 
-        fs_f = read_field_stats(self.index_dir, field)
-        dc_f = int(fs_f["doc_count"] or 0)
-        if self.similarity in ("lmd", "lmjm"):
-            # norms == null -> docLen = 1F (SimilarityBase.simScorer);
-            # pc over the FIELD's token count, LocalSearcher discipline
-            sttf_f = int(fs_f["sum_total_term_freq"] or 0)
-            mu, lam = self.mu, self.lmjm_lambda
-            if self.dtype == "float32":
-                pc = float(np.float32(
-                    np.float32(ttf_t + 1.0) / np.float32(sttf_f + 1.0)
-                ))
-            else:
-                pc = (ttf_t + 1.0) / (sttf_f + 1.0)
-            if self.dtype == "float32":
-                # engine float discipline: float64 log1p, float32 cast
-                if self.similarity == "lmjm":
-                    sc = float(np.float32(
-                        np.log1p(((1.0 - lam) * 1.0) / (lam * pc))
-                    ))
-                else:
-                    sc = float(max(np.float32(
-                        np.log1p(1.0 / (mu * pc)) + np.log(mu / (1.0 + mu))
-                    ), np.float32(0.0)))
-            elif self.similarity == "lmjm":
-                sc = math.log(1.0 + ((1.0 - lam) * 1.0) / (lam * pc))
-            else:
-                sc = max(0.0, math.log(1.0 + 1.0 / (mu * pc))
-                         + math.log(mu / (1.0 + mu)))
-        elif self.similarity in ("dfr", "ib", "dfi", "ax", "bool"):
-            # SimilarityBase family: norms == null -> docLen = 1F and
-            # tf = 1 (StringField), so the score is a per-query
-            # constant; per-FIELD stats with the fillBasicStats
-            # sttf<=0 fallback (tokens=docFreq, avgdl=1)
-            from .similarities import gate_scores, serving_scores
-
-            sttf_f = int(fs_f["sum_total_term_freq"] or 0)
-            one = np.ones(1, dtype=np.float32)
-            if sttf_f > 0 and dc_f > 0:
-                tokens_f = sttf_f
-                avgdl_f = np.float32(sttf_f / float(dc_f))
-            else:
-                tokens_f, avgdl_f = max(df_t, 1), np.float32(1.0)
-            dc_f = max(dc_f, 1)  # empty field: no postings anyway
-            if self.dtype == "float32":
-                sc = float(serving_scores(
-                    self.similarity, one, None, [(df_t, ttf_t)], dc_f,
-                    tokens_f, avgdl_f, dl=one,
-                )[0])
-            else:
-                # gate_scores' avgdl = tokens/docs in double; emulate
-                # the sttf<=0 fallback by passing tokens_f as sum_ttf
-                sc = float(gate_scores(
-                    self.similarity, np.ones(1), np.ones(1),
-                    [(df_t, ttf_t)], dc_f, tokens_f,
-                )[0])
-        elif self.similarity == "classic":
-            # norms == null -> raw = tf(1) * idf (TFIDFSimScorer)
-            if self.dtype == "float32":
-                sc = float(np.float32(
-                    np.log((dc_f + 1) / float(df_t + 1)) + 1.0
-                ))
-            else:
-                sc = math.log((dc_f + 1.0) / (df_t + 1.0)) + 1.0
-        elif self.dtype == "float32":
-            k1 = np.float32(self.k1)
-            idf = np.float32(np.log(1 + (dc_f - df_t + 0.5) / (df_t + 0.5)))
-            wv = np.float32(idf * (k1 + np.float32(1.0)))
-            one = np.float32(1.0)
-            sc = float(np.float32(wv * one / (one + k1)))
-        else:
-            idf = math.log(1.0 + (dc_f - df_t + 0.5) / (df_t + 0.5))
-            sc = idf * (self.k1 + 1.0) * 1.0 / (1.0 + self.k1)
+        fs = read_field_stats(self.index_dir, field)
+        sim = self._make_sim(fs["doc_count"], fs["sum_total_term_freq"])
+        clause = [self._stats([value], field).get(value, (0, 0))]
+        one = np.ones(1, dtype=np.float32)
+        sc = float(
+            sim.score(sim.weight(clause), one, None)[0]
+            if self.dtype == "float32"
+            else sim.score64(sim.weight64(clause), one, None)[0]
+        )
         return docs.select(
             "doc_id",
             F.lit(sc).cast(self._st).alias("score"),
@@ -649,75 +422,23 @@ class DistributedSearcher:
             dec, "term string, doc_id long, norm int, pos array<long>"
         )
 
-    def _freq_weights(self, dfs: dict, terms: list):
-        """Clause weights for the shared phrase/span freq->score kernel
-        (`_score_freq_batch`), per similarity and mode.  `dfs` maps
-        term -> (doc_freq, total_term_freq); `terms` lists the scoring
-        clauses (duplicates included for phrases, deduplicated for
-        spans — mirroring the termStats[] handed to
-        Similarity.computeWeight / SpanWeight.buildSimWeight).
-
-        Returns (wv, cache, idf_sum_d, lmd_w), unused slots None:
-        - float32 serving: `wv` the summed-idf weight (bm25 *(k1+1),
-          classic raw), `cache` the bm25 norm cache; for "lmd"
-          instead `lmd_w` = float32 collection probability per clause
-          (LMSimilarity.DefaultCollectionModel float division);
-        - float64 gate: `idf_sum_d` the summed double idf; for "lmd"
-          `lmd_w` = exact double (ttf+1)/(sttf+1) per clause, matching
-          the all-double ANSI-SQL twin."""
-        dc = self.doc_count
-        classic = self.similarity == "classic"
-        from .similarities import SIMBASE
-
-        if self.similarity in SIMBASE:
-            # SimilarityBase family: the per-clause (df, ttf) stats
-            # pairs ARE the weight (both modes); the shared kernel
-            # dispatches on sim
-            sb_w = [dfs.get(t, (0, 0)) for t in terms]
-            return None, None, None, sb_w
-        if self.similarity in ("lmd", "lmjm"):
-            ttfs = [dfs.get(t, (0, 0))[1] for t in terms]
-            if self.dtype == "float32":
-                lmd_w = np.array(
-                    [np.float32(np.float32(ttf + 1.0)
-                                / np.float32(self.sum_ttf + 1.0))
-                     for ttf in ttfs], dtype=np.float32)
-            else:
-                lmd_w = np.array(
-                    [(ttf + 1.0) / (self.sum_ttf + 1.0) for ttf in ttfs],
-                    dtype=np.float64)
-            return None, None, None, lmd_w
+    def _freq_scorer(self, clauses):
+        """freq -> score of one phrase/span/synonym weight over an Arrow
+        batch `pdf`: `clauses` are the weight's (doc_freq,
+        total_term_freq) pairs (duplicates kept for phrases,
+        deduplicated for spans — the termStats[] handed to
+        Similarity.computeWeight / SpanWeight.buildSimWeight).  Serving
+        mode scores from the batch's norm byte, gate mode from its exact
+        docmap `dl`."""
+        sim = self.sim
         if self.dtype == "float32":
-            k1f = np.float32(self.k1)
-            bf = np.float32(self.b)
-            avgdl_f = (
-                np.float32(self.sum_ttf / float(dc))
-                if self.sum_ttf > 0 else np.float32(1.0)
+            w = sim.weight(clauses)
+            return lambda freqs, pdf: sim.score(
+                w, freqs.astype(np.float32),
+                pdf["norm"].to_numpy().astype(np.uint8),
             )
-            cache = (
-                k1f * ((np.float32(1.0) - bf) + bf * NORM_TABLE / avgdl_f)
-            ).astype(np.float32)
-            idf_sum = np.float32(0.0)
-            for t in terms:
-                df_t = dfs.get(t, (0, 0))[0]
-                idf_sum = np.float32(idf_sum + (
-                    np.float32(np.log((dc + 1) / float(df_t + 1)) + 1.0)
-                    if classic else
-                    np.float32(np.log(1 + (dc - df_t + 0.5) / (df_t + 0.5)))
-                ))
-            wv = (
-                idf_sum if classic
-                else np.float32(idf_sum * (k1f + np.float32(1.0)))
-            )
-            return wv, cache, None, None
-        idf_sum_d = sum(
-            (math.log((dc + 1.0) / (dfs.get(t, (0, 0))[0] + 1.0)) + 1.0)
-            if classic else
-            math.log(1.0 + (dc - dfs.get(t, (0, 0))[0] + 0.5)
-                     / (dfs.get(t, (0, 0))[0] + 0.5))
-            for t in terms
-        )
-        return None, None, idf_sum_d, None
+        w = sim.weight64(clauses)
+        return lambda freqs, pdf: sim.score64(w, freqs, pdf["dl"].to_numpy())
 
     def _phrase_plan(self, clauses, slop: int, i: int) -> DataFrame:
         """Distributed Exact/SloppyPhraseScorer (VERDICT r1 item 2 — the
@@ -725,10 +446,10 @@ class DistributedSearcher:
         phrase terms in one pruned scan, inner-join clauses on doc_id (so
         only docs containing EVERY term reach Python), then an
         Arrow-batched kernel computes the phrase freq (start-position
-        intersection / sloppy.py greedy windows) and the BM25 score with
-        the summed clause idfs — float32 in serving mode, double + exact
-        dl in gate mode (semantics per search/ExactPhraseScorer.java and
-        SloppyPhraseScorer.java)."""
+        intersection / sloppy.py greedy windows) and scores it with the
+        weight over every clause (`_freq_scorer`) — float32 in serving
+        mode, double + exact dl in gate mode (semantics per
+        search/ExactPhraseScorer.java and SloppyPhraseScorer.java)."""
         terms = [t for t, _ in clauses]
         pos_df = self._phrase_positions_df(sorted(set(terms)))
         joined = None
@@ -744,13 +465,8 @@ class DistributedSearcher:
                                  "doc_id")
         rels = [rel for _, rel in clauses]
         n_cl = len(clauses)
-        dc, k1d, bd, avgdl_d = self.doc_count, self.k1, self.b, self._avgdl
-        sttf = self.sum_ttf
-        dtype = self.dtype
         st = self._st
-        sim = self.similarity
-        wv, cache, idf_sum_d, lmd_w = self._freq_weights(dfs, terms)
-        mu, lam = self.mu, self.lmjm_lambda
+        score = self._freq_scorer([dfs.get(t, (0, 0)) for t in terms])
 
         from .sloppy import repeat_groups
 
@@ -817,10 +533,7 @@ class DistributedSearcher:
                         ]
                         freqs[r] = sloppy_freq(arrs, rels, slop, groups)
                 keep = freqs > 0
-                sc = _score_freq_batch(
-                    freqs, pdf, sim, dtype, wv, cache, idf_sum_d,
-                    k1d, bd, avgdl_d, lmd_w, mu, lam, dc, sttf,
-                )
+                sc = score(freqs, pdf)
                 out = pd.DataFrame(
                     {"doc_id": pdf["doc_id"].to_numpy()[keep],
                      "score": sc[keep]}
@@ -888,16 +601,12 @@ class DistributedSearcher:
         )
         if self.dtype == "float64":
             agg = agg.join(self._docmap.select("doc_id", "dl"), "doc_id")
-        # scoring weight: summed idf of the DEDUPLICATED scoring terms
+        # scoring weight over the DEDUPLICATED scoring terms
         # (SpanWeight.buildSimWeight term map)
         sterms = sorted(set(span_terms(node, scoring=True, top=True)))
         dfs = self._stats(sterms)
-        dc, k1d, bd, avgdl_d = self.doc_count, self.k1, self.b, self._avgdl
-        sttf = self.sum_ttf
-        dtype, st = self.dtype, self._st
-        sim = self.similarity
-        wv, cache, idf_sum_d, lmd_w = self._freq_weights(dfs, sterms)
-        mu, lam = self.mu, self.lmjm_lambda
+        st = self._st
+        score = self._freq_scorer([dfs.get(t, (0, 0)) for t in sterms])
 
         def score_spans(batches):
             from .spans_batch import (
@@ -928,10 +637,7 @@ class DistributedSearcher:
                     batch_doc_spans(node, n, term_batch)
                 )
                 keep = freqs > 0
-                sc = _score_freq_batch(
-                    freqs, pdf, sim, dtype, wv, cache, idf_sum_d,
-                    k1d, bd, avgdl_d, lmd_w, mu, lam, dc, sttf,
-                )
+                sc = score(freqs, pdf)
                 out = pd.DataFrame(
                     {"doc_id": pdf["doc_id"].to_numpy()[keep],
                      "score": sc[keep]}
@@ -1058,98 +764,10 @@ class DistributedSearcher:
 
     # ---------------------------------------------------------- rewrite
     def rewrite(self, node):
-        """Expand multi-term nodes with DataFrame-native predicates on the
-        term dictionary (SURVEY.md §2.2: terms.filter(startswith / rlike /
-        levenshtein <= n)); fuzzy falls back to the shared OSA helper for
-        exact FuzzyQuery transposition semantics.  Expansions are capped
-        at MAX_CLAUSE_COUNT verified terms (BooleanQuery.java:43) via a
-        limit() pushed into the dictionary scan."""
-        from .multiterm import (
-            MAX_CLAUSE_COUNT, MULTI_TERM_KINDS, TooManyClauses, expand_fuzzy,
-            wildcard_regex,
-        )
-
-        def _capped(terms: list[str]) -> tuple:
-            if len(terms) > MAX_CLAUSE_COUNT:
-                raise TooManyClauses(len(terms))
-            return ("const_or", sorted(terms)) if terms else ("matchnone",)
-
-        if node is None:
-            return None
-        kind = node[0]
-        if kind in MULTI_TERM_KINDS:
-            t = F.col("term")
-            if kind == "prefix":
-                cond = t.startswith(node[1])
-            elif kind == "wildcard":
-                cond = t.rlike(f"^(?:{wildcard_regex(node[1]).pattern})$")
-            elif kind == "regexp":
-                cond = t.rlike(f"^(?:{node[1]})$")
-            elif kind == "range":
-                lo, hi, il, ih = node[1], node[2], node[3], node[4]
-                cond = F.lit(True)
-                if lo is not None:
-                    cond = cond & (t >= lo if il else t > lo)
-                if hi is not None:
-                    cond = cond & (t <= hi if ih else t < hi)
-            else:  # fuzzy: cheap levenshtein prefilter, exact OSA verify
-                # length window first (spell.py:60-90 discipline): OSA
-                # distance >= |len(a) - len(b)|, so terms outside
-                # len(query) +/- max_edits can never match — the cheap
-                # codegen length predicate short-circuits the O(n*m)
-                # levenshtein on the rest of the dictionary instead of
-                # running it on every row (VERDICT r4 item 7).
-                # sound bound: one OSA transposition = two Levenshtein
-                # edits, so Levenshtein(a,b) <= 2*OSA(a,b) always; the
-                # previous `<= max_edits + 1` bound dropped terms at OSA
-                # distance 2 reached via two transpositions (Levenshtein 4)
-                qlen = len(node[1])
-                cand = [
-                    r["term"]
-                    for r in self._text_stats.filter(
-                        (F.length(t) >= qlen - node[2])
-                        & (F.length(t) <= qlen + node[2])
-                        & (F.levenshtein(t, F.lit(node[1]))
-                           <= 2 * node[2])
-                    ).select("term").collect()
-                ]
-                return _capped(expand_fuzzy(cand, node[1], node[2]))
-            terms = [
-                r["term"]
-                for r in self._text_stats.filter(cond)
-                .select("term")
-                .limit(MAX_CLAUSE_COUNT + 1)
-                .collect()
-            ]
-            return _capped(terms)
-        if kind == "span_multi":
-            # SpanMultiTermQueryWrapper -> SpanOr of the expanded terms
-            # (SpanRewriteMethod); reuse the DataFrame-native expansion
-            inner = self.rewrite(node[1])
-            if inner[0] == "matchnone":
-                return ("sor", [])
-            return ("sor", list(inner[1]))
-        if kind == "span_near":
-            return ("span_near", [self.rewrite(c) for c in node[1]],
-                    node[2], node[3])
-        if kind in ("span_first", "span_range"):
-            return (kind, self.rewrite(node[1])) + tuple(node[2:])
-        if kind in ("span_not", "span_containing", "span_within"):
-            return (kind, self.rewrite(node[1]),
-                    self.rewrite(node[2])) + tuple(node[3:])
-        if kind in ("and", "or"):
-            return (kind, [self.rewrite(c) for c in node[1]])
-        if kind == "dismax":
-            return ("dismax", [self.rewrite(c) for c in node[1]], node[2])
-        if kind == "msm_or":
-            return ("msm_or", node[1], [self.rewrite(c) for c in node[2]])
-        if kind in ("andnot", "reqopt", "reqfilter"):
-            return (kind, self.rewrite(node[1]), self.rewrite(node[2]))
-        if kind == "boost":
-            return ("boost", self.rewrite(node[1]), node[2])
-        if kind == "filter0":
-            return ("filter0", self.rewrite(node[1]))
-        return node
+        """The shared rewrite (engine.rewrite): multi-term nodes expand
+        with a pushed-down pyarrow scan of the term dictionary in this
+        process, with no Spark job."""
+        return rewrite(node, self._terms_ds)
 
     # ------------------------------------------------------------- api
     def _hits(self, query, live: bool = True) -> DataFrame:
@@ -1412,95 +1030,6 @@ class DistributedSearcher:
             )
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
-
-
-def _score_freq_batch(freqs, pdf, sim, dtype, wv, cache, idf_sum_d,
-                      k1d, bd, avgdl_d, lmd_w=None, mu=2000.0, lam=0.1,
-                      dc=0, sttf=0):
-    """Shared phrase/span freq->score kernel per similarity and mode:
-    float32 serving (quantized norm byte) or float64 gate (exact dl).
-    `lmd_w` carries the per-clause collection probabilities for the LM
-    family (per-clause scores summed per MultiSimScorer at the shared
-    phrase/span freq); the serving path decodes docLen from the
-    SimilarityBase norm byte (1/(f*f)) and keeps LocalSearcher's
-    per-term-float32 sum discipline, the gate path is all-double with
-    exact dl so an ANSI-SQL twin is bit-stable."""
-    classic = sim == "classic"
-    from .similarities import SIMBASE, gate_scores, serving_scores
-
-    if sim in SIMBASE:
-        # lmd_w slot carries the per-clause (df, ttf) pairs
-        if dtype == "float32":
-            norms = pdf["norm"].to_numpy().astype(np.uint8)
-            avgdl_f = (
-                np.float32(sttf / float(dc))
-                if sttf > 0 and dc > 0 else np.float32(1.0)
-            )
-            return serving_scores(
-                sim, freqs.astype(np.float32), norms, lmd_w, dc, sttf,
-                avgdl_f,
-            )
-        return gate_scores(
-            sim, freqs, pdf["dl"].to_numpy().astype(np.float64), lmd_w,
-            dc, sttf,
-        )
-    if lmd_w is not None:
-        lmjm = sim == "lmjm"
-        if dtype == "float32":
-            # SimilarityBase docLen decode == BM25's NORM_TABLE
-            dl = NORM_TABLE[pdf["norm"].to_numpy().astype(np.uint8)].astype(
-                np.float64
-            )
-            fq = freqs.astype(np.float64)
-            dnorm = np.log(mu / (dl + mu))
-            total = np.zeros(fq.size, dtype=np.float32)
-            for pc in lmd_w:
-                if lmjm:
-                    s = np.log1p(
-                        ((1.0 - lam) * fq / dl) / (lam * float(pc))
-                    ).astype(np.float32)
-                    total = (total + s).astype(np.float32)
-                    continue
-                s = (np.log1p(fq / (mu * float(pc))) + dnorm).astype(
-                    np.float32
-                )
-                total = (
-                    total + np.maximum(s, np.float32(0.0))
-                ).astype(np.float32)
-            return total
-        dl = pdf["dl"].to_numpy().astype(np.float64)
-        fq = freqs.astype(np.float64)
-        dnorm = np.log(mu / (dl + mu))
-        total_d = np.zeros(fq.size, dtype=np.float64)
-        for pc in lmd_w:
-            if lmjm:
-                total_d += np.log(
-                    1.0 + ((1.0 - lam) * fq / dl) / (lam * float(pc))
-                )
-            else:
-                total_d += np.maximum(
-                    np.log(1.0 + fq / (mu * float(pc))) + dnorm, 0.0
-                )
-        return total_d
-    if dtype == "float32":
-        if classic:
-            from ..oracle.smallfloat import byte315_to_float
-
-            cnorm = byte315_to_float(
-                pdf["norm"].to_numpy().astype(np.uint8)
-            )
-            raw = (np.sqrt(freqs, dtype=np.float32) * wv).astype(np.float32)
-            return (raw * cnorm).astype(np.float32)
-        norms = pdf["norm"].to_numpy().astype(np.uint8)
-        return (wv * freqs / (freqs + cache[norms])).astype(np.float32)
-    dl = pdf["dl"].to_numpy().astype(np.float64)
-    fq = freqs.astype(np.float64)
-    if classic:
-        return np.sqrt(fq) * idf_sum_d / np.sqrt(dl)
-    return (
-        idf_sum_d * (k1d + 1.0) * fq
-        / (fq + k1d * ((1.0 - bd) + bd * dl / avgdl_d))
-    )
 
 
 def _sql_str(s: str) -> str:

@@ -3,10 +3,10 @@ shard-server analogue of IndexSearcher.search (SURVEY.md §3.2).
 
 Reads the parquet index directly through pyarrow with bucket partition
 pruning + term predicate pushdown, decodes posting blocks with the numpy
-codec, and scores BM25 with exactly Lucene's float discipline:
+codec, and scores with exactly Lucene's float discipline:
 
-- per-term float32 scores via the 256-entry norm cache
-  (BM25Similarity.java:213-217, 229-254),
+- per-term float32 scores from the searcher's Similarity object
+  (query/similarities.py — BM25 by default),
 - boolean nodes sum child scores in double, cast to float32
   (DisjunctionSumScorer.java:36-41, ConjunctionScorer.java:54-58),
 - top-k tie-break (score desc, docID asc) (HitQueue.java:76-81).
@@ -20,8 +20,9 @@ Physical optimizations (SURVEY.md §4.2):
   snapshot has no WAND; this is our addition per the north star):
   block b of term t is skipped when
       block_ub(t, b) + sum(global_max(t') for t' != t) < theta
-  with block_ub derived from the stored (max_tf, min_ntab) metadata and
-  the CURRENT global avgdl (sound under NRT segment appends)
+  with block_ub the Similarity's ``block_bound`` over the stored
+  (max_tf, min_ntab) metadata and the CURRENT global stats (sound under
+  NRT segment appends); only ``prunable`` models take these paths,
   where theta is the k-th best fully-scored candidate so far.  Skipped
   blocks are decoded on demand if one of their docs survives via another
   term, so returned scores are always complete and exact.
@@ -29,6 +30,7 @@ Physical optimizations (SURVEY.md §4.2):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -39,13 +41,15 @@ from ..index.builder import term_bucket
 from ..index.codec import decode_block
 from ..oracle.smallfloat import NORM_TABLE
 from .parser import parse_query
+from .similarities import make_similarity
 
 
 class _TermPostings:
     """Decoded-on-demand posting list of one term: sorted docs, tfs, norms,
     plus per-block metadata for range skipping."""
 
-    __slots__ = ("term", "n_docs", "ttf", "blocks", "_decoded", "_full")
+    __slots__ = ("term", "n_docs", "ttf", "clause", "blocks", "_decoded",
+                 "_full")
 
     def __init__(self, term: str, block_rows: list[dict]):
         self.term = term
@@ -59,6 +63,8 @@ class _TermPostings:
         self.n_docs = sum(b["doc_count"] for b in self.blocks)
         #: collection totalTermFreq, rolled up from block metadata
         self.ttf = sum(int(b.get("sum_tf") or 0) for b in self.blocks)
+        #: the (docFreq, totalTermFreq) clause a Similarity weighs
+        self.clause = (self.n_docs, self.ttf)
         self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._full: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
 
@@ -66,6 +72,13 @@ class _TermPostings:
         fd = np.array([b["first_doc"] for b in self.blocks], dtype=np.int64)
         ld = np.array([b["last_doc"] for b in self.blocks], dtype=np.int64)
         return fd, ld
+
+    def block_maxes(self) -> tuple[np.ndarray, np.ndarray]:
+        """Per-block (max_tf, min_ntab): the block-max metadata a
+        Similarity's ``block_bound`` reads."""
+        mt = np.array([b["max_tf"] for b in self.blocks], dtype=np.float64)
+        mn = np.array([b["min_ntab"] for b in self.blocks], dtype=np.float64)
+        return mt, mn
 
     def decode(self, idx: int):
         got = self._decoded.get(idx)
@@ -152,47 +165,24 @@ class _TermPostings:
 class LocalSearcher:
     """Serve top-k boolean queries from a built index directory.
 
-    `similarity` picks the scoring model at query time (both decode the
-    same floatToByte315 norm byte, so no reindex is needed — exactly the
-    reference's IndexSearcher.setSimilarity):
-    - "bm25" (default): BM25Similarity, parameterized k1/b;
-    - "classic": ClassicSimilarity (TF-IDF) —
-      score = sqrt(freq) * idf * byte315ToFloat(norm) with
-      idf = ln((docCount+1)/(docFreq+1)) + 1
-      (similarities/ClassicSimilarity.java:50-79,
-      TFIDFSimilarity.java:98-110 raw = tf(freq)*weight, then * norm);
-    - "lmd": LMDirichletSimilarity (Bayesian Dirichlet smoothing,
-      similarities/LMDirichletSimilarity.java:66-71) — per-term
-      score = max(0, ln(1 + freq/(mu*pc)) + ln(mu/(docLen+mu))) with
-      pc = (totalTermFreq+1)/(sumTotalTermFreq+1) float32
-      (LMSimilarity.DefaultCollectionModel) and docLen decoded from the
-      SimilarityBase norm byte (1/(f*f)); multi-term weights sum the
-      per-term scores at the shared freq
-      (MultiSimilarity.MultiSimScorer).  LMD scores can be exactly 0
-      for a matching doc, so the score-nonzero-derived dense/pruned
-      fast paths are bypassed (the exhaustive evaluator is always
-      used) — correct, not the perf headline;
-    - "lmjm": LMJelinekMercerSimilarity (lambda mixing,
-      LMJelinekMercerSimilarity.java:54-59);
-    - "dfr" / "ib" / "dfi" / "ax" / "bool": the SimilarityBase family
-      round 4 added — DFR I(n)L2, IB LL-D2, DFI(ChiSquared),
-      AxiomaticF2EXP, BooleanSimilarity; formulas, float discipline,
-      and reference citations in query/similarities.py.  Like lmd they
-      run the exhaustive evaluator (see _fastpaths).
+    `similarity` picks the scoring model at query time — "bm25"
+    (default, k1/b from the index params), "classic", "lmd" (`mu`),
+    "lmjm" (`lmjm_lambda`), "dfr", "ib", "dfi", "ax" or "bool".  Every
+    model decodes the same floatToByte315 norm byte, so no reindex is
+    needed (the reference's IndexSearcher.setSimilarity).  Formulas,
+    float discipline and citations live in query/similarities.py; the
+    block-max, dense-table and threshold fast paths run only for models
+    whose Similarity is ``prunable``, the rest take the exhaustive
+    evaluator.
     """
 
     def __init__(self, index_dir: str, pruning: bool = True,
                  similarity: str = "bm25", mu: float = 2000.0,
                  lmjm_lambda: float = 0.1,
                  dense_budget_mb: int | None = None):
-        from .similarities import SIMBASE
-
-        assert similarity in ("bm25", "classic", "lmd", "lmjm") + SIMBASE
         self.index_dir = index_dir
         self.pruning = pruning
         self.similarity = similarity
-        self.mu = float(mu)
-        self.lmjm_lambda = float(lmjm_lambda)
         # warm-path memory budget -> dense structure bounds (SCALE.md
         # "Warm-path memory budget"): maxDoc cap at 16 B/doc, and at
         # most half the budget for the hot-term table cache (5 B/doc
@@ -203,15 +193,6 @@ class LocalSearcher:
             ))
         self.dense_budget_bytes = dense_budget_mb << 20
         self._DENSE_MAX_DOC = max(1, self.dense_budget_bytes // 16)
-        #: fast paths (block-max pruning, dense tables, TA, topcand)
-        #: assume score > 0 for every present posting AND a scalar
-        #: per-term weight with a block upper-bound formula — true for
-        #: bm25/classic/lmjm; lmd and dfi can score a present posting
-        #: exactly 0, and the SimilarityBase family (dfr/ib/dfi/ax/
-        #: bool, similarities.py) carries tuple weights, so all of
-        #: those take the exhaustive evaluator (correct, not the
-        #: serving-latency headline)
-        self._fastpaths = similarity in ("bm25", "classic", "lmjm")
         with open(os.path.join(index_dir, "_manifest.json")) as f:
             m = json.load(f)
         self.params = m["params"]
@@ -223,8 +204,6 @@ class LocalSearcher:
         self.analyzer_opts = AnalyzerOptions.from_manifest(
             self.params.get("analyzer")
         )
-        self.k1 = np.float32(self.params.get("k1", 1.2))
-        self.b = np.float32(self.params.get("b", 0.75))
         from ..index.builder import read_all_field_stats
 
         self.fstats = read_all_field_stats(index_dir)
@@ -234,15 +213,14 @@ class LocalSearcher:
         self.doc_count = int(fs["doc_count"] or 0)
         self.sum_ttf = int(fs["sum_total_term_freq"] or 0)
         self.max_doc = int(fs["max_doc"] or 0)
-        self.avgdl = (
-            np.float32(self.sum_ttf / float(self.doc_count))
-            if self.sum_ttf > 0
-            else np.float32(1.0)
+        #: the scoring model over one field's stats; `sim` is the text
+        #: field's, keyword fields get theirs from `_field_sim`
+        self._make_sim = functools.partial(
+            make_similarity, similarity, k1=self.params.get("k1", 1.2),
+            b=self.params.get("b", 0.75), mu=mu, lmjm_lambda=lmjm_lambda,
         )
-        self.cache = (
-            self.k1
-            * ((np.float32(1.0) - self.b) + self.b * NORM_TABLE / self.avgdl)
-        ).astype(np.float32)
+        self.sim = self._make_sim(self.doc_count, self.sum_ttf)
+        self._field_sims = {"text": self.sim}
         self._postings_ds = pads.dataset(
             os.path.join(index_dir, "postings"), format="parquet",
             partitioning="hive",
@@ -286,156 +264,16 @@ class LocalSearcher:
             self._term_cache[(f, t)] = _TermPostings(t, by_key[(f, t)])
 
     # ---------------------------------------------------------- scoring
-    def _idf(self, df: int) -> np.float32:
-        """Per-similarity idf: BM25Similarity.idf vs
-        ClassicSimilarity.idf (log((docCount+1)/(docFreq+1)) + 1)."""
-        if self.similarity == "classic":
-            return np.float32(
-                np.log((self.doc_count + 1) / float(df + 1)) + 1.0
-            )
-        return np.float32(
-            np.log(1 + (self.doc_count - df + 0.5) / (df + 0.5))
-        )
-
-    def _weight_value(self, df: int) -> np.float32:
-        idf = self._idf(df)
-        if self.similarity == "classic":
-            return idf  # IDFStats.queryWeight = boost * idf
-        return np.float32(idf * (self.k1 + np.float32(1.0)))
-
-    def _wv_from_idf_sum(self, idf_sum: np.float32) -> np.float32:
-        if self.similarity == "classic":
-            return idf_sum
-        return np.float32(idf_sum * (self.k1 + np.float32(1.0)))
-
-    def _term_wv(self, tp: "_TermPostings"):
-        """Per-leaf weight for the scoring kernel: the LM family
-        (lmd/lmjm) needs the term's collection probability, the
-        SimilarityBase family (dfr/ib/dfi/ax/bool) its (df, ttf) stats
-        pair, bm25/classic the idf-derived wv."""
-        if self.similarity in ("lmd", "lmjm"):
-            return self._lmd_pc(tp.ttf)
-        from .similarities import SIMBASE
-
-        if self.similarity in SIMBASE:
-            return [(tp.n_docs, tp.ttf)]
-        return self._weight_value(tp.n_docs)
-
-    def _multi_wv(self, tps: list["_TermPostings"]):
-        """Weight of a multi-term (phrase/span) node: the LM family
-        carries the per-clause pc array (duplicates included, like the
-        termStats[] handed to Similarity.computeWeight); bm25/classic
-        the idf sum."""
-        if self.similarity in ("lmd", "lmjm"):
-            return np.array([self._lmd_pc(tp.ttf) for tp in tps],
-                            dtype=np.float64)
-        from .similarities import SIMBASE
-
-        if self.similarity in SIMBASE:
-            return [(tp.n_docs, tp.ttf) for tp in tps]
-        idf_sum = np.float32(0.0)
-        for tp in tps:
-            idf_sum = np.float32(idf_sum + self._idf(tp.n_docs))
-        return self._wv_from_idf_sum(idf_sum)
-
-    @property
-    def _lmd_dl(self) -> np.ndarray:
-        """SimilarityBase.NORM_TABLE (SimilarityBase.java:220-227):
-        decodeNormValue(byte) = 1/(f*f) with f = byte315ToFloat(byte),
-        entry 0 patched to 1/table[255] (otherwise inf)."""
-        from ..oracle.smallfloat import NORM_TABLE
-
-        # identical construction to BM25's NORM_TABLE (1/f^2, entry 0
-        # patched to 1/table[255]) — reuse it
-        return NORM_TABLE
-
-    def _lmd_pc(self, ttf: int) -> np.float32:
-        """LMSimilarity.DefaultCollectionModel.computeProbability:
-        (totalTermFreq+1F)/(numberOfFieldTokens+1F) — FLOAT division."""
-        return np.float32(
-            np.float32(ttf + 1.0) / np.float32(self.sum_ttf + 1.0)
-        )
-
-    def _lmd_score(self, freq: np.ndarray, dl: np.ndarray,
-                   pcs) -> np.ndarray:
-        """LMDirichletSimilarity.score for float64 freq/docLen arrays:
-        per term pc, (float)(ln(1+freq/(mu*pc)) + ln(mu/(docLen+mu)))
-        clipped at 0 (SimilarityBase.score returns 0 for negative);
-        multi-term trees sum the clipped per-term float32 scores in
-        order (MultiSimilarity.MultiSimScorer.score)."""
-        mu = self.mu
-        dnorm = np.log(mu / (dl + mu))
-        pcs = np.atleast_1d(np.asarray(pcs, dtype=np.float64))
-        total = np.zeros(freq.size, dtype=np.float32)
-        for pc in pcs:
-            s = (np.log1p(freq / (mu * float(pc))) + dnorm).astype(
-                np.float32
-            )
-            total = (
-                total + np.maximum(s, np.float32(0.0))
-            ).astype(np.float32)
-        return total
-
-    def _lmjm_score(self, freq: np.ndarray, dl: np.ndarray,
-                    pcs) -> np.ndarray:
-        """LMJelinekMercerSimilarity.score
-        (LMJelinekMercerSimilarity.java:54-59): per term pc,
-        (float) ln(1 + ((1-lambda)*freq/docLen) / (lambda*pc)) —
-        strictly positive for any present posting, so every fast path
-        (block pruning, dense tables, TA, topcand) stays on; multi-term
-        trees sum the per-term float32 scores (MultiSimScorer)."""
-        lam = self.lmjm_lambda
-        pcs = np.atleast_1d(np.asarray(pcs, dtype=np.float64))
-        total = np.zeros(freq.size, dtype=np.float32)
-        for pc in pcs:
-            s = np.log1p(
-                ((1.0 - lam) * freq / dl) / (lam * float(pc))
-            ).astype(np.float32)
-            total = (total + s).astype(np.float32)
-        return total
-
-    @property
-    def _classic_norms(self) -> np.ndarray:
-        """TFIDFSimilarity NORM_TABLE: byte315ToFloat per byte."""
-        got = getattr(self, "_classic_norm_table", None)
+    def _field_sim(self, field: str):
+        """The searcher's model over a keyword field's own collection
+        stats (index/FieldInfos.java — stats are per field)."""
+        got = self._field_sims.get(field)
         if got is None:
-            from ..oracle.smallfloat import byte315_to_float
-
-            got = self._classic_norm_table = byte315_to_float(
-                np.arange(256, dtype=np.uint8)
+            fs = self.fstats.get(field, {})
+            got = self._field_sims[field] = self._make_sim(
+                fs.get("doc_count"), fs.get("sum_total_term_freq")
             )
         return got
-
-    def _score_freqs(self, freq: np.ndarray, norms: np.ndarray,
-                     wv: np.float32) -> np.ndarray:
-        """score(doc, freq) for float32 freqs + norm bytes: the shared
-        term/phrase/span scoring kernel, per similarity.  For "lmd",
-        `wv` carries the per-term collection probability (scalar for a
-        term, array for multi-term phrase/span weights)."""
-        from .similarities import SIMBASE, serving_scores
-
-        if self.similarity in SIMBASE:
-            # wv is the per-clause (df, ttf) list from _term_wv/_multi_wv
-            return serving_scores(self.similarity, freq, norms, wv,
-                                  self.doc_count, self.sum_ttf, self.avgdl)
-        if self.similarity == "lmd":
-            return self._lmd_score(
-                freq.astype(np.float64),
-                self._lmd_dl[norms].astype(np.float64), wv,
-            )
-        if self.similarity == "lmjm":
-            return self._lmjm_score(
-                freq.astype(np.float64),
-                self._lmd_dl[norms].astype(np.float64), wv,
-            )
-        if self.similarity == "classic":
-            raw = (np.sqrt(freq, dtype=np.float32) * wv).astype(np.float32)
-            return (raw * self._classic_norms[norms]).astype(np.float32)
-        return (wv * freq / (freq + self.cache[norms])).astype(np.float32)
-
-    def _score_arrays(self, tfs: np.ndarray, norms: np.ndarray,
-                      wv: np.float32) -> np.ndarray:
-        return self._score_freqs(tfs.astype(np.float32), norms, wv)
 
     def _term_full(self, term: str) -> tuple[np.ndarray, np.ndarray]:
         # full-list scores are a pure function of the searcher's fixed
@@ -449,8 +287,8 @@ class LocalSearcher:
             return hit
         tp = self._tp(term)
         docs, tfs, norms = tp.decode_all()
-        wv = self._term_wv(tp)
-        out = (docs, self._score_arrays(tfs, norms, wv))
+        out = (docs, self.sim.score(self.sim.weight([tp.clause]),
+                                    tfs.astype(np.float32), norms))
         got[term] = out
         return out
 
@@ -478,7 +316,7 @@ class LocalSearcher:
         hi = np.searchsorted(candidates, ld, side="right")
         idxs = np.flatnonzero(hi > lo)
         if (idxs.size * 4 >= len(tp.blocks)
-                and self._fastpaths
+                and self.sim.prunable
                 and tp.n_docs * self._DENSE_CACHE_FRAC
                 >= self.max_doc + 1
                 and self.max_doc + 1 <= self._DENSE_MAX_DOC):
@@ -500,8 +338,10 @@ class LocalSearcher:
         if docs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         mask = _sorted_isin(docs, candidates)
-        wv = self._term_wv(tp)
-        return docs[mask], self._score_arrays(tfs[mask], norms[mask], wv)
+        return docs[mask], self.sim.score(
+            self.sim.weight([tp.clause]), tfs[mask].astype(np.float32),
+            norms[mask],
+        )
 
     # ---------------------------------------------------------- rewrite
     def _terms_dataset(self):
@@ -517,60 +357,7 @@ class LocalSearcher:
         return self._terms_ds
 
     def rewrite(self, node):
-        """Fixpoint-free single-pass rewrite (IndexSearcher.rewrite
-        analogue): expand multi-term nodes against the term dictionary
-        into constant-score unions (MultiTermQueryConstantScoreWrapper);
-        raises TooManyClauses past 1024 expanded terms
-        (BooleanQuery.java:43)."""
-        from .multiterm import MULTI_TERM_KINDS, expand_from_dataset
-
-        if node is None:
-            return None
-        kind = node[0]
-        if kind in MULTI_TERM_KINDS:
-            terms = expand_from_dataset(
-                node, self._terms_dataset(), field="text"
-            )
-            if not terms:
-                return ("matchnone",)
-            return ("const_or", terms)
-        if kind == "span_multi":
-            # SpanMultiTermQueryWrapper: expand the wrapped multi-term
-            # query against the dictionary into a SpanOr of term spans
-            # (spans/SpanMultiTermQueryWrapper.java SpanRewriteMethod);
-            # an empty expansion is a SpanOr of nothing (matches no doc)
-            terms = expand_from_dataset(
-                node[1], self._terms_dataset(), field="text"
-            )
-            return ("sor", sorted(terms))
-        if kind == "span_near":
-            return ("span_near", [self.rewrite(c) for c in node[1]],
-                    node[2], node[3])
-        if kind in ("span_first", "span_range"):
-            return (kind, self.rewrite(node[1])) + tuple(node[2:])
-        if kind in ("span_not", "span_containing", "span_within"):
-            return (kind, self.rewrite(node[1]),
-                    self.rewrite(node[2])) + tuple(node[3:])
-        if kind == "synonym":
-            # SynonymQuery.Builder sorts + dedupes its terms
-            # (search/SynonymQuery.java constructor); one term left
-            # degenerates to a plain TermQuery
-            terms = sorted(set(node[1]))
-            return ("term", terms[0]) if len(terms) == 1 else \
-                ("synonym", terms)
-        if kind in ("and", "or"):
-            return (kind, [self.rewrite(c) for c in node[1]])
-        if kind == "dismax":
-            return ("dismax", [self.rewrite(c) for c in node[1]], node[2])
-        if kind == "msm_or":
-            return ("msm_or", node[1], [self.rewrite(c) for c in node[2]])
-        if kind in ("andnot", "reqopt", "reqfilter"):
-            return (kind, self.rewrite(node[1]), self.rewrite(node[2]))
-        if kind == "boost":
-            return ("boost", self.rewrite(node[1]), node[2])
-        if kind == "filter0":
-            return ("filter0", self.rewrite(node[1]))
-        return node
+        return rewrite(node, self._terms_dataset())
 
     # ------------------------------------------------------------- eval
     def _collect_terms(self, node) -> list[tuple[str, str]]:
@@ -733,9 +520,8 @@ class LocalSearcher:
         if cand.size == 0:
             return empty
         # weight over clauses (duplicates included, like termStats[])
-        wv = self._multi_wv(tps)
-        scores = self._score_freqs(freqs, norms0, wv)
-        return cand, scores
+        w = self.sim.weight([tp.clause for tp in tps])
+        return cand, self.sim.score(w, freqs, norms0)
 
     def _eval(self, node) -> tuple[np.ndarray, np.ndarray]:
         # per-search memo: composite subtrees are evaluated once even
@@ -751,69 +537,13 @@ class LocalSearcher:
 
     def _fterm_scores(self, field: str, term: str
                       ) -> tuple[np.ndarray, np.ndarray]:
-        """Keyword-field TermQuery: per-FIELD collection stats for idf
-        (index/FieldInfos.java — stats are per field), omitNorms scoring
-        (StringField): BM25DocScorer with norms == null uses k1 as the
-        norm value (BM25Similarity.java:229-254), so
-        score = idf * (k1+1) * tf / (tf + k1) with tf = 1."""
+        """Keyword-field TermQuery: the model over the FIELD's
+        collection stats, omitNorms scoring (StringField norms == null)."""
         tp = self._tp(term, field)
         docs, tfs, _ = tp.decode_all()
-        if docs.size == 0:
-            return docs, np.empty(0, np.float32)
-        dc_f = int(self.fstats.get(field, {}).get("doc_count", 0))
-        df = tp.n_docs
-        freq = tfs.astype(np.float32)
-        from .similarities import SIMBASE, serving_scores
-
-        if self.similarity in SIMBASE:
-            # norms == null -> docLen = 1F (SimilarityBase.simScorer);
-            # stats over the FIELD (FieldInfos discipline); per
-            # fillBasicStats (SimilarityBase.java:100-140): tokens =
-            # sumTotalTermFreq, avgdl = (float) tokens / docs — or
-            # tokens = docFreq, avgdl = 1 when sttf <= 0
-            sttf_f = int(
-                self.fstats.get(field, {}).get("sum_total_term_freq", 0)
-                or 0
-            )
-            if sttf_f > 0 and dc_f > 0:
-                tokens_f, avgdl_f = sttf_f, np.float32(sttf_f / float(dc_f))
-            else:
-                tokens_f, avgdl_f = df, np.float32(1.0)
-            return docs, serving_scores(
-                self.similarity, freq, None, [(df, tp.ttf)], dc_f,
-                tokens_f, avgdl_f, dl=np.ones(freq.size, dtype=np.float32),
-            )
-        if self.similarity in ("lmd", "lmjm"):
-            # norms == null -> docLen = 1F (SimilarityBase.simScorer);
-            # pc over the FIELD's token count (per-field stats)
-            sttf_f = int(
-                self.fstats.get(field, {}).get("sum_total_term_freq", 0)
-                or 0
-            )
-            pc = np.float32(
-                np.float32(tp.ttf + 1.0) / np.float32(sttf_f + 1.0)
-            )
-            if self.similarity == "lmjm":
-                lam = self.lmjm_lambda
-                s = np.log1p(
-                    ((1.0 - lam) * freq.astype(np.float64))
-                    / (lam * float(pc))
-                ).astype(np.float32)
-                return docs, s
-            s = (
-                np.log1p(freq.astype(np.float64) / (self.mu * float(pc)))
-                + np.log(self.mu / (1.0 + self.mu))
-            ).astype(np.float32)
-            return docs, np.maximum(s, np.float32(0.0))
-        if self.similarity == "classic":
-            # TFIDFSimScorer with norms == null returns raw (no norm)
-            idf = np.float32(np.log((dc_f + 1) / float(df + 1)) + 1.0)
-            return docs, (np.sqrt(freq, dtype=np.float32) * idf).astype(
-                np.float32
-            )
-        idf = np.float32(np.log(1 + (dc_f - df + 0.5) / (df + 0.5)))
-        wv = np.float32(idf * (self.k1 + np.float32(1.0)))
-        return docs, (wv * freq / (freq + self.k1)).astype(np.float32)
+        sim = self._field_sim(field)
+        return docs, sim.score(sim.weight([tp.clause]),
+                               tfs.astype(np.float32), None)
 
     def _ts_docs(self, node) -> np.ndarray:
         """Sorted docIDs whose `ts` lies in the range — the
@@ -1039,24 +769,11 @@ class LocalSearcher:
         cand, freqs, normsb = cand[mask], freqs[mask], normsb[mask]
         if cand.size == 0:
             return empty
-        wv = self._multi_wv(
-            [self._tp(t)
+        w = self.sim.weight(
+            [self._tp(t).clause
              for t in sorted(set(span_terms(node, scoring=True, top=True)))]
         )
-        scores = self._score_freqs(freqs, normsb, wv)
-        return cand, scores
-
-    def _pseudo_wv(self, df: int, ttf: int):
-        """Scoring weight from PSEUDO term stats (SynonymQuery.java:
-        134-147: docFreq = max over terms, totalTermFreq = sum) —
-        the per-similarity shape of _term_wv."""
-        if self.similarity in ("lmd", "lmjm"):
-            return self._lmd_pc(ttf)
-        from .similarities import SIMBASE
-
-        if self.similarity in SIMBASE:
-            return [(df, ttf)]
-        return self._weight_value(df)
+        return cand, self.sim.score(w, freqs, normsb)
 
     def _synonym_eval(self, terms: list[str]
                       ) -> tuple[np.ndarray, np.ndarray]:
@@ -1078,9 +795,8 @@ class LocalSearcher:
             idx = np.searchsorted(docs_u, d)
             np.add.at(freq, idx, tfs.astype(np.float32))
             norms[idx] = nb
-        return docs_u, self._score_freqs(
-            freq, norms, self._pseudo_wv(df, ttf)
-        )
+        return docs_u, self.sim.score(self.sim.weight([(df, ttf)]), freq,
+                                      norms)
 
     def _eval_inner(self, node) -> tuple[np.ndarray, np.ndarray]:
         kind = node[0]
@@ -1183,7 +899,7 @@ class LocalSearcher:
             # lookups touch only O(min df) postings, so it stays the
             # winner; cold term lists also keep the leapfrog, whose
             # block-range skipping avoids decoding non-candidate blocks.
-            if self.max_doc + 1 <= self._DENSE_MAX_DOC and self._fastpaths:
+            if self.max_doc + 1 <= self._DENSE_MAX_DOC and self.sim.prunable:
                 tnames = [t for f, t in self._collect_terms(node)
                           if f == "text"]
                 costs = [self._cost_of(c) for c in children]
@@ -1386,7 +1102,7 @@ class LocalSearcher:
         dense table for a cold high-df composite child would force a
         full-postings decode and defeat block pruning on first-touch
         queries."""
-        if self.max_doc + 1 <= self._DENSE_MAX_DOC and self._fastpaths:
+        if self.max_doc + 1 <= self._DENSE_MAX_DOC and self.sim.prunable:
             tnames = [t for f, t in self._collect_terms(node) if f == "text"]
             if not tnames or not self._mostly_undecoded(tnames):
                 m = self._dense_mask(node)
@@ -1538,7 +1254,7 @@ class LocalSearcher:
         consume the leaf lists in batches, evaluate every newly seen doc
         exactly (dense mask + clause-order gathered sums), and stop once
         the k-th collected score strictly beats the sum of the lists'
-        next-unseen scores (+1e-6 float guard, as in _block_ubs).  The
+        next-unseen scores (+1e-6 float guard, as in block_bound).  The
         bound is sound for any tree of non-negative contributions: an
         unseen doc's score is at most the sum of its per-leaf scores,
         each bounded by that leaf's cursor entry.  Returns None when the
@@ -1663,34 +1379,6 @@ class LocalSearcher:
         cached = sum(len(self._tp(t)._decoded) for t in terms)
         return total > 0 and cached < total // 2
 
-    def _block_ubs(self, tp: "_TermPostings", wv: float) -> np.ndarray:
-        """Sound per-block score upper bounds from (max_tf, min_ntab):
-        BM25: score <= wv * mt / (mt + k1*((1-b) + b*min_ntab/avgdl));
-        classic: score <= sqrt(mt) * wv / sqrt(min_ntab) (the classic
-        norm is byte315ToFloat(b) = 1/sqrt(BM25 table value), monotone
-        decreasing in ntab, so min_ntab gives the max norm).  Both
-        stored values are avgdl/idf-independent so the bound holds under
-        NRT stat drift; the 1+1e-6 guard covers float32-vs-float64
-        rounding of true scores against the float64 bound."""
-        mt = np.array([b["max_tf"] for b in tp.blocks], dtype=np.float64)
-        mn = np.array([b["min_ntab"] for b in tp.blocks], dtype=np.float64)
-        if self.similarity == "classic":
-            with np.errstate(divide="ignore"):
-                ub = np.sqrt(mt) * wv / np.sqrt(mn)
-            return ub * (1.0 + 1e-6)
-        if self.similarity == "lmjm":
-            # score rises with tf and falls with docLen (min_ntab IS
-            # the block's min decoded docLen — same 1/f^2 table); wv
-            # carries the term's pc
-            lam = self.lmjm_lambda
-            with np.errstate(divide="ignore"):
-                ub = np.log1p(((1.0 - lam) * mt / mn) / (lam * float(wv)))
-            return ub * (1.0 + 1e-6)
-        c = float(self.k1) * (
-            (1.0 - float(self.b)) + float(self.b) * mn / float(self.avgdl)
-        )
-        return wv * mt / (mt + c) * (1.0 + 1e-6)
-
     def _masked_kth(self, docs_list, scores_list, k, after) -> float:
         """theta = k-th best COLLECTABLE score so far: cursor-passing
         (searchAfter pages compete only past the cursor,
@@ -1716,8 +1404,8 @@ class LocalSearcher:
         (the single-scorer analogue of BlockMaxWAND; cf. Lucene 8's
         block-max TopScoreDocCollector early exit)."""
         tp = self._tp(term)
-        wv = self._term_wv(tp)
-        ubs = self._block_ubs(tp, float(wv))
+        w = self.sim.weight([tp.clause])
+        ubs = self.sim.block_bound(w, *tp.block_maxes())
         order = np.argsort(-ubs, kind="stable")
         kept_d: list[np.ndarray] = []
         kept_s: list[np.ndarray] = []
@@ -1738,9 +1426,9 @@ class LocalSearcher:
                 # beats per-block python for the rest — exhaustive is
                 # exact, so this is purely a cost choice
                 docs, tfs, norms = tp.decode_all()
-                return docs, self._score_arrays(tfs, norms, wv)
+                return docs, self.sim.score(w, tfs.astype(np.float32), norms)
             docs, tfs, norms = tp.decode(int(bi))
-            scs = self._score_arrays(tfs, norms, wv)
+            scs = self.sim.score(w, tfs.astype(np.float32), norms)
             kept_d.append(docs)
             kept_s.append(scs)
             cand = scs
@@ -1762,16 +1450,10 @@ class LocalSearcher:
                           ) -> tuple[np.ndarray, np.ndarray]:
         """Block-max pruned evaluation of a flat OR of terms."""
         tps = [self._tp(t) for t in terms]
-        wvs = np.array(
-            [self._term_wv(tp) for tp in tps], dtype=np.float64
-        )
-        gmax = np.array(
-            [
-                self._block_ubs(tp, wvs[i]).max() if tp.blocks else 0.0
-                for i, tp in enumerate(tps)
-            ],
-            dtype=np.float64,
-        )
+        ubs = [self.sim.block_bound(self.sim.weight([tp.clause]),
+                                    *tp.block_maxes()) for tp in tps]
+        gmax = np.array([u.max() if u.size else 0.0 for u in ubs],
+                        dtype=np.float64)
         # establish theta from the highest-impact term, fully scored with
         # complete (all-term) scores for its docs
         seed = int(np.argmax(gmax))
@@ -1784,7 +1466,7 @@ class LocalSearcher:
             if i == seed:
                 continue
             others = float(gmax.sum() - gmax[i])
-            ub = self._block_ubs(tp, wvs[i]) + others
+            ub = ubs[i] + others
             live = np.flatnonzero(ub >= theta) if theta > -np.inf else np.arange(len(tp.blocks))
             docs, _, _ = tp.decode_blocks(live)
             fresh = np.setdiff1d(docs, np.concatenate(kept_docs), assume_unique=False)
@@ -1842,22 +1524,9 @@ class LocalSearcher:
         out: dict = {"match": val is not None, "value": val}
         if kind == "term":
             tp = self._tp(node[1])
-            df = tp.n_docs
-            idf = float(self._idf(df))
-            sim = {
-                "classic": "ClassicSimilarity",
-                "lmd": "LMDirichletSimilarity",
-                "lmjm": "LMJelinekMercerSimilarity",
-                "dfr": "DFRSimilarity(I(n)L2)",
-                "ib": "IBSimilarity(LL-D2)",
-                "dfi": "DFISimilarity(ChiSquared)",
-                "ax": "AxiomaticF2EXP",
-                "bool": "BooleanSimilarity",
-            }.get(self.similarity, "BM25Similarity")
-            out["description"] = f"weight(text:{node[1]}) [{sim}]"
-            detail = {"docFreq": df, "docCount": self.doc_count, "idf": idf,
-                      "k1": float(self.k1), "b": float(self.b),
-                      "avgdl": float(self.avgdl)}
+            out["description"] = f"weight(text:{node[1]}) [{self.sim.name}]"
+            detail = {"docFreq": tp.n_docs, "docCount": self.doc_count,
+                      **self.sim.explain(tp.clause)}
             docs, tfs, norms = tp.decode_all()
             i = int(np.searchsorted(docs, doc))
             if i < docs.size and docs[i] == doc:
@@ -1868,12 +1537,14 @@ class LocalSearcher:
             return out
         if kind == "fterm":
             tp = self._tp(node[2], node[1])
-            dc_f = int(self.fstats.get(node[1], {}).get("doc_count", 0))
+            sim = self._field_sim(node[1])
             out["description"] = (
-                f"weight({node[1]}:{node[2]}) [omitNorms StringField]"
+                f"weight({node[1]}:{node[2]}) [{sim.name}, omitNorms "
+                "StringField]"
             )
-            out["details"] = [{"docFreq": tp.n_docs, "docCount": dc_f,
-                               "norm": float(self.k1)}]
+            out["details"] = [{"docFreq": tp.n_docs,
+                               "docCount": sim.doc_count,
+                               **sim.explain(tp.clause, omit_norms=True)}]
             return out
         labels = {
             "and": "sum of (MUST):", "or": "sum of (SHOULD):",
@@ -1929,7 +1600,7 @@ class LocalSearcher:
         self._load_terms(terms)
         self._eval_memo: dict = {}
         pruned_terms = None
-        if self.pruning and k is not None and self._fastpaths:
+        if self.pruning and k is not None and self.sim.prunable:
             if node[0] == "term":
                 pruned_terms = [node[1]]
             elif (
@@ -1954,12 +1625,12 @@ class LocalSearcher:
                     pruned_terms, k, after=after
                 )
         else:
-            if node[0] == "term" and k is not None and self._fastpaths:
+            if node[0] == "term" and k is not None and self.sim.prunable:
                 hits = self._search_term_topcand(node[1], k, after=after)
                 if hits is not None:
                     return hits
             if (node[0] in ("and", "or", "msm_or") and k is not None
-                    and self._fastpaths):
+                    and self.sim.prunable):
                 # warm boolean tree: threshold-algorithm early
                 # termination over cached score-descending leaf lists
                 hits = self._search_tree_ta(node, k, after=after)
@@ -1968,6 +1639,61 @@ class LocalSearcher:
             docs, scores = self._eval(node)
         return _topk_hits(docs, scores, k, after=after,
                           deleted=self._deleted)
+
+
+def rewrite(node, terms_ds):
+    """Fixpoint-free single-pass rewrite (IndexSearcher.rewrite
+    analogue) shared by LocalSearcher and DistributedSearcher: expand
+    multi-term nodes with a pushed-down pyarrow scan of the term
+    dictionary dataset `terms_ds` (multiterm.expand_from_dataset —
+    Python-regex and OSA semantics, like the oracle) into constant-score
+    unions (MultiTermQueryConstantScoreWrapper); raises TooManyClauses
+    past 1024 expanded terms (BooleanQuery.java:43)."""
+    from .multiterm import MULTI_TERM_KINDS, expand_from_dataset
+
+    if node is None:
+        return None
+    kind = node[0]
+    if kind in MULTI_TERM_KINDS:
+        terms = expand_from_dataset(node, terms_ds, field="text")
+        return ("const_or", terms) if terms else ("matchnone",)
+    if kind == "span_multi":
+        # SpanMultiTermQueryWrapper: expand the wrapped multi-term
+        # query against the dictionary into a SpanOr of term spans
+        # (spans/SpanMultiTermQueryWrapper.java SpanRewriteMethod);
+        # an empty expansion is a SpanOr of nothing (matches no doc)
+        return ("sor", expand_from_dataset(node[1], terms_ds, field="text"))
+    if kind == "span_near":
+        return ("span_near", [rewrite(c, terms_ds) for c in node[1]],
+                node[2], node[3])
+    if kind in ("span_first", "span_range"):
+        return (kind, rewrite(node[1], terms_ds)) + tuple(node[2:])
+    if kind in ("span_not", "span_containing", "span_within"):
+        return (kind, rewrite(node[1], terms_ds),
+                rewrite(node[2], terms_ds)) + tuple(node[3:])
+    if kind == "synonym":
+        # SynonymQuery.Builder sorts + dedupes its terms
+        # (search/SynonymQuery.java constructor); one term left
+        # degenerates to a plain TermQuery
+        terms = sorted(set(node[1]))
+        return ("term", terms[0]) if len(terms) == 1 else \
+            ("synonym", terms)
+    if kind in ("and", "or"):
+        return (kind, [rewrite(c, terms_ds) for c in node[1]])
+    if kind == "dismax":
+        return ("dismax", [rewrite(c, terms_ds) for c in node[1]],
+                node[2])
+    if kind == "msm_or":
+        return ("msm_or", node[1],
+                [rewrite(c, terms_ds) for c in node[2]])
+    if kind in ("andnot", "reqopt", "reqfilter"):
+        return (kind, rewrite(node[1], terms_ds),
+                rewrite(node[2], terms_ds))
+    if kind == "boost":
+        return ("boost", rewrite(node[1], terms_ds), node[2])
+    if kind == "filter0":
+        return ("filter0", rewrite(node[1], terms_ds))
+    return node
 
 
 def _kth_best(scores: np.ndarray, k: int) -> float:

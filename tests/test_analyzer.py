@@ -52,29 +52,3 @@ def test_alphanum_subset_tokens():
 def test_empty_and_punct_only():
     assert analyze("") == []
     assert analyze("!!! --- ...") == []
-
-
-def test_analyze_batch_parity():
-    """Vectorized batch analyzer == per-doc analyze_detailed on every
-    tricky shape (empties, stop gaps, >255 tokens, mixed case,
-    connectors)."""
-    import numpy as np
-
-    from lucene_solr_spark.analysis.analyzer import (
-        analyze_batch, analyze_detailed,
-    )
-    from lucene_solr_spark.sources import gen_transcripts_pdf
-
-    texts = [
-        "", "the of and", "Cat the Hat", "alpha " + "x" * 300 + " beta",
-        "foo_bar 3.14 v1:2 can't x-y", "a b a b a",
-        "Retry DEPLOY pipeline the retry",
-    ]
-    texts += gen_transcripts_pdf(5, seed=9)["text"].tolist()
-    terms, didx, pos, dls = analyze_batch(texts)
-    for i, t in enumerate(texts):
-        want_terms, want_pos = analyze_detailed(t)
-        m = didx == i
-        assert list(terms[m]) == want_terms, t[:60]
-        assert list(pos[m]) == want_pos, t[:60]
-        assert dls[i] == len(want_terms)

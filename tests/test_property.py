@@ -1,6 +1,6 @@
 """Hypothesis randomized tests — the reference's own test DNA
 (LuceneTestCase randomizes codecs/inputs everywhere, SURVEY.md §5):
-codec round-trips, analyzer batch parity, OSA distance vs a brute DP,
+codec round-trips, OSA distance vs a brute DP,
 sloppy-freq membership/monotonicity, top-k selection vs a naive sort."""
 
 import numpy as np
@@ -62,32 +62,6 @@ def test_positions_roundtrip(poslists):
     tfs = np.array([p.size for p in pls], dtype=np.int64)
     got = decode_positions(encode_positions(pls), tfs)
     assert all(np.array_equal(a, b) for a, b in zip(got, pls))
-
-
-# ---------------------------------------------------------- analyzer
-
-texts = st.text(
-    alphabet=st.characters(
-        whitelist_categories=("Lu", "Ll", "Nd", "Po", "Zs"),
-        whitelist_characters="_'.:*?[]{}#@^~\"/\\\n\t",
-    ),
-    max_size=300,
-)
-
-
-@given(st.lists(texts, min_size=1, max_size=8))
-def test_analyzer_batch_parity_random(batch):
-    from lucene_solr_spark.analysis.analyzer import (
-        analyze_batch, analyze_detailed,
-    )
-
-    terms, didx, pos, dls = analyze_batch(batch)
-    for i, t in enumerate(batch):
-        want_terms, want_pos = analyze_detailed(t)
-        m = didx == i
-        assert list(terms[m]) == want_terms
-        assert list(pos[m]) == want_pos
-        assert dls[i] == len(want_terms)
 
 
 # ---------------------------------------------------------------- OSA
@@ -198,26 +172,26 @@ def test_simbase_kernel_properties(inp):
     score lower for these models), and multi-clause weights sum the
     per-clause float32 scores exactly (MultiSimilarity.MultiSimScorer
     additivity)."""
-    from lucene_solr_spark.query.similarities import serving_scores
+    from lucene_solr_spark.query.similarities import make_similarity
 
     sim, f, nb, df, ttf, dc, sttf = inp
     df = min(df, dc)
     ttf = max(ttf, df)
     sttf = max(sttf, ttf)
-    avgdl = np.float32(sttf / float(dc))
+    model = make_similarity(sim, dc, sttf)
     freqs = np.array([f, f + 1], dtype=np.float32)
     norms = np.array([nb, nb], dtype=np.uint8)
-    s = serving_scores(sim, freqs, norms, [(df, ttf)], dc, sttf, avgdl)
+
+    def serving(clauses):
+        return model.score(model.weight(clauses), freqs, norms)
+
+    s = serving([(df, ttf)])
     assert np.all(np.isfinite(s)) and np.all(s >= 0), (sim, s)
     assert s[1] >= s[0], (sim, "freq monotonicity", s)
     # MultiSimScorer additivity: two clauses == f32-sum of singles
-    s1 = serving_scores(sim, freqs, norms, [(df, ttf)], dc, sttf, avgdl)
-    s2 = serving_scores(sim, freqs, norms, [(max(df // 2, 1), ttf)],
-                        dc, sttf, avgdl)
-    both = serving_scores(
-        sim, freqs, norms, [(df, ttf), (max(df // 2, 1), ttf)],
-        dc, sttf, avgdl,
-    )
+    s1 = serving([(df, ttf)])
+    s2 = serving([(max(df // 2, 1), ttf)])
+    both = serving([(df, ttf), (max(df // 2, 1), ttf)])
     assert np.array_equal(both, (s1 + s2).astype(np.float32)), sim
 
 
@@ -230,21 +204,20 @@ def test_simbase_gate_vs_serving_sign(inp):
     boundary under quantized docLen, bool is constant); dfr/ib/ax are
     strictly positive in BOTH modes."""
     from lucene_solr_spark.oracle.smallfloat import NORM_TABLE
-    from lucene_solr_spark.query.similarities import (
-        gate_scores, serving_scores,
-    )
+    from lucene_solr_spark.query.similarities import make_similarity
 
     sim, f, nb, df, ttf, dc, sttf = inp
     df = min(df, dc)
     ttf = max(ttf, df)
     sttf = max(sttf, ttf)
     avgdl = np.float32(sttf / float(dc))
+    model = make_similarity(sim, dc, sttf)
     freqs = np.array([f], dtype=np.float32)
     norms = np.array([nb], dtype=np.uint8)
-    srv = serving_scores(sim, freqs, norms, [(df, ttf)], dc, sttf, avgdl)
+    srv = model.score(model.weight([(df, ttf)]), freqs, norms)
     dl = np.array([float(NORM_TABLE[nb])])
-    gt = gate_scores(sim, freqs.astype(np.float64), dl, [(df, ttf)],
-                     dc, sttf)
+    gt = model.score64(model.weight64([(df, ttf)]),
+                       freqs.astype(np.float64), dl)
     assert np.all(np.isfinite(gt)) and np.all(gt >= 0)
     # strict positivity holds whenever the NormalizationH2 ratio
     # avgdl/docLen survives float32 (tfn > 0).  Low norm bytes decode
@@ -255,3 +228,39 @@ def test_simbase_gate_vs_serving_sign(inp):
     if (sim in ("dfr", "ib", "ax")
             and avgdl / float(NORM_TABLE[nb]) > 1e-6):
         assert srv[0] > 0 and gt[0] > 0, sim
+
+
+@given(
+    st.sampled_from(["bm25", "classic", "lmjm"]),
+    st.lists(st.tuples(st.integers(1, 2_000), st.integers(0, 255)),
+             min_size=1, max_size=128),
+    st.integers(1, 10_000),               # df
+    st.integers(1, 1_000_000),            # ttf
+    st.integers(10, 10_000_000),          # doc_count
+    st.integers(10, 100_000_000),         # sum_ttf
+    st.floats(0.1, 3.0), st.floats(0.0, 1.0),   # k1, b
+    st.floats(0.01, 0.99),                # lmjm lambda
+)
+def test_block_bound_covers_every_score(sim, block, df, ttf, dc, sttf,
+                                        k1, b, lam):
+    """Every prunable model's block_bound(w, max_tf, min_ntab) is >= the
+    serving score of every posting of the block — the soundness
+    block-max pruning rests on, checked directly rather than through
+    pruned == exhaustive search.  min_ntab is the block's smallest
+    decoded docLen, stored as float32 like the index stores it."""
+    from lucene_solr_spark.oracle.smallfloat import NORM_TABLE
+    from lucene_solr_spark.query.similarities import make_similarity
+
+    df = min(df, dc)
+    ttf = max(ttf, df)
+    sttf = max(sttf, ttf)
+    model = make_similarity(sim, dc, sttf, k1=k1, b=b, lmjm_lambda=lam)
+    assert model.prunable
+    tfs = np.array([t for t, _ in block], dtype=np.float32)
+    norms = np.array([n for _, n in block], dtype=np.uint8)
+    w = model.weight([(df, ttf)])
+    scores = model.score(w, tfs, norms)
+    max_tf = np.array([tfs.max()], dtype=np.float64)
+    min_ntab = np.array([NORM_TABLE[norms].min()], dtype=np.float64)
+    ub = model.block_bound(w, max_tf, min_ntab)[0]
+    assert np.all(scores.astype(np.float64) <= ub), (sim, scores.max(), ub)

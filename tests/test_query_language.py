@@ -757,6 +757,51 @@ def test_explain_matches_search(searcher, oracle):
     assert {"docFreq", "docCount", "idf", "freq", "norm_byte"} <= set(det)
 
 
+@pytest.mark.parametrize("sim,params", [
+    ("lmd", {"mu", "collectionProbability"}),
+    ("lmjm", {"lambda", "collectionProbability"}),
+    ("dfr", {"avgFieldLength", "numberOfFieldTokens", "totalTermFreq"}),
+])
+def test_explain_reports_the_scoring_model(index_dir, sim, params):
+    """explain() fills its leaves from the Similarity that scored: the
+    value equals the search score, and term and keyword-field leaves
+    carry that model's name and parameters, never BM25's k1/b/norm."""
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    s = LocalSearcher(index_dir, similarity=sim)
+    for q in ["retry", "retry AND deploy", "retry OR role:user",
+              "retry #role:user"]:
+        hits = s.search(q, 3)
+        assert hits, q
+        for d, score in hits:
+            ex = s.explain(q, d)
+            assert ex["match"] and np.float32(ex["value"]) == np.float32(
+                score), q
+    for q in ["retry", "role:user"]:
+        leaf = s.explain(q, s.search(q, 1)[0][0])
+        assert s.sim.name in leaf["description"], q
+        det = leaf["details"][0]
+        assert params <= set(det), (q, det)
+        assert not {"k1", "b", "norm"} & set(det), (q, det)
+
+
+def test_one_rewrite_for_both_searchers(spark, index_dir, searcher):
+    """DistributedSearcher expands multi-term nodes through the same
+    pyarrow term-dictionary rewrite as LocalSearcher: equal rewrites
+    for every multi-term kind (span_multi included) and equal
+    results."""
+    from lucene_solr_spark.query.distributed import DistributedSearcher
+
+    ds = DistributedSearcher(spark, index_dir)
+    for q in ["ba*", "?ake*", "/de.*y/", "retry~1", "ertyr~2",
+              "[baba TO bace]", "{ba TO bd}", "qqqzz*", "ba* AND retry",
+              ("span_near", [("span_multi", ("prefix", "re")),
+                             ("sterm", "deploy")], 2, True)]:
+        node = parse_query(q) if isinstance(q, str) else q
+        assert ds.rewrite(node) == searcher.rewrite(node), q
+        assert ds.search(node, 10) == searcher.search(node, 10), q
+
+
 def test_distributed_search_after(spark, index_dir, oracle):
     """Distributed keyset pagination: pages from DistributedSearcher
     concatenate to the oracle's full ranking (the cursor is honored on
