@@ -26,8 +26,9 @@ Scores are float32 end-to-end and rank-identical to the LocalSearcher and
 the numpy oracle (dtype="float32", the serving default).  dtype="float64"
 is the GATE mode: per-term scores computed in double precision from the
 exact decoded tf and the exact doc length (docmap `dl`, not the quantized
-norm byte) so an ANSI-SQL engine (DuckDB) reproduces them bit-stably —
-the same compiled expression, a DuckDB-checkable scoring surface.
+norm byte) in the operation order of an ANSI-SQL twin (DuckDB), which
+the gate queries compare after ROUND(score, 4) — the same compiled
+expression, a DuckDB-checkable scoring surface.
 """
 
 from __future__ import annotations
@@ -57,8 +58,9 @@ class DistributedSearcher:
     serving mode (dtype="float32") it keeps the reference's float
     discipline over the quantized norm byte, rank-identical to
     LocalSearcher; in gate mode (dtype="float64") the model's all-double
-    rendering with the exact docmap doc length is bit-stable against an
-    ANSI-SQL twin."""
+    rendering with the exact docmap doc length follows an ANSI-SQL
+    twin's operation order; phrase, span, synonym and keyword leaves
+    (numpy ``score64``) match it after the gates' ROUND(score, 4)."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  dtype: str = "float32", similarity: str = "bm25",
@@ -261,7 +263,7 @@ class DistributedSearcher:
     def _scored_terms_df_double(self, cidx_of: dict) -> DataFrame:
         """Gate-mode term leaves: DF(doc_id, cidx, score double) scored
         in double precision from exact tf/df/dl (docmap doc length, not
-        the quantized norm byte) — bit-stable against an ANSI-SQL twin;
+        the quantized norm byte) in an ANSI-SQL twin's operation order;
         the formula is the Similarity's ``gate_col``.  The per-term
         stats and clause indexes enter the plan as literal map
         columns."""
@@ -789,7 +791,10 @@ class DistributedSearcher:
         `after` = (doc_id, score) keyset cursor: only docs strictly
         after it in (score desc, docID asc) order are returned (the
         distributed searchAfter — TopDocs.merge honors the cursor on
-        every shard before the final merge)."""
+        every shard before the final merge).  A negative k raises
+        ValueError before any Spark work."""
+        if k < 0:
+            raise ValueError(f"k must be >= 0, got {k}")
         plan = self._hits(query)
         if after is not None:
             a_doc, a_score = int(after[0]), float(after[1])

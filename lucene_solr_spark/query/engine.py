@@ -16,16 +16,18 @@ Physical optimizations (SURVEY.md §4.2):
   (ConjunctionDISI.java:150,175-210); larger lists decode only blocks
   whose [first_doc, last_doc] range intersects surviving candidates —
   the skip-list advance() analogue over our block-max metadata.
-- top-level OR with k: sound block-max pruning (the reference 7.0
-  snapshot has no WAND; this is our addition per the north star):
-  block b of term t is skipped when
-      block_ub(t, b) + sum(global_max(t') for t' != t) < theta
-  with block_ub the Similarity's ``block_bound`` over the stored
-  (max_tf, min_ntab) metadata and the CURRENT global stats (sound under
-  NRT segment appends); only ``prunable`` models take these paths,
-  where theta is the k-th best fully-scored candidate so far.  Skipped
-  blocks are decoded on demand if one of their docs survives via another
-  term, so returned scores are always complete and exact.
+- top-k with pruning: ONE collector (`LocalSearcher._collect`, the
+  threshold algorithm) over one cursor per leaf term of a
+  term/and/or/msm_or tree.  Warm lists walk in score order; cold lists
+  of a single term or a flat OR of distinct terms walk blocks in
+  descending ``block_bound`` order (block-max pruning — the reference
+  7.0 snapshot has no WAND; this is our addition per the north star),
+  with the bound taken over the stored (max_tf, min_ntab) metadata and
+  the CURRENT global stats (sound under NRT segment appends).  It stops
+  once theta, the k-th best collectable score, strictly beats the sum
+  of the cursors' next bounds; every collected score is complete and
+  exact.  Only ``prunable`` models take it; everything else is the
+  exhaustive evaluator `_eval`.
 """
 
 from __future__ import annotations
@@ -170,10 +172,14 @@ class LocalSearcher:
     "lmjm" (`lmjm_lambda`), "dfr", "ib", "dfi", "ax" or "bool".  Every
     model decodes the same floatToByte315 norm byte, so no reindex is
     needed (the reference's IndexSearcher.setSimilarity).  Formulas,
-    float discipline and citations live in query/similarities.py; the
-    block-max, dense-table and threshold fast paths run only for models
-    whose Similarity is ``prunable``, the rest take the exhaustive
-    evaluator.
+    float discipline and citations live in query/similarities.py.
+
+    `search` runs one top-k collector (`_collect`: threshold algorithm
+    over warm score-ordered lists and block-max cold lists) when
+    `pruning` is on, k is given and the Similarity is ``prunable``;
+    otherwise, or when the collector declines, the exhaustive evaluator
+    `_eval` scores every match.  `pruning=False` is the exhaustive
+    evaluator and nothing else.
     """
 
     def __init__(self, index_dir: str, pruning: bool = True,
@@ -275,22 +281,32 @@ class LocalSearcher:
             )
         return got
 
-    def _term_full(self, term: str) -> tuple[np.ndarray, np.ndarray]:
+    def _term_full(self, term: str, ranked: bool = False):
+        """(docs, scores) of the term's whole list; ranked=True adds
+        `order`, the list's (score desc, docID asc) permutation that a
+        warm collector cursor walks, built on first use."""
         # full-list scores are a pure function of the searcher's fixed
         # global stats — cache them (the hot-postings-in-page-cache
-        # trade; ~12 B/posting on top of the decoded blocks)
+        # trade; ~12 B/posting on top of the decoded blocks, +8 B for
+        # the order)
         got = getattr(self, "_fullscore_cache", None)
         if got is None:
             got = self._fullscore_cache = {}
         hit = got.get(term)
-        if hit is not None:
-            return hit
-        tp = self._tp(term)
-        docs, tfs, norms = tp.decode_all()
-        out = (docs, self.sim.score(self.sim.weight([tp.clause]),
-                                    tfs.astype(np.float32), norms))
-        got[term] = out
-        return out
+        if hit is None:
+            tp = self._tp(term)
+            docs, tfs, norms = tp.decode_all()
+            hit = got[term] = [
+                docs, self.sim.score(self.sim.weight([tp.clause]),
+                                     tfs.astype(np.float32), norms), None,
+            ]
+        if not ranked:
+            return hit[0], hit[1]
+        if hit[2] is None:
+            # docs ascend, so a stable sort on -score breaks ties by
+            # docID; kept intp (an int32 index array gathers ~4x slower)
+            hit[2] = np.argsort(-hit[1], kind="stable")
+        return hit[0], hit[1], hit[2]
 
     def _term_lookup(self, term: str, candidates: np.ndarray
                      ) -> tuple[np.ndarray, np.ndarray]:
@@ -903,22 +919,17 @@ class LocalSearcher:
                 tnames = [t for f, t in self._collect_terms(node)
                           if f == "text"]
                 costs = [self._cost_of(c) for c in children]
+                warm = not tnames or not self._mostly_undecoded(tnames)
                 # dense when the cheapest clause is not tiny: the
                 # leapfrog touches O(min df) postings, so a rare lead
                 # keeps it; otherwise mask-first dense evaluation costs
                 # a few contiguous full-array passes regardless of
                 # clause balance (the windowed-BooleanScorer choice)
-                if (
-                    (not tnames or not self._mostly_undecoded(tnames))
-                    and min(costs) * 16 >= self.max_doc + 1
-                ):
+                if warm and min(costs) * 16 >= self.max_doc + 1:
                     got = self._dense_tree_eval(node)
                     if got is not None:
                         return got
-                if (
-                    (not tnames or not self._mostly_undecoded(tnames))
-                    and min(costs) * 4 >= sum(costs)
-                ):
+                if warm and min(costs) * 4 >= sum(costs):
                     parts = [self._eval(c) for c in children]
                     return self._sum_parts(parts, min_match=len(children))
 
@@ -1117,8 +1128,6 @@ class LocalSearcher:
         """(docs, scores) via mask-first dense evaluation: masks combine
         before any scoring, so scores are gathered only at matching
         docs.  Returns None for unsupported shapes."""
-        if self.max_doc + 1 > self._DENSE_MAX_DOC:
-            return None
         mask = self._dense_mask(node)
         if mask is None:
             return None
@@ -1191,306 +1200,160 @@ class LocalSearcher:
             return docs[keep], total[keep].astype(np.float32)
         return docs, total.astype(np.float32)
 
-    #: size of the cached per-term top-candidate pool
-    _TOPCAND_M = 2048
-
-    def _term_topcand(self, term: str):
-        """(docs, scores, thr): the term's global top-M postings by
-        score plus thr = the best score OUTSIDE the pool.  A warm
-        single-term top-k is answered from the pool alone whenever >= k
-        pool entries score STRICTLY above thr after delete/cursor
-        masking — every excluded posting scores <= thr, strictly below
-        the selected k, so the page is exact including docID
-        tie-breaks."""
-        cache = getattr(self, "_topcand_cache", None)
-        if cache is None:
-            cache = self._topcand_cache = {}
-        got = cache.get(term)
-        if got is not None:
-            return got
-        docs, scores = self._term_full(term)
-        m = self._TOPCAND_M
-        if docs.size <= m:
-            out = (docs, scores, -np.inf)
-        else:
-            part = np.argpartition(scores, docs.size - m)
-            keep = np.sort(part[docs.size - m:])
-            thr = float(scores[part[: docs.size - m]].max())
-            out = (docs[keep], scores[keep], thr)
-        cache[term] = out
-        return out
-
-    def _search_term_topcand(self, term: str, k: int, after=None):
-        """Warm single-term top-k from the cached candidate pool, or
-        None when the pool can't prove exactness for this page."""
-        cd, cs, thr = self._term_topcand(term)
-        keep = np.ones(cd.size, dtype=bool)
-        if self._deleted.size:
-            keep &= ~_sorted_isin(cd, self._deleted)
-        if after is not None:
-            keep &= _cursor_mask(cd, cs, after)
-        strong = keep & (cs > np.float32(thr))
-        if np.count_nonzero(strong) < k:
-            return None
-        return _topk_hits(cd[strong], cs[strong], k)
-
-    def _term_scoredesc(self, term: str):
-        """(docs, scores) of one term ordered by score DESCENDING —
-        cached; the access lists of the threshold-algorithm OR."""
-        cache = getattr(self, "_scoredesc_cache", None)
-        if cache is None:
-            cache = self._scoredesc_cache = {}
-        got = cache.get(term)
-        if got is None:
-            docs, scores = self._term_full(term)
-            order = np.argsort(-scores, kind="stable")
-            got = cache[term] = (docs[order], scores[order])
-        return got
-
-    def _search_tree_ta(self, node, k: int, after=None):
-        """Exact top-k of an and/or/msm tree via the threshold algorithm
-        over per-leaf score-descending lists (the WAND /
-        TopScoreDocCollector early-termination role for WARM lists):
-        consume the leaf lists in batches, evaluate every newly seen doc
-        exactly (dense mask + clause-order gathered sums), and stop once
-        the k-th collected score strictly beats the sum of the lists'
-        next-unseen scores (+1e-6 float guard, as in block_bound).  The
-        bound is sound for any tree of non-negative contributions: an
-        unseen doc's score is at most the sum of its per-leaf scores,
-        each bounded by that leaf's cursor entry.  Returns None when the
-        bound cannot prove exactness by half a full pass (the dense /
-        scatter paths take over)."""
-        n = self.max_doc + 1
-        if n > self._DENSE_MAX_DOC:
-            return None
-        leaf_terms = [t for f, t in self._collect_terms(node)
-                      if f == "text"]
-        terms = sorted(set(leaf_terms))
-        if node[0] == "and":
-            costs = [self._cost_of(c) for c in node[1]]
-            if min(costs) == 0:
-                # a required conjunct matches nothing (absent term):
-                # the intersection is provably empty — never start TA
-                return []
-        if not terms or self._mostly_undecoded(terms):
-            return None  # cold lists: the block-pruning paths decode less
-        if node[0] == "or" and all(c[0] == "term" for c in node[1]):
-            # pure term disjunction: ANY leaf hit matches, so the
-            # O(n_children * max_doc) dense tree-mask OR is pure waste
-            # — candidates come straight from the leaf lists
-            mask = None
-        else:
-            mask = self._dense_mask(node)
-            if mask is None:
-                return None
-        if node[0] == "and":
-            # SELECTIVE conjunction: the result is a subset of the
-            # cheapest conjunct's matches, so an exact dense-gather
-            # over those candidates costs O(min_cost) — while TA
-            # consumes a prefix of EVERY leaf's score-descending list
-            # (up to half their total length) before its bound can
-            # prove anything.  Crossover measured at sf0.1 (r3 bench
-            # regression and3_1/and3_3: 0.4ms candidate vs 1.3-2.0ms
-            # TA; and2_4/mixed_8 where min_cost ~ total stay TA-won).
-            mn = min(costs)
-            lead = node[1][int(np.argmin(costs))]
-            total_docs = sum(self._tp(t).n_docs for t in terms)
-            if lead[0] == "term" and mn * 8 <= total_docs:
-                cand = self._tp(lead[1]).decode_all()[0]
-                cand = cand[mask[cand]]
-                if cand.size == 0:
-                    return []
-                cs = self._dense_scores_at(node, cand)
-                keep = np.ones(cand.size, dtype=bool)
-                if self._deleted.size:
-                    keep &= ~_sorted_isin(cand, self._deleted)
-                if after is not None:
-                    keep &= _cursor_mask(cand, cs, after)
-                return _topk_hits(cand[keep], cs[keep], k)
-        # a term appearing in several leaves contributes once per leaf
-        # to a doc's score, so the unseen-doc bound must weight each
-        # list's cursor by that multiplicity
-        mult = [leaf_terms.count(t) for t in terms]
-        lists = [self._term_scoredesc(t) for t in terms]
-        seen = np.zeros(n, dtype=bool)
-        cursors = [0] * len(terms)
-        kept_d: list[np.ndarray] = []
-        kept_s: list[np.ndarray] = []
-        n_kept = 0
-        theta = -np.inf
-        # bounded top-k pool for theta (same O(batch+k) discipline as
-        # _search_term_pruned — never re-partition the full kept set)
-        pool = np.empty(0, dtype=np.float32)
-        batch = 1024
-        total_len = sum(ld.size for ld, _ in lists)
-        consumed = 0
-        while True:
-            ub = sum(
-                m * float(ls[c])
-                for (_, ls), c, m in zip(lists, cursors, mult)
-                if c < ls.size
-            ) * (1.0 + 1e-6)
-            done = all(c >= ls.size for (_, ls), c in zip(lists, cursors))
-            if done or (n_kept >= k and theta > ub):
-                break
-            if consumed * 2 >= total_len:
-                return None  # no early proof by half-way
-            fresh = []
-            for i, (ld, ls) in enumerate(lists):
-                c = cursors[i]
-                if c >= ld.size:
-                    continue
-                take = ld[c : c + batch]
-                cursors[i] = c + take.size
-                consumed += take.size
-                nw = take[~seen[take]]
-                seen[nw] = True
-                fresh.append(nw)
-            if not fresh:
-                continue
-            cand = np.concatenate(fresh)
-            if mask is not None:
-                cand = cand[mask[cand]]  # tree match check before scoring
-            if cand.size:
-                cand = np.sort(cand)
-                cs = self._dense_scores_at(node, cand)
-                keep = np.ones(cand.size, dtype=bool)
-                if self._deleted.size:
-                    keep &= ~_sorted_isin(cand, self._deleted)
-                if after is not None:
-                    keep &= _cursor_mask(cand, cs, after)
-                kept_d.append(cand[keep])
-                kept_s.append(cs[keep])
-                n_kept += int(keep.sum())
-                pool = np.concatenate([pool, cs[keep]])
-                if pool.size > k > 0:
-                    pool = np.partition(pool, -k)[-k:]
-            if n_kept >= k and 0 < k <= pool.size:
-                theta = float(pool.min())
-        if not kept_d:
-            return []
-        docs = np.concatenate(kept_d)
-        scores = np.concatenate(kept_s)
-        return _topk_hits(docs, scores, k)
-
-    # -------------------------------------------- pruned top-level OR
+    # ------------------------------------------------------ collector
     def _mostly_undecoded(self, terms: list[str]) -> bool:
         total = sum(len(self._tp(t).blocks) for t in terms)
         cached = sum(len(self._tp(t)._decoded) for t in terms)
         return total > 0 and cached < total // 2
 
-    def _masked_kth(self, docs_list, scores_list, k, after) -> float:
-        """theta = k-th best COLLECTABLE score so far: cursor-passing
-        (searchAfter pages compete only past the cursor,
-        search/IndexSearcher.java:411-446) and live (deleted docs never
-        enter the collector, like liveDocs).  A theta seeded from a
-        non-collectable doc would over-prune real results."""
-        scs = np.concatenate(scores_list)
-        if after is not None or self._deleted.size:
-            docs = np.concatenate(docs_list)
-            keep = np.ones(docs.size, dtype=bool)
-            if self._deleted.size:
-                keep &= ~_sorted_isin(docs, self._deleted)
-            if after is not None:
-                keep &= _cursor_mask(docs, scs, after)
-            scs = scs[keep]
-        return _kth_best(scs, k)
-
-    def _search_term_pruned(self, term: str, k: int, after=None
-                            ) -> tuple[np.ndarray, np.ndarray]:
-        """Block-max pruned single-term top-k: decode blocks in
-        descending upper-bound order and stop as soon as the next bound
-        cannot beat theta — a hot term's tail blocks never decode
-        (the single-scorer analogue of BlockMaxWAND; cf. Lucene 8's
-        block-max TopScoreDocCollector early exit)."""
-        tp = self._tp(term)
-        w = self.sim.weight([tp.clause])
-        ubs = self.sim.block_bound(w, *tp.block_maxes())
-        order = np.argsort(-ubs, kind="stable")
+    def _collect(self, node, k: int, after=None):
+        """Exact top-k of a term/and/or/msm_or tree of term leaves by
+        the threshold algorithm (TopScoreDocCollector's early exit;
+        threshold pruning as in "Distributed Similarity Joins over Top-K
+        Rankings", EDBT 2020), one cursor per distinct leaf term:
+        - warm lists walk in (score desc, docID asc) order, a batch per
+          round; new docs pass the tree's dense mask and are scored by
+          clause-order gathers (`_dense_scores_at`);
+        - cold lists of one term or a flat OR of distinct terms walk
+          blocks in descending ``block_bound`` order, the highest-bound
+          cursor one block per round (block-max); `_complete_scores`
+          decodes only the other terms' blocks that hold new docs.
+        An unseen doc scores at most the sum of the cursors' next
+        bounds (times each term's leaf count), so collection stops once
+        theta, the k-th best collectable score (live, past `after`; one
+        bounded pool), strictly beats it (+1e-6 float guard).  A warm
+        single term arrives in rank order: its first k live entries are
+        the page.  None (the exhaustive evaluator answers) for other
+        shapes, cold trees, and bounds that do not bite: a cold walk
+        whose 32-block probe shows theta skipping under a quarter of the
+        blocks, or a warm tree with no proof by half its postings."""
+        leaves = _leaf_terms(node)
+        if leaves is None:
+            return None
+        if k == 0:
+            return []
+        costs = ([self._cost_of(c) for c in node[1]] if node[0] == "and"
+                 else None)
+        if costs is not None and min(costs) == 0:
+            # a required conjunct matches nothing (absent term): the
+            # intersection is provably empty
+            return []
+        terms = list(dict.fromkeys(leaves))  # distinct, clause order
+        one = node[0] == "term"
+        n = self.max_doc + 1
+        if not one and n > self._DENSE_MAX_DOC:
+            return None  # the seen bitmap and dense tables are budgeted
+        flat = one or (node[0] == "or"
+                       and all(c[0] == "term" for c in node[1]))
+        cold = self._mostly_undecoded(terms)
+        if cold and (not flat or len(terms) < len(leaves)):
+            # cold tree: the leapfrog decodes only candidate blocks
+            return None
+        if one and not cold:
+            # a warm single term arrives in rank order: the page is its
+            # first k live entries (no bound, seen bitmap or mask)
+            docs, scores, order = self._term_full(terms[0], ranked=True)
+            hits: list[tuple[int, float]] = []
+            pos, step = 0, k + 64
+            while pos < order.size and len(hits) < k:
+                sel = order[pos:pos + step]
+                pos, step = pos + sel.size, 2 * step
+                d, sc = docs[sel], scores[sel]
+                keep = _live(d, sc, after, self._deleted)
+                hits += zip(d[keep].tolist(), sc[keep].tolist())
+            return hits[:k]
+        mask = None if flat else self._dense_mask(node)
+        if costs is not None:
+            # SELECTIVE conjunction: the result is a subset of the
+            # cheapest conjunct's matches, so an exact dense-gather over
+            # those candidates costs O(min_cost) — while TA consumes a
+            # prefix of EVERY leaf's score-descending list (up to half
+            # their total length) before its bound can prove anything.
+            # Crossover measured at sf0.1 (r3 bench regression
+            # and3_1/and3_3: 0.4ms candidate vs 1.3-2.0ms TA;
+            # and2_4/mixed_8 where min_cost ~ total stay TA-won).
+            lead = node[1][int(np.argmin(costs))]
+            if (lead[0] == "term" and min(costs) * 8
+                    <= sum(self._tp(t).n_docs for t in terms)):
+                cand = self._tp(lead[1]).decode_all()[0]
+                cand = cand[mask[cand]]
+                return _topk_hits(cand, self._dense_scores_at(node, cand),
+                                  k, after=after, deleted=self._deleted)
+        cursors = ([_BlockCursor(self._tp(t), self.sim) for t in terms]
+                   if cold else
+                   [_ListCursor(*self._term_full(t, ranked=True))
+                    for t in terms])
+        mult = [leaves.count(t) for t in terms]
+        total = sum(c.size for c in cursors)
+        seen = None if one else np.zeros(n, dtype=bool)
         kept_d: list[np.ndarray] = []
         kept_s: list[np.ndarray] = []
-        # theta via a BOUNDED top-k pool updated per block (O(128+k)
-        # each) — re-partitioning the full kept concatenation per block
-        # was O(blocks * kept) and dominated the COLD first query of a
-        # hot term (1.3 s of np.partition for a df=172k term at sf0.1)
+        # theta's pool holds the k best collectable scores: bounded, so
+        # a round costs O(batch + k), not O(kept) (unbounded, it took
+        # 1.3 s of np.partition on a cold df=172k term at sf0.1)
         pool = np.empty(0, dtype=np.float32)
         theta = -np.inf
-        for n_done, bi in enumerate(order):
-            if ubs[bi] < theta:
-                break  # bounds are descending: nothing below competes
-            if (n_done == 32
-                    and np.count_nonzero(ubs < theta) * 4 < ubs.size):
-                # pruning is not biting (flat per-block bounds: theta
-                # can skip < 1/4 of the blocks after a 32-block probe):
-                # the batched full decode + one vectorized score pass
-                # beats per-block python for the rest — exhaustive is
-                # exact, so this is purely a cost choice
-                docs, tfs, norms = tp.decode_all()
-                return docs, self.sim.score(w, tfs.astype(np.float32), norms)
-            docs, tfs, norms = tp.decode(int(bi))
-            scs = self.sim.score(w, tfs.astype(np.float32), norms)
-            kept_d.append(docs)
-            kept_s.append(scs)
-            cand = scs
-            if self._deleted.size or after is not None:
-                keep = np.ones(docs.size, dtype=bool)
-                if self._deleted.size:
-                    keep &= ~_sorted_isin(docs, self._deleted)
-                if after is not None:
-                    keep &= _cursor_mask(docs, scs, after)
-                cand = scs[keep]
-            pool = np.concatenate([pool, cand])
-            if pool.size > k > 0:
+        probed = False
+        while True:
+            bounds = [c.bound() for c in cursors]
+            done = sum(c.pos for c in cursors)
+            if done >= total or pool.size >= k and theta > sum(
+                    m * b for m, b in zip(mult, bounds)) * (1.0 + 1e-6):
+                break
+            if cold and not probed and done >= 32:
+                # bounds not biting (flat per-block bounds: theta can
+                # skip < 1/4 of the blocks after a 32-block probe): the
+                # batched full decode + one vectorized score pass beats
+                # per-block python for the rest
+                probed = True
+                rest = sum(bounds)
+                skippable = sum(np.count_nonzero(c.ubs + (rest - b) < theta)
+                                for c, b in zip(cursors, bounds))
+                if skippable * 4 < total:
+                    return None
+            if not cold and done * 2 >= total:
+                return None  # no early proof by half-way
+            movers = [c for c in cursors if c.pos < c.size]
+            if cold:
+                movers = [max(movers, key=lambda c: c.bound())]
+            fresh = []
+            for c in movers:
+                d, s = c.take()
+                if seen is not None:
+                    d = d[~seen[d]]
+                    seen[d] = True
+                fresh.append((d, s))
+            cand = np.concatenate([d for d, _ in fresh])
+            if one:
+                cs = np.concatenate([s for _, s in fresh])
+            else:
+                if mask is not None:
+                    cand = cand[mask[cand]]  # tree match before scoring
+                cand = np.sort(cand)
+                cs = (self._complete_scores(terms, cand) if cold
+                      else self._dense_scores_at(node, cand))
+            keep = _live(cand, cs, after, self._deleted)
+            kept_d.append(cand[keep])
+            kept_s.append(cs[keep])
+            pool = np.concatenate([pool, cs[keep]])
+            if pool.size > k:
                 pool = np.partition(pool, -k)[-k:]
-            theta = (float(pool.min())
-                     if 0 < k <= pool.size else -np.inf)
-        return np.concatenate(kept_d), np.concatenate(kept_s)
-
-    def _search_or_pruned(self, terms: list[str], k: int, after=None
-                          ) -> tuple[np.ndarray, np.ndarray]:
-        """Block-max pruned evaluation of a flat OR of terms."""
-        tps = [self._tp(t) for t in terms]
-        ubs = [self.sim.block_bound(self.sim.weight([tp.clause]),
-                                    *tp.block_maxes()) for tp in tps]
-        gmax = np.array([u.max() if u.size else 0.0 for u in ubs],
-                        dtype=np.float64)
-        # establish theta from the highest-impact term, fully scored with
-        # complete (all-term) scores for its docs
-        seed = int(np.argmax(gmax))
-        cand, _ = self._term_full(terms[seed])
-        scores = self._complete_scores(terms, np.unique(cand))
-        kept_docs = [scores[0]]
-        kept_scores = [scores[1]]
-        theta = self._masked_kth(kept_docs, kept_scores, k, after)
-        for i, (t, tp) in enumerate(zip(terms, tps)):
-            if i == seed:
-                continue
-            others = float(gmax.sum() - gmax[i])
-            ub = ubs[i] + others
-            live = np.flatnonzero(ub >= theta) if theta > -np.inf else np.arange(len(tp.blocks))
-            docs, _, _ = tp.decode_blocks(live)
-            fresh = np.setdiff1d(docs, np.concatenate(kept_docs), assume_unique=False)
-            if fresh.size:
-                fd, fscores = self._complete_scores(terms, fresh)
-                kept_docs.append(fd)
-                kept_scores.append(fscores)
-                theta = self._masked_kth(kept_docs, kept_scores, k, after)
-        docs = np.concatenate(kept_docs)
-        scs = np.concatenate(kept_scores)
-        docs, ix = np.unique(docs, return_index=True)
-        return docs, scs[ix]
+            if pool.size >= k:
+                theta = float(pool.min())
+        if not kept_d:
+            return []
+        return _topk_hits(np.concatenate(kept_d), np.concatenate(kept_s), k)
 
     def _complete_scores(self, terms: list[str], docs: np.ndarray
-                         ) -> tuple[np.ndarray, np.ndarray]:
-        """Exact full OR scores for the given sorted candidate docs,
+                         ) -> np.ndarray:
+        """Exact flat-OR scores of the given sorted candidate docs,
         decoding blocks on demand (term contributions in clause order,
         double accumulate, float32 cast)."""
         total = np.zeros(docs.size, dtype=np.float64)
         for t in terms:
             cd, cs = self._term_lookup(t, docs)
-            idx = np.searchsorted(docs, cd)
-            total[idx] += cs.astype(np.float64)
-        return docs, total.astype(np.float32)
+            total[np.searchsorted(docs, cd)] += cs.astype(np.float64)
+        return total.astype(np.float32)
 
     # ------------------------------------------------------------- api
     def explain(self, query, doc_id: int) -> dict:
@@ -1591,52 +1454,21 @@ class LocalSearcher:
         """Top-k hits as (doc_id, float32 score); k=None returns ALL
         matches in (score desc, docID asc) order (the searchAfter base).
         `after` = (doc_id, score) cursor restricts hits to those strictly
-        after it in rank order."""
+        after it in rank order.  A negative k raises ValueError."""
+        if k is not None and k < 0:
+            raise ValueError(f"k must be >= 0 or None, got {k}")
         node = parse_query(query, opts=self.analyzer_opts) if isinstance(query, str) else query
         node = self.rewrite(node)
         if node is None or node[0] == "matchnone":
             return []
-        terms = self._collect_terms(node)
-        self._load_terms(terms)
+        self._load_terms(self._collect_terms(node))
         self._eval_memo: dict = {}
-        pruned_terms = None
-        if self.pruning and k is not None and self.sim.prunable:
-            if node[0] == "term":
-                pruned_terms = [node[1]]
-            elif (
-                node[0] == "or"
-                and all(c[0] == "term" for c in node[1])
-                and len(set(t for _, t in node[1])) == len(node[1])
-            ):
-                pruned_terms = [t for _, t in node[1]]
-        if pruned_terms and self._mostly_undecoded(pruned_terms):
-            # cold lists: block-max pruning avoids decoding
-            # never-competitive blocks.  Warm lists (decode cache full)
-            # score faster through the vectorized flat-OR path — the
-            # cost-based strategy choice Lucene makes in
-            # BooleanWeight.bulkScorer (windowed BooleanScorer vs
-            # per-doc scorers).
-            if len(pruned_terms) == 1:
-                docs, scores = self._search_term_pruned(
-                    pruned_terms[0], k, after=after
-                )
-            else:
-                docs, scores = self._search_or_pruned(
-                    pruned_terms, k, after=after
-                )
-        else:
-            if node[0] == "term" and k is not None and self.sim.prunable:
-                hits = self._search_term_topcand(node[1], k, after=after)
-                if hits is not None:
-                    return hits
-            if (node[0] in ("and", "or", "msm_or") and k is not None
-                    and self.sim.prunable):
-                # warm boolean tree: threshold-algorithm early
-                # termination over cached score-descending leaf lists
-                hits = self._search_tree_ta(node, k, after=after)
-                if hits is not None:
-                    return hits
-            docs, scores = self._eval(node)
+        if (self.pruning and k is not None and self.sim.prunable
+                and node[0] in ("term", "and", "or", "msm_or")):
+            hits = self._collect(node, k, after=after)
+            if hits is not None:
+                return hits
+        docs, scores = self._eval(node)
         return _topk_hits(docs, scores, k, after=after,
                           deleted=self._deleted)
 
@@ -1696,12 +1528,6 @@ def rewrite(node, terms_ds):
     return node
 
 
-def _kth_best(scores: np.ndarray, k: int) -> float:
-    if scores.size < k:
-        return -np.inf
-    return float(np.partition(scores, -k)[-k])
-
-
 def _sorted_isin(values: np.ndarray, sorted_unique: np.ndarray) -> np.ndarray:
     """Membership of `values` in a SORTED-UNIQUE array — O(n log m)
     searchsorted, avoiding np.isin's internal sort of both inputs (our
@@ -1713,12 +1539,85 @@ def _sorted_isin(values: np.ndarray, sorted_unique: np.ndarray) -> np.ndarray:
     return sorted_unique[idx] == values
 
 
-def _cursor_mask(docs: np.ndarray, scores: np.ndarray,
-                 after: tuple[int, float]) -> np.ndarray:
-    """Docs strictly after the (doc_id, score) cursor in (score desc,
-    docID asc) order."""
-    a_doc, a_score = int(after[0]), np.float32(after[1])
-    return (scores < a_score) | ((scores == a_score) & (docs > a_doc))
+def _live(docs: np.ndarray, scores: np.ndarray, after,
+          deleted: np.ndarray) -> np.ndarray:
+    """Collectable docs: not tombstoned (liveDocs) and strictly after
+    the (doc_id, score) `after` cursor in (score desc, docID asc) order
+    (searchAfter pages compete only past the cursor,
+    search/IndexSearcher.java:411-446)."""
+    keep = np.ones(docs.size, dtype=bool)
+    if deleted.size:
+        keep &= ~_sorted_isin(docs, deleted)
+    if after is not None:
+        a_doc, a_score = int(after[0]), np.float32(after[1])
+        keep &= (scores < a_score) | ((scores == a_score) & (docs > a_doc))
+    return keep
+
+
+def _leaf_terms(node) -> list[str] | None:
+    """Term names at the leaves of a term/and/or/msm_or tree, in clause
+    order with repeats; None when the tree holds any other kind."""
+    kind = node[0]
+    if kind == "term":
+        return [node[1]]
+    if kind not in ("and", "or", "msm_or"):
+        return None
+    out: list[str] = []
+    for c in node[2] if kind == "msm_or" else node[1]:
+        got = _leaf_terms(c)
+        if got is None:
+            return None
+        out += got
+    return out
+
+
+class _Cursor:
+    """A collector cursor over one term: `order` walks `ubs` (a bound
+    per entry) in descending order; no entry after `pos` scores more
+    than ``bound()``."""
+
+    __slots__ = ("ubs", "order", "pos", "size")
+
+    def bound(self) -> float:
+        if self.pos >= self.size:
+            return 0.0
+        return float(self.ubs[self.order[self.pos]])
+
+
+class _ListCursor(_Cursor):
+    """Warm: the term's scored list in (score desc, docID asc) order,
+    1024 docs per take (a warm tree scores its candidates itself, so no
+    per-list scores are gathered)."""
+
+    __slots__ = ("docs",)
+
+    def __init__(self, docs, scores, order):
+        self.docs, self.ubs, self.order = docs, scores, order
+        self.pos, self.size = 0, order.size
+
+    def take(self):
+        sel = self.order[self.pos:self.pos + 1024]
+        self.pos += sel.size
+        return self.docs[sel], None
+
+
+class _BlockCursor(_Cursor):
+    """Cold: the term's posting blocks in descending ``block_bound``
+    order, one block decoded and scored per take."""
+
+    __slots__ = ("tp", "sim", "w")
+
+    def __init__(self, tp: _TermPostings, sim):
+        self.tp, self.sim = tp, sim
+        self.w = sim.weight([tp.clause])
+        self.ubs = sim.block_bound(self.w, *tp.block_maxes())
+        self.order = np.argsort(-self.ubs, kind="stable")
+        self.pos, self.size = 0, len(tp.blocks)
+
+    def take(self):
+        docs, tfs, norms = self.tp.decode(int(self.order[self.pos]))
+        self.pos += 1
+        return docs, self.sim.score(self.w, tfs.astype(np.float32), norms)
 
 
 def _topk_hits(docs: np.ndarray, scores: np.ndarray,
@@ -1730,11 +1629,10 @@ def _topk_hits(docs: np.ndarray, scores: np.ndarray,
     HitQueue.java:76-81).  `after` filters to docs strictly after the
     cursor before selection (searchAfter); `deleted` masks tombstoned
     docs (liveDocs at collection time)."""
-    if deleted is not None and deleted.size and docs.size:
-        keep = ~_sorted_isin(docs, deleted)
-        docs, scores = docs[keep], scores[keep]
-    if after is not None and docs.size:
-        keep = _cursor_mask(docs, scores, after)
+    if docs.size and (after is not None
+                      or deleted is not None and deleted.size):
+        keep = _live(docs, scores, after,
+                     deleted if deleted is not None else docs[:0])
         docs, scores = docs[keep], scores[keep]
     if docs.size == 0:
         return []

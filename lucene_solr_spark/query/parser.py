@@ -70,7 +70,8 @@ _FIELD_RE = re.compile(r"^([A-Za-z_][A-Za-z0-9_]*):(.+)$", re.DOTALL)
 #: role/tool — keyword StringFields (verbatim value, omitNorms),
 #: ts    — point field (timestamp ranges, PointRangeQuery analogue).
 #: Atoms with an unknown prefix fall through to the analyzer unchanged
-#: (':' is a StandardTokenizer MidLetter connector).
+#: (':' is a StandardTokenizer MidLetter connector); a second prefix
+#: (`a:b:c`) is a QueryParseError.
 DEFAULT_FIELDS = {
     "text": "text",
     "role": "keyword",
@@ -249,6 +250,12 @@ class _Parser:
         m = _BOOST_RE.match(t)
         if m and not t.startswith("[") and not t.startswith("{"):
             t, boost = m.group(1), float(m.group(2))
+        # `^` takes only a NUMBER (QueryParser.jj CARAT <NUMBER>): any
+        # other `^` outside a phrase or regexp body is a syntax error,
+        # never a term separator (ranges check their own boost)
+        body = t.find(t[0], 1) + 1 if t[0] in '"/' else 0
+        if t[0] not in "[{" and "^" in t[body:]:
+            raise QueryParseError(f"bad boost in {t!r}: '^' takes a number")
 
         node = self._bare_atom(t)
         if node is not None and boost is not None:
@@ -279,6 +286,10 @@ class _Parser:
     def _bare_atom(self, t: str):
         # field-scoped atom: `field:value` (QueryParser.jj:52-53)
         m = _FIELD_RE.match(t)
+        if m and ":" in m.group(2) and self.fields.get(m.group(1)) != "point":
+            # one field prefix per atom; only point values (timestamps)
+            # carry a colon
+            raise QueryParseError(f"bad field prefix in {t!r}: a second ':'")
         if m and m.group(1) in self.fields and not t.startswith('"'):
             fname, rest = m.group(1), m.group(2)
             ftype = self.fields[fname]

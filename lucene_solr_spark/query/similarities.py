@@ -22,9 +22,13 @@ Each object has:
   boundary; multi-clause scores of the LM and SimilarityBase models sum
   the per-clause float32 scores (MultiSimilarity.MultiSimScorer).
 - ``weight64(clauses)`` / ``score64(w, freq, dl)`` — float64 gate mode:
-  all-double with the EXACT docmap length `dl`, so an ANSI-SQL twin
-  (DuckDB, ``oracle/simbase_sql.py`` and ``__spark_entry__``) is
-  bit-stable against it; ``dl=None`` is the omitNorms case.
+  all-double with the EXACT docmap length `dl`, in the operation order
+  of the ANSI-SQL twin (DuckDB, ``oracle/simbase_sql.py`` and
+  ``__spark_entry__``).  numpy's ``np.log`` differs from libm's ``log``
+  by one ulp on about a fifth of doubles, so the phrase, span, synonym
+  and keyword gate leaves scored here match the twin after the gates'
+  ``ROUND(score, 4)``, not bit for bit; ``dl=None`` is the omitNorms
+  case.
 - ``gate_col()`` — the gate-mode Spark Column over ``tf``, ``dl``,
   ``doc_freq`` and ``total_term_freq``, in the same double operation
   order (``LN(1+x)``, not log1p).

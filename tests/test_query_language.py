@@ -33,6 +33,11 @@ def test_parser_shapes():
         "reqopt", ("term", "cat"), ("term", "dog")
     )
     assert parse_query("cat^2.5") == ("boost", ("term", "cat"), 2.5)
+    # a `^` inside a phrase or regexp body is not a boost
+    assert parse_query('"big cat"^2') == (
+        "boost", ("phrase", [("big", 0), ("cat", 1)]), 2.0
+    )
+    assert parse_query("/ca^t/^2") == ("boost", ("regexp", "ca^t"), 2.0)
     assert parse_query('"big cat"') == (
         "phrase", [("big", 0), ("cat", 1)]
     )
@@ -95,6 +100,18 @@ def test_parser_shapes():
         parse_query("role:us*")  # multi-term on keyword field
     with pytest.raises(QueryParseError):
         parse_query("ts:notadate")
+
+
+@pytest.mark.parametrize("query", [
+    "x^abc", "x^-1", '"a b"^x', "(x y)^z", "x^1.2.3", "/ab/^1.2.3",
+    "a:b:c", "role:a:b", "text:a:b",
+])
+def test_malformed_boost_and_field_prefix(query):
+    """`^` takes only a NUMBER and an atom has one field prefix
+    (QueryParser.jj CARAT <NUMBER>, TERM ':' clause): malformed input is
+    a QueryParseError, never re-lexed into OR terms."""
+    with pytest.raises(QueryParseError):
+        parse_query(query)
 
 
 def test_multiterm_helpers():
@@ -863,6 +880,11 @@ def test_search_after_block_pruned(spark, tmp_path_factory):
         (f"b{i:04d}", 0, "hot " + f"w{i} " * (8 + i // 25))
         for i in range(2400)
     ]
+    rows += [
+        (f"c{i:04d}", 0,
+         "zap " * (4 if i < 8 else 1) + f"v{i} " * (8 + i // 25))
+        for i in range(1200)
+    ]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, text string"
     )
@@ -878,6 +900,19 @@ def test_search_after_block_pruned(spark, tmp_path_factory):
     assert len(tp.blocks) > 10  # the term is actually hot (19 blocks)
     # both pages together decoded only the competitive head blocks
     assert len(tp._decoded) < len(tp.blocks) // 2
+    # a cold two-term flat OR walks both terms' blocks by bound: its
+    # pages equal the exhaustive ranking and decode under half the blocks
+    q = "hot OR zap"
+    full = LocalSearcher(d, pruning=False).search(q, k=None)
+    s = LocalSearcher(d)
+    page1 = s.search(q, 10)
+    page2 = s.search_after(q, page1[-1], 10)
+    assert page1 == full[:10]
+    assert page2 == full[10:20]
+    tps = [s._term_cache[("text", t)] for t in ("hot", "zap")]
+    assert all(len(tp.blocks) > 5 for tp in tps)
+    assert (sum(len(tp._decoded) for tp in tps)
+            < sum(len(tp.blocks) for tp in tps) // 2)
 
 
 def test_search_after_pagination(searcher, oracle):

@@ -50,6 +50,30 @@ def test_local_pruning_equals_exhaustive(local_searcher, local_searcher_noprunin
         _assert_identical(f"pruning:{name}", a, b)
 
 
+def test_pruning_off_never_collects(index_dir, query_set, monkeypatch):
+    """pruning=False is the exhaustive evaluator and nothing else, so
+    the pruning-on/off comparisons above never compare the collector
+    with itself; pruning=True does take the collector."""
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    collect = LocalSearcher._collect
+    entered = []
+
+    def guarded(self, node, k, after=None):
+        assert self.pruning, "pruning=False entered the top-k collector"
+        entered.append(node[0])
+        return collect(self, node, k, after)
+
+    monkeypatch.setattr(LocalSearcher, "_collect", guarded)
+    off, on = (LocalSearcher(index_dir, pruning=p) for p in (False, True))
+    for _, qtext in query_set:
+        page = off.search(qtext, K)
+        if page:
+            off.search_after(qtext, page[-1], K)
+        on.search(qtext, K)
+    assert entered
+
+
 def test_distributed_rank_identity_sample(spark, index_dir, oracle, query_set):
     from lucene_solr_spark.query.distributed import DistributedSearcher
 
