@@ -52,6 +52,10 @@ Scale design (10^12 turns, SURVEY.md §7):
 - resume: each stage commits to the manifest; re-runs skip committed
   stages (TopicStream-style checkpointing).  Pass 2 reads pass 1's
   on-disk table, so resume works across sessions.
+- one postings write path: compaction re-chunks the source's blocks
+  (tombstones dropped, re-salted) with the build's salt-split + encode
+  and feeds the same bucket shuffle and streaming merge, so a merge task
+  holds one salt group, never a hot term's whole list.
 """
 
 from __future__ import annotations
@@ -68,7 +72,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from ..oracle.smallfloat import NORM_TABLE, norm_bytes_for_lengths
-from .codec import encode_blocks
+from .codec import (
+    BLOCK_SIZE, decode_block, decode_positions, encode_blocks,
+    encode_positions,
+)
 from . import store
 
 #: doc rows have conv_id set; trailing HOT-STATS rows (the partition's
@@ -150,18 +157,39 @@ class BuildConfig:
             ascii_fold=self.ascii_fold,
         )
 
+    @classmethod
+    def from_params(cls, params: dict,
+                    partitions: int | None = None) -> "BuildConfig":
+        """The index properties a manifest records (`_manifest_params`).
+        They belong to the index, not to a caller: a segment appended or
+        merged under another analyzer chain or salt layout would split
+        the dictionary.  A key an older manifest lacks takes the
+        default."""
+        from ..analysis.analyzer import AnalyzerOptions
+
+        an = AnalyzerOptions.from_manifest(params.get("analyzer"))
+        return cls(
+            partitions=partitions,
+            stem=an.stem,
+            synonyms={k: list(v) for k, v in an.synonyms},
+            ascii_fold=an.ascii_fold,
+            **{k: params[k] for k in _INDEX_PARAMS if k in params},
+        )
+
+
+#: BuildConfig fields a manifest records (the analyzer chain travels as
+#: one `analyzer` entry)
+_INDEX_PARAMS = ("n_buckets", "k1", "b", "salt_df_threshold", "salt_target",
+                 "positions")
+
 
 # --------------------------------------------------------------- stage 1
 
 
 def _manifest_params(cfg: "BuildConfig") -> dict:
     opts = cfg.analyzer_opts()
-    params = {
-        "n_buckets": cfg.n_buckets, "k1": cfg.k1, "b": cfg.b,
-        "salt_df_threshold": cfg.salt_df_threshold,
-        "positions": cfg.positions,
-        "schema_version": 3 if opts.is_default() else 4,
-    }
+    params = {k: getattr(cfg, k) for k in _INDEX_PARAMS}
+    params["schema_version"] = 3 if opts.is_default() else 4
     if not opts.is_default():
         params["analyzer"] = opts.to_manifest()
     return params
@@ -285,15 +313,7 @@ def _stage_docmap(spark: SparkSession, transcripts: DataFrame, index_dir: str,
         # one job: per-partition counts (docID offsets) + field stats
         agg_rows = (
             lite.groupBy("pid")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum((F.col("dl") > 0).cast("long")).alias("nonempty"),
-                F.sum("dl").alias("sum_dl"),
-                *[
-                    F.sum(F.col(kf).isNotNull().cast("long")).alias(f"n_{kf}")
-                    for kf in KEYWORD_FIELDS
-                ],
-            )
+            .agg(F.count("*").alias("cnt"), *_field_stat_aggs())
             .collect()
         )
         counts = {r["pid"]: r["cnt"] for r in agg_rows}
@@ -330,23 +350,42 @@ def _stage_docmap(spark: SparkSession, transcripts: DataFrame, index_dir: str,
         )
     finally:
         stream.unpersist()
-    # per-(segment, field) stats rows, written driver-side (no Spark
-    # job); global stats are the SUM over segments, aggregated at read
-    # time exactly like IndexSearcher.collectionStatistics walks leaves.
-    # Keyword fields hold exactly one token per valued doc, so their
-    # sum_total_term_freq equals their doc_count.
+    _commit_field_stats(index_dir, seg, agg_rows, int(doc_base + acc))
+
+
+def _field_stat_aggs() -> list:
+    """Aggregates over docmap rows that `_commit_field_stats` turns into
+    per-field stats: the text field's non-empty docs and token total,
+    and each keyword field's valued docs."""
+    return [
+        F.sum((F.col("dl") > 0).cast("long")).alias("nonempty"),
+        F.sum("dl").alias("sum_dl"),
+        *[
+            F.sum(F.col(kf).isNotNull().cast("long")).alias(f"n_{kf}")
+            for kf in KEYWORD_FIELDS
+        ],
+    ]
+
+
+def _commit_field_stats(index_dir: str, seg: int, agg_rows,
+                        max_doc: int) -> None:
+    """Write segment `seg`'s per-field stats rows, summed over the
+    `_field_stat_aggs` rows given, then commit the docmap and
+    field_stats stages.  Written driver-side (no Spark job); global
+    stats are the SUM over segments, aggregated at read time exactly
+    like IndexSearcher.collectionStatistics walks leaves.  Keyword
+    fields hold exactly one token per valued doc, so their
+    sum_total_term_freq equals their doc_count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    max_doc = int(doc_base + acc)
-    fields = ["text"]
-    doc_counts = [int(sum(r["nonempty"] for r in agg_rows))]
-    sttfs = [int(sum(r["sum_dl"] for r in agg_rows))]
-    for kf in KEYWORD_FIELDS:
-        n_kf = int(sum(r[f"n_{kf}"] for r in agg_rows))
-        fields.append(kf)
-        doc_counts.append(n_kf)
-        sttfs.append(n_kf)
+    def total(col: str) -> int:
+        return int(sum(r[col] or 0 for r in agg_rows))
+
+    fields = ["text", *KEYWORD_FIELDS]
+    doc_counts = [total("nonempty"),
+                  *(total(f"n_{kf}") for kf in KEYWORD_FIELDS)]
+    sttfs = [total("sum_dl"), *doc_counts[1:]]
     fs_dir = os.path.join(index_dir, "field_stats", f"seg={seg}")
     os.makedirs(fs_dir, exist_ok=True)
     pq.write_table(
@@ -431,22 +470,54 @@ def _hot_terms_from_sidecar(sidecar_dir: str, cfg: BuildConfig) -> dict[str, int
 
     import pyarrow.parquet as pq
 
-    files = _glob.glob(os.path.join(sidecar_dir, "*.parquet"))
-    if not files:
-        return {}
     totals: dict[tuple[str, str], int] = {}
-    for f in files:
+    for f in _glob.glob(os.path.join(sidecar_dir, "*.parquet")):
         t = pq.read_table(f)
         for field, term, cnt in zip(
             t.column("field").to_pylist(), t.column("term").to_pylist(),
             t.column("cnt").to_pylist(),
         ):
             totals[(field, term)] = totals.get((field, term), 0) + int(cnt)
+    return _salt_map(totals, cfg)
+
+
+def _salt_map(dfs: dict, cfg: BuildConfig) -> dict:
+    """{(field, term): n_salts}: a term whose (estimated) doc_freq
+    exceeds salt_df_threshold is cut into ceil(df / salt_target)
+    doc-range salts."""
     return {
-        key: int(np.ceil(cnt / cfg.salt_target))
-        for key, cnt in totals.items()
-        if cnt > cfg.salt_df_threshold
+        key: int(np.ceil(df / cfg.salt_target))
+        for key, df in dfs.items()
+        if df > cfg.salt_df_threshold
     }
+
+
+def _emit_chunks(rows: list, field: str, term: str, docs, tfs, norms,
+                 poslists, n_salt: int, max_doc: int, n_buckets: int) -> None:
+    """Salt-split + block-encode one ascending (field, term) posting run
+    into CHUNK_COLS rows, the map-side output of both the build's
+    inversion and compaction's re-chunking (poslists: list of
+    per-posting position arrays, or None when positions are off)."""
+    bucket = term_bucket(term, n_buckets)
+    if n_salt > 1:
+        salts = docs * n_salt // max(max_doc, 1)
+        edges = [0, *(np.flatnonzero(np.diff(salts)) + 1).tolist(), docs.size]
+    else:
+        salts, edges = None, [0, docs.size]
+    for s0, s1 in zip(edges, edges[1:]):
+        salt = 0 if salts is None else int(salts[s0])
+        off = s0
+        for blk in encode_blocks(docs[s0:s1], tfs[s0:s1]):
+            e = off + blk["doc_count"]
+            rows.append((
+                field, term, salt, blk["kind"], blk["first_doc"],
+                blk["last_doc"], blk["doc_count"], int(tfs[off:e].sum()),
+                blk["max_tf"], blk["payload"], norms[off:e].tobytes(),
+                None if poslists is None
+                else encode_positions(poslists[off:e]),
+                bucket,
+            ))
+            off = e
 
 
 def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
@@ -469,46 +540,8 @@ def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
     from ..analysis.analyzer import (
         AnalyzerOptions, analyze_detailed_with, analyze_with,
     )
-    from .codec import encode_positions
 
     an_opts = an_opts or AnalyzerOptions()
-
-    def _emit(rows, field, term, docs, tfs, norms, poslists):
-        """Salt-split + block-encode one (field, term) posting list;
-        docs must be ascending (poslists: list of per-posting position
-        arrays, or None when positions are off)."""
-        n_salt = hot_salts.get((field, term), 1) if hot_salts else 1
-        bucket = term_bucket(term, n_buckets)
-        if n_salt > 1:
-            salts = (docs * n_salt // max(max_doc, 1)).astype(np.int32)
-            bounds = (np.flatnonzero(np.diff(salts)) + 1).tolist()
-            piece_edges = [0] + bounds + [docs.size]
-        else:
-            piece_edges = [0, docs.size]
-        for pi in range(len(piece_edges) - 1):
-            s0, s1 = piece_edges[pi], piece_edges[pi + 1]
-            pd_docs, pd_tfs, pd_norms = docs[s0:s1], tfs[s0:s1], norms[s0:s1]
-            salt = (
-                int(pd_docs[0] * n_salt // max(max_doc, 1))
-                if n_salt > 1 else 0
-            )
-            off = 0
-            for blk in encode_blocks(pd_docs, pd_tfs):
-                e = off + blk["doc_count"]
-                pos_payload = (
-                    encode_positions(poslists[s0 + off : s0 + e])
-                    if poslists is not None else None
-                )
-                rows.append(
-                    (
-                        field, term, salt, blk["kind"], blk["first_doc"],
-                        blk["last_doc"], blk["doc_count"],
-                        int(pd_tfs[off:e].sum()), blk["max_tf"],
-                        blk["payload"], pd_norms[off:e].tobytes(),
-                        pos_payload, bucket,
-                    )
-                )
-                off = e
 
     def invert(batches):
         # (field, term) -> [docs list, tfs list, norms list, poslists]
@@ -567,11 +600,56 @@ def _partial_postings_factory(hot_salts: dict[str, int], max_doc: int,
             docs, tfs, norms = docs[order], tfs[order], norms[order]
             if pl is not None:
                 pl = [pl[j] for j in order]
-            _emit(rows, field, term, docs, tfs, norms, pl)
+            _emit_chunks(rows, field, term, docs, tfs, norms, pl,
+                         hot_salts.get((field, term), 1), max_doc, n_buckets)
         if rows:
             yield pd.DataFrame(rows, columns=CHUNK_COLS)
 
     return invert
+
+
+#: the posting-block columns compaction's map side reads
+_RECHUNK_COLS = ("field", "term", "kind", "first_doc", "doc_count",
+                 "payload", "norms_payload", "pos_payload")
+
+
+def _rechunk_factory(hot_salts: dict, max_doc: int, n_buckets: int,
+                     positions: bool, deleted: np.ndarray):
+    """mapInPandas kernel over an index's posting blocks, compaction's
+    map side: each block is decoded, its tombstoned docs are dropped
+    (compaction applies deletes permanently, the reference's
+    merge-applies-deletes discipline) and the live postings are
+    re-chunked by `_emit_chunks` under the compacted index's salt map
+    and max_doc.  Re-salting is required because per-segment salts were
+    cut against different max_doc values.  The chunks are the build's,
+    so the build's shuffle and merge write them."""
+    def rechunk(batches):
+        for pdf in batches:
+            rows: list[tuple] = []
+            for field, term, kind, first_doc, doc_count, payload, nb, pos in (
+                zip(*(pdf[c].tolist() for c in _RECHUNK_COLS))
+            ):
+                docs, tfs = decode_block(dict(kind=kind, payload=payload,
+                                              doc_count=doc_count,
+                                              first_doc=first_doc))
+                norms = np.frombuffer(nb, dtype=np.uint8)
+                pl = (decode_positions(pos, tfs)
+                      if positions and field == "text" else None)
+                if deleted.size:
+                    at = np.searchsorted(deleted, docs)
+                    live = deleted[np.minimum(at, deleted.size - 1)] != docs
+                    if not live.any():
+                        continue
+                    docs, tfs, norms = docs[live], tfs[live], norms[live]
+                    if pl is not None:
+                        pl = [p for p, lv in zip(pl, live) if lv]
+                _emit_chunks(rows, field, term, docs, tfs, norms, pl,
+                             hot_salts.get((field, term), 1), max_doc,
+                             n_buckets)
+            if rows:
+                yield pd.DataFrame(rows, columns=CHUNK_COLS)
+
+    return rechunk
 
 
 def _merge_sorted_factory(positions: bool = False):
@@ -594,10 +672,6 @@ def _merge_sorted_factory(positions: bool = False):
     — the query engine plugs in the CURRENT global avgdl.  The encoder
     therefore needs no global statistics at all: exact term_stats are
     rolled up FROM the blocks afterwards."""
-    from .codec import (
-        BLOCK_SIZE, decode_block, decode_positions, encode_positions,
-    )
-
     cols = ("field", "term", "salt", "kind", "first_doc", "doc_count",
             "payload", "norms", "pos", "bucket")
 
@@ -677,22 +751,30 @@ def _stage_postings(spark: SparkSession, index_dir: str, cfg: BuildConfig,
                                   cfg.positions, cfg.analyzer_opts()),
         CHUNK_SCHEMA,
     )
-    # the only shuffle: an explicit-count repartition, which adaptive
-    # execution does not coalesce, so the merge runs as n_buckets tasks
-    postings = (
-        chunks.repartition(n_buckets, "bucket")
+    _write_postings(chunks, index_dir, seg, cfg, len(hot_salts))
+
+
+def _write_postings(chunks: DataFrame, index_dir: str, seg: int,
+                    cfg: BuildConfig, hot_terms: int) -> None:
+    """The one postings write path (build, NRT append and compaction):
+    CHUNK_SCHEMA rows go through ONE shuffle by term bucket, are sorted
+    by (field, term, salt, first_doc) within each partition, merged by
+    `_merge_sorted_factory` and written bucket-partitioned as segment
+    `seg`; then the postings stage commits.  The repartition has an
+    explicit count, which adaptive execution does not coalesce, so the
+    merge runs as n_buckets tasks."""
+    (
+        chunks.repartition(max(cfg.n_buckets, 1), "bucket")
         .sortWithinPartitions("field", "term", "salt", "first_doc")
         .mapInPandas(_merge_sorted_factory(cfg.positions), POSTINGS_SCHEMA)
-    )
-    (
-        postings.sortWithinPartitions("field", "term", "salt", "block_id")
+        .sortWithinPartitions("field", "term", "salt", "block_id")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(index_dir, "postings", f"seg={seg}"))
     )
     store.commit_stage(
         index_dir, "postings",
-        {"n_buckets": cfg.n_buckets, "hot_terms": len(hot_salts)},
+        {"n_buckets": cfg.n_buckets, "hot_terms": hot_terms},
     )
 
 
@@ -809,32 +891,13 @@ def append_segment(spark: SparkSession, transcripts: DataFrame,
     The batch becomes segment N+1 with docIDs based at the current
     max_doc (Lucene's per-leaf docBase); global term/field statistics are
     re-aggregated across all segments, and the manifest commit publishes
-    the new segment atomically (segments_N discipline)."""
+    the new segment atomically (segments_N discipline).  Of `cfg` only
+    `partitions` is used when the index has a manifest: every index
+    property comes from the manifest (IndexWriterConfig discipline)."""
     cfg = cfg or BuildConfig()
     params = store.get_params(index_dir)
     if params:
-        from ..analysis.analyzer import AnalyzerOptions
-
-        # appended segments must agree with the index's scoring params
-        # AND its analyzer chain — a per-field analyzer is an index
-        # property, not a caller choice (IndexWriterConfig discipline):
-        # appending unstemmed postings to a stemmed index would split
-        # the dictionary
-        an = AnalyzerOptions.from_manifest(params.get("analyzer"))
-        cfg = BuildConfig(
-            n_buckets=int(params.get("n_buckets", cfg.n_buckets)),
-            partitions=cfg.partitions,
-            salt_df_threshold=int(
-                params.get("salt_df_threshold", cfg.salt_df_threshold)
-            ),
-            salt_target=cfg.salt_target,
-            k1=float(params.get("k1", cfg.k1)),
-            b=float(params.get("b", cfg.b)),
-            positions=bool(params.get("positions", cfg.positions)),
-            stem=an.stem,
-            synonyms={k: list(v) for k, v in an.synonyms},
-            ascii_fold=an.ascii_fold,
-        )
+        cfg = BuildConfig.from_params(params, partitions=cfg.partitions)
     m = store.read_manifest(index_dir)
     seg = int(m.get("next_seg", 1))
     doc_base = read_field_stats(index_dir)["max_doc"]
@@ -857,134 +920,34 @@ def append_segment(spark: SparkSession, transcripts: DataFrame,
     return m
 
 
-def _compact_group_factory(n_buckets: int, positions: bool, max_doc: int,
-                           salt_df_threshold: int, salt_target: int,
-                           deleted: np.ndarray | None = None):
-    """applyInPandas kernel over ALL of one term's blocks (every segment,
-    every salt): decode, globally re-sort, RE-SALT against the compacted
-    doc range, re-encode.  Re-salting is required because per-segment
-    salts were computed against different max_doc values, so their
-    numeric order no longer follows doc order once segments merge.
-
-    Note (10^12 scale): this groups by term alone, so one task holds a
-    hot term's full list; the production refinement shuffles hot terms
-    by doc-range band first (same discipline as the build) — compaction
-    is an offline maintenance op, so the simple form is used here."""
-    from .codec import decode_block, decode_positions, encode_positions
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        field = pdf["field"].iloc[0]
-        term = pdf["term"].iloc[0]
-        has_pos = positions and field == "text"
-        d_parts, t_parts, n_parts, p_parts = [], [], [], []
-        for r in pdf.itertuples(index=False):
-            d, t = decode_block(
-                dict(kind=r.kind, payload=r.payload, doc_count=r.doc_count,
-                     first_doc=r.first_doc)
-            )
-            d_parts.append(d)
-            t_parts.append(t)
-            n_parts.append(np.frombuffer(r.norms_payload, dtype=np.uint8))
-            if has_pos:
-                p_parts.extend(decode_positions(r.pos_payload, t))
-        docs = np.concatenate(d_parts)
-        tfs = np.concatenate(t_parts)
-        norms = np.concatenate(n_parts)
-        order = np.argsort(docs, kind="stable")
-        docs, tfs, norms = docs[order], tfs[order], norms[order]
-        if has_pos:
-            p_parts = [p_parts[j] for j in order]
-        if deleted is not None and deleted.size:
-            # compaction applies tombstones permanently (the reference's
-            # merge-applies-deletes discipline)
-            idx_ = np.searchsorted(deleted, docs)
-            idx_[idx_ == deleted.size] = deleted.size - 1
-            live = deleted[idx_] != docs
-            docs, tfs, norms = docs[live], tfs[live], norms[live]
-            if has_pos:
-                p_parts = [p for p, lv in zip(p_parts, live) if lv]
-            if docs.size == 0:
-                return pd.DataFrame(columns=POSTINGS_COLS)
-        n_salt = (
-            int(np.ceil(docs.size / salt_target))
-            if docs.size > salt_df_threshold else 1
-        )
-        if n_salt > 1:
-            salts = (docs * n_salt // max(max_doc, 1)).astype(np.int32)
-            bounds = (np.flatnonzero(np.diff(salts)) + 1).tolist()
-            edges = [0] + bounds + [docs.size]
-        else:
-            edges = [0, docs.size]
-        ntab = NORM_TABLE[norms]
-        bucket = term_bucket(term, n_buckets)
-        rows = []
-        for pi in range(len(edges) - 1):
-            s0, s1 = edges[pi], edges[pi + 1]
-            salt = (
-                int(docs[s0] * n_salt // max(max_doc, 1)) if n_salt > 1 else 0
-            )
-            off = 0
-            for blk in encode_blocks(docs[s0:s1], tfs[s0:s1]):
-                e = off + blk["doc_count"]
-                rows.append(
-                    (
-                        field, term, salt, blk["block_id"], blk["kind"],
-                        blk["first_doc"], blk["last_doc"], blk["doc_count"],
-                        int(tfs[s0 + off : s0 + e].sum()), blk["payload"],
-                        norms[s0 + off : s0 + e].tobytes(),
-                        encode_positions(p_parts[s0 + off : s0 + e])
-                        if has_pos else None,
-                        blk["max_tf"],
-                        float(ntab[s0 + off : s0 + e].min()),
-                        bucket,
-                    )
-                )
-                off = e
-        return pd.DataFrame(rows, columns=POSTINGS_COLS)
-
-    return merge
-
-
-def compact_index(spark: SparkSession, index_dir: str, out_dir: str,
-                  cfg: BuildConfig | None = None) -> dict:
+def compact_index(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     """Merge every segment of an index into a single-segment index at
     `out_dir` — the SegmentMerger / TieredMergePolicy maintenance pass
     (index/SegmentMerger.java:80-133; TieredMergePolicy.java:81-86).
     docIDs are preserved (no docmap rebase needed: per-segment docBases
-    already form one global sequence), postings are block-merged WITHOUT
-    re-analysis, and the compacted manifest commits atomically."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    already form one global sequence), tombstoned docs are dropped, and
+    postings are re-chunked WITHOUT re-analysis and written by the
+    build's own shuffle and streaming merge (`_write_postings`).  The
+    index properties, analyzer chain included, come from the source
+    manifest, so the compacted manifest always describes the postings
+    it holds.  Salting follows the build's rule over the source's
+    term_stats; with deletes a term whose live doc_freq fell below the
+    threshold may stay salted, which changes the layout, never a hit.
+    `out_dir` must not be `index_dir`: the source is read while the new
+    index is written."""
+    import pyarrow.dataset as pads
 
-    params = store.get_params(index_dir)
-    if cfg is None:
-        from ..analysis.analyzer import AnalyzerOptions
-
-        an = AnalyzerOptions.from_manifest(params.get("analyzer"))
-        cfg = BuildConfig(
-            n_buckets=int(params.get("n_buckets", 16)),
-            k1=float(params.get("k1", 1.2)),
-            b=float(params.get("b", 0.75)),
-            salt_df_threshold=int(params.get("salt_df_threshold", 200_000)),
-            positions=bool(params.get("positions", False)),
-            # carry the analyzer chain: postings merge without
-            # re-analysis, but searchers re-create the QUERY analyzer
-            # from the compacted manifest, so dropping it would silently
-            # de-stem every query against the compacted index
-            stem=an.stem,
-            synonyms={k: list(v) for k, v in an.synonyms},
-            ascii_fold=an.ascii_fold,
-        )
-    os.makedirs(out_dir, exist_ok=True)
-    store.set_params(
-        out_dir,
-        _manifest_params(cfg),
-    )
     from .deletes import read_deleted
 
+    if os.path.realpath(out_dir) == os.path.realpath(index_dir):
+        raise ValueError(
+            f"compact_index: out_dir {out_dir!r} is the source index"
+        )
+    cfg = BuildConfig.from_params(store.get_params(index_dir))
+    os.makedirs(out_dir, exist_ok=True)
+    store.set_params(out_dir, _manifest_params(cfg))
     deleted = read_deleted(index_dir)
-    all_fs = read_all_field_stats(index_dir)
-    max_doc = max((v["max_doc"] for v in all_fs.values()), default=0)
+    max_doc = read_field_stats(index_dir)["max_doc"]
     # consolidated docmap (docIDs unchanged; tombstoned rows dropped —
     # compaction applies deletes permanently, like a Lucene merge)
     live_docmap = spark.read.parquet(
@@ -997,67 +960,32 @@ def compact_index(spark: SparkSession, index_dir: str, out_dir: str,
         live_docmap = live_docmap.join(
             F.broadcast(del_df), "doc_id", "left_anti"
         )
-    live_docmap.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "docmap", "seg=0")
+    docmap_dir = os.path.join(out_dir, "docmap", "seg=0")
+    live_docmap.write.mode("overwrite").parquet(docmap_dir)
+    # stats of the surviving docs (a merge recomputes statistics);
+    # max_doc stays the docID-space bound since docIDs are preserved
+    _commit_field_stats(
+        out_dir, 0,
+        spark.read.parquet(docmap_dir).agg(*_field_stat_aggs()).collect(),
+        max_doc,
     )
-    if deleted.size:
-        # stats must reflect the surviving docs (a merge recomputes
-        # per-segment stats); max_doc stays the docID-space bound since
-        # docIDs are preserved
-        agg = spark.read.parquet(
-            os.path.join(out_dir, "docmap", "seg=0")
-        ).agg(
-            F.sum((F.col("dl") > 0).cast("long")).alias("nonempty"),
-            F.sum("dl").alias("sum_dl"),
-            *[
-                F.sum(F.col(kf).isNotNull().cast("long")).alias(f"n_{kf}")
-                for kf in KEYWORD_FIELDS
-            ],
-        ).collect()[0]
-        all_fs = {
-            "text": {
-                "doc_count": int(agg["nonempty"] or 0),
-                "sum_total_term_freq": int(agg["sum_dl"] or 0),
-            },
-        }
-        for kf in KEYWORD_FIELDS:
-            n_kf = int(agg[f"n_{kf}"] or 0)
-            all_fs[kf] = {"doc_count": n_kf, "sum_total_term_freq": n_kf}
-    fs_dir = os.path.join(out_dir, "field_stats", "seg=0")
-    os.makedirs(fs_dir, exist_ok=True)
-    pq.write_table(
-        pa.table(
-            {
-                "field": pa.array(list(all_fs), pa.string()),
-                "doc_count": pa.array(
-                    [v["doc_count"] for v in all_fs.values()], pa.int64()
-                ),
-                "sum_total_term_freq": pa.array(
-                    [v["sum_total_term_freq"] for v in all_fs.values()],
-                    pa.int64(),
-                ),
-                "max_doc": pa.array([max_doc] * len(all_fs), pa.int64()),
-            }
-        ),
-        os.path.join(fs_dir, "part-0.parquet"),
+    hot = pads.dataset(
+        os.path.join(index_dir, "term_stats"), format="parquet"
+    ).to_table(
+        columns=["field", "term", "doc_freq"],
+        filter=pads.field("doc_freq") > cfg.salt_df_threshold,
+    ).to_pydict()
+    hot_salts = _salt_map(
+        dict(zip(zip(hot["field"], hot["term"]), hot["doc_freq"])), cfg
     )
-    store.commit_stage(out_dir, "docmap", {"max_doc": max_doc})
-    store.commit_stage(out_dir, "field_stats")
-    blocks = spark.read.parquet(os.path.join(index_dir, "postings"))
-    merge = _compact_group_factory(
-        cfg.n_buckets, cfg.positions, max_doc,
-        cfg.salt_df_threshold, cfg.salt_target,
-        deleted=deleted,
+    chunks = spark.read.parquet(
+        os.path.join(index_dir, "postings")
+    ).select(*_RECHUNK_COLS).mapInPandas(
+        _rechunk_factory(hot_salts, max_doc, max(cfg.n_buckets, 1),
+                         cfg.positions, deleted),
+        CHUNK_SCHEMA,
     )
-    (
-        blocks.groupBy("field", "term").applyInPandas(merge, POSTINGS_SCHEMA)
-        .repartition(max(cfg.n_buckets, 1), "bucket")
-        .sortWithinPartitions("field", "term", "salt", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(out_dir, "postings", "seg=0"))
-    )
-    store.commit_stage(out_dir, "postings")
+    _write_postings(chunks, out_dir, 0, cfg, len(hot_salts))
     _stage_term_stats(spark, out_dir)
     _stage_lineage(spark, out_dir, cfg, 0.0)
     return store.read_manifest(out_dir)

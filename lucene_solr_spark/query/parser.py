@@ -54,13 +54,13 @@ from ..analysis import analyze_query_terms
 from ..analysis.analyzer import analyze_detailed
 
 _TOKENS_RE = re.compile(
-    r'"[^"]*"(?:~\d+)?(?:\^[0-9.]+)?'   # quoted phrase [+slop][+boost]
+    r'"[^"]*"(?:~[^\s()!"^]*)?(?:\^[0-9.]+)?'  # phrase [~slop][^boost]
     r"|/[^/]*/(?:\^[0-9.]+)?"           # regexp [+boost]
     r"|\(|\)|&&|\|\||!|\+(?=[^\s])|-(?=[^\s])|#(?=[^\s])"
     r"|[^\s()!]+"
 )
 
-_FUZZY_RE = re.compile(r"^(.+?)~(\d*)$")
+_FUZZY_RE = re.compile(r"^([^~*?]+)~(\d*)$")
 _BOOST_RE = re.compile(r"^(.+?)\^([0-9]+(?:\.[0-9]+)?)$")
 _FIELD_RE = re.compile(r"^([A-Za-z_][A-Za-z0-9_]*):(.+)$", re.DOTALL)
 
@@ -318,7 +318,7 @@ class _Parser:
             return ("tsrange", v, v, True, True)
         # quoted phrase; "~n" = sloppy phrase (SloppyPhraseScorer)
         if t.startswith('"'):
-            m = re.match(r'^"([^"]*)"(?:~(\d+))?$', t)
+            m = re.match(r'^"([^"]*)"(?:~(\d*))?$', t)
             if not m:
                 raise QueryParseError(f"bad phrase {t!r}")
             body, slop = m.group(1), m.group(2)
@@ -368,9 +368,14 @@ class _Parser:
             hi = None if m.group(3) == "*" else m.group(3).lower()
             node = ("range", lo, hi, m.group(1) == "[", m.group(4) == "]")
             return ("boost", node, boost) if boost is not None else node
-        # fuzzy
-        m = _FUZZY_RE.match(t)
-        if m and "*" not in t and "?" not in t:
+        # fuzzy: `~` follows a term and takes only an optional NUMBER
+        # (QueryParser.jj <FUZZY_SLOP>); any other `~` is a syntax error
+        if "~" in t:
+            m = _FUZZY_RE.match(t)
+            if not m:
+                raise QueryParseError(
+                    f"bad fuzzy {t!r}: '~' follows a term and takes a number"
+                )
             edits = int(m.group(2)) if m.group(2) else 2
             if edits > 2:
                 raise QueryParseError("fuzzy maxEdits <= 2 (FuzzyQuery)")

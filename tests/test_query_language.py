@@ -105,11 +105,14 @@ def test_parser_shapes():
 @pytest.mark.parametrize("query", [
     "x^abc", "x^-1", '"a b"^x', "(x y)^z", "x^1.2.3", "/ab/^1.2.3",
     "a:b:c", "role:a:b", "text:a:b",
+    "x~-1", "x~a", "x~1.5", '"foo bar"~x', '"foo bar"~1.5', "(foo bar)~2",
 ])
 def test_malformed_boost_and_field_prefix(query):
-    """`^` takes only a NUMBER and an atom has one field prefix
-    (QueryParser.jj CARAT <NUMBER>, TERM ':' clause): malformed input is
-    a QueryParseError, never re-lexed into OR terms."""
+    """`^` takes only a NUMBER, `~` follows only a term or a quoted
+    phrase and takes only an optional NUMBER, and an atom has one field
+    prefix (QueryParser.jj CARAT <NUMBER>, <FUZZY_SLOP>, TERM ':'
+    clause): malformed input is a QueryParseError, never re-lexed into
+    OR terms."""
     with pytest.raises(QueryParseError):
         parse_query(query)
 

@@ -6,6 +6,7 @@ ingest micro-batches into segments exactly once."""
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from lucene_solr_spark.index.builder import (
@@ -151,6 +152,113 @@ def test_compaction_equivalence(spark, tmp_path):
     for q in ["retry AND deploy", "cache", "ba*", '"fix test flake"',
               "bakeka OR dupa OR cache", "retry -deploy"]:
         assert s1.search(q, 10) == s2.search(q, 10), q
+
+
+#: salted, so compaction must reproduce the build's salt split too
+SALTED = dict(n_buckets=4, salt_df_threshold=40, salt_target=50)
+
+
+def _table(d, name, key):
+    import pyarrow.dataset as pads
+
+    t = pads.dataset(os.path.join(d, name), format="parquet",
+                     partitioning="hive").to_table().to_pandas()
+    return (t.drop(columns=["seg"], errors="ignore")
+            .sort_values(key).reset_index(drop=True))
+
+
+@pytest.fixture(scope="module", params=[False, True],
+                ids=["docs_freqs", "positions"])
+def three_segments(request, spark, tmp_path_factory):
+    """(index of 3 segments, fresh build of the whole corpus): part 1 is
+    built with the salted config, parts 2 and 3 appended WITHOUT a cfg,
+    as `tools/build_cli.py` appends."""
+    cfg = BuildConfig(positions=request.param, **SALTED)
+    full = gen_transcripts_df(spark, n_convs=24, seed=9)
+    root = tmp_path_factory.mktemp("three_segments")
+    inc, fresh = str(root / "inc"), str(root / "fresh")
+    build_index(spark, full.filter("conv_id < 'conv00000008'"), inc, cfg)
+    append_segment(spark, full.filter(
+        "conv_id >= 'conv00000008' AND conv_id < 'conv00000016'"), inc)
+    append_segment(spark, full.filter("conv_id >= 'conv00000016'"), inc)
+    build_index(spark, full, fresh, cfg)
+    return inc, fresh
+
+
+def test_compaction_equals_fresh_build(spark, three_segments, tmp_path):
+    """Compaction (no cfg: every index property comes from the manifest,
+    salt_target included) writes the same index as one build of the
+    whole corpus: postings row for row with payload bytes, term_stats,
+    field_stats and the docmap."""
+    from lucene_solr_spark.index.builder import compact_index
+
+    inc, fresh = three_segments
+    out = str(tmp_path / "compacted")
+    compact_index(spark, inc, out)
+    for name, key in (("postings", ["field", "term", "salt", "block_id"]),
+                      ("term_stats", ["field", "term"]),
+                      ("field_stats", ["field"]),
+                      ("docmap", ["doc_id"])):
+        want = _table(fresh, name, key)
+        got = _table(out, name, key)[want.columns]
+        pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                      obj=name)
+    assert _table(out, "postings", ["field"])["salt"].max() > 0
+
+
+def test_compaction_postings_plan(spark, three_segments, tmp_path):
+    """Compaction writes postings through the build's path: the write
+    runs one shuffle and no grouped-pandas operator (a grouped merge
+    holds a hot term's whole list in one task)."""
+    from lucene_solr_spark.index.builder import compact_index
+
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        return list(conv.asJava(sql_store.executionsList()))
+
+    seen = {e.executionId() for e in executions()}
+    out = str(tmp_path / "compacted")
+    compact_index(spark, three_segments[0], out)
+    target = os.path.join(out, "postings", "seg=0")
+    writes = [e.physicalPlanDescription() for e in executions()
+              if e.executionId() not in seen
+              and "InsertIntoHadoopFsRelationCommand" in
+              e.physicalPlanDescription()
+              and f"path={target}]" in e.physicalPlanDescription()]
+    assert len(writes) == 1, writes
+    plan = writes[0]
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("Exchange (") == 1, plan
+    assert "FlatMapGroupsIn" not in plan, plan
+
+
+def test_compaction_refuses_its_source_dir(spark, tmp_path):
+    """compact_index(d, d) would overwrite the docmap it still has to
+    read: it is refused before anything is written, however the path
+    is spelt."""
+    from lucene_solr_spark.index.builder import compact_index
+
+    d = str(tmp_path / "src")
+    build_index(spark, gen_transcripts_df(spark, n_convs=3, seed=2), d,
+                BuildConfig(n_buckets=2))
+
+    def snapshot():
+        out = {}
+        for root, _, files in os.walk(d):
+            for f in files:
+                with open(os.path.join(root, f), "rb") as fh:
+                    out[os.path.join(root, f)] = fh.read()
+        return out
+
+    before = snapshot()
+    os.symlink(d, str(tmp_path / "alias"))
+    for same in (d, d + "/", os.path.join(d, "..", "src"),
+                 str(tmp_path / "alias")):
+        with pytest.raises(ValueError):
+            compact_index(spark, d, same)
+    assert snapshot() == before
 
 
 def test_index_batch_idempotent_per_batch_id(spark, tmp_path):
