@@ -229,8 +229,8 @@ SELECT doc_id, ROUND(score, 4) AS score FROM (
 def _simbase_term_sql(sim: str, term: str) -> str:
     """Single-term gate twin for the SimilarityBase family — the score
     expression comes from oracle.simbase_sql.oracle_sql_score, written
-    apart from the engine's gate columns (query/similarities.py
-    ``gate_col``) that it checks."""
+    apart from the engine's gate scoring (query/similarities.py
+    ``score64``) that it checks."""
     from lucene_solr_spark.oracle.simbase_sql import oracle_sql_score
 
     return f"""
@@ -262,7 +262,8 @@ def _engine64(spark: SparkSession, sf_dir: str):
     """The REAL distributed query engine over the gate index, in its
     double-precision gate mode (exact tf/df/dl scoring, DuckDB-stable —
     see query/distributed.py docstring).  Every BM25/phrase gate entry
-    runs through the full parse -> rewrite -> DataFrame-plan path."""
+    runs through the full parse -> rewrite -> shard-search -> merge
+    path."""
     from lucene_solr_spark.query.distributed import DistributedSearcher
 
     idx = _ensure_index(spark, sf_dir)

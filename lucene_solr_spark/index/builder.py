@@ -762,12 +762,15 @@ def _write_postings(chunks: DataFrame, index_dir: str, seg: int,
     `_merge_sorted_factory` and written bucket-partitioned as segment
     `seg`; then the postings stage commits.  The repartition has an
     explicit count, which adaptive execution does not coalesce, so the
-    merge runs as n_buckets tasks."""
+    merge runs as n_buckets tasks.  The write's sort leads with the
+    partition column `bucket`, so it satisfies the writer's required
+    ordering and stays the plan's one sort above the merge: rows land
+    in each file in (field, term, salt, block_id) order."""
     (
         chunks.repartition(max(cfg.n_buckets, 1), "bucket")
         .sortWithinPartitions("field", "term", "salt", "first_doc")
         .mapInPandas(_merge_sorted_factory(cfg.positions), POSTINGS_SCHEMA)
-        .sortWithinPartitions("field", "term", "salt", "block_id")
+        .sortWithinPartitions("bucket", "field", "term", "salt", "block_id")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(os.path.join(index_dir, "postings", f"seg={seg}"))

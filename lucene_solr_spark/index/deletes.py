@@ -48,17 +48,20 @@ def delete_docs(index_dir: str, doc_ids) -> dict:
     return m
 
 
-def read_deleted(index_dir: str) -> np.ndarray:
-    """Sorted unique deleted docIDs (empty array when none)."""
+def read_deleted(index_dir: str, among=None) -> np.ndarray:
+    """Sorted unique deleted docIDs (empty array when none); `among`
+    restricts the read to those ids, a filter pushed into the scan."""
     import glob
 
     import pyarrow.parquet as pq
 
     files = glob.glob(os.path.join(_deletes_dir(index_dir), "del-*.parquet"))
-    if not files:
+    if not files or among is not None and not len(among):
         return np.empty(0, dtype=np.int64)
+    filters = None if among is None else [("doc_id", "in", list(among))]
     parts = [
-        pq.read_table(f, columns=["doc_id"]).column("doc_id").to_numpy()
+        pq.read_table(f, columns=["doc_id"], filters=filters)
+        .column("doc_id").to_numpy()
         for f in files
     ]
     return np.unique(np.concatenate(parts)).astype(np.int64)

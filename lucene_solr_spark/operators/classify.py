@@ -30,9 +30,11 @@
   getTextTermFreqForClass).
 
 Spark-first: the class field is a keyword field of THIS index, so
-every statistic is index-derived — hits(w,c) is one pruned decode of
-the input's distinct tokens joined to the docmap class column and
-grouped by (term, class) (one shuffle bounded by tokens × classes);
+every statistic is index-derived — hits(w,c) comes from one
+DistributedSearcher shard pass over the input's distinct tokens (live
+docs only, like the reference's IndexSearcher counts), joined to the
+docmap class column and grouped by (term, class) (one shuffle bounded
+by tokens × classes);
 priors and avgU are two scalar aggregates on term_stats.  Scoring is
 a class×token grid built with a cross join of two tiny frames (absent
 (w,c) pairs still contribute the +1-smoothed ln(1/den), exactly the
@@ -42,6 +44,7 @@ from __future__ import annotations
 import math
 import os
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,9 +102,18 @@ def naive_bayes_classify_df(spark: SparkSession, index_dir: str,
         .agg(F.sum("doc_freq")).collect()[0][0]
     )
     avg_u = float(sum_df) / float(fs_t["doc_count"] or 1)
-    # hits(w, c): pruned decode of the distinct tokens -> class join
+    # hits(w, c): each shard's live (token, doc) pairs -> class join
+    distinct = sorted(set(tokens))
+
+    def token_docs(searcher):
+        return pd.DataFrame(
+            [(t, d) for t in distinct
+             for d, _ in searcher.search(("term", t), None)],
+            columns=["term", "doc_id"],
+        )
+
     hits = (
-        ds._decoded_tf_df(sorted(set(tokens)))
+        ds._on_shards(token_docs, "term string, doc_id long")
         .join(
             spark.read.parquet(os.path.join(index_dir, "docmap"))
             .select("doc_id",

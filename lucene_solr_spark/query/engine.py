@@ -53,7 +53,7 @@ class _TermPostings:
     __slots__ = ("term", "n_docs", "ttf", "clause", "blocks", "_decoded",
                  "_full")
 
-    def __init__(self, term: str, block_rows: list[dict]):
+    def __init__(self, term: str, block_rows: list[dict], doc_range=None):
         self.term = term
         # segments are docBase-ordered and salts doc-range ordered within
         # a segment -> (seg, salt, block_id) order is global doc order;
@@ -65,8 +65,14 @@ class _TermPostings:
         self.n_docs = sum(b["doc_count"] for b in self.blocks)
         #: collection totalTermFreq, rolled up from block metadata
         self.ttf = sum(int(b.get("sum_tf") or 0) for b in self.blocks)
-        #: the (docFreq, totalTermFreq) clause a Similarity weighs
+        #: the (docFreq, totalTermFreq) clause a Similarity weighs — over
+        #: ALL of the term's blocks, so a shard scores with global stats
         self.clause = (self.n_docs, self.ttf)
+        if doc_range is not None:
+            # a shard decodes only the blocks overlapping [lo, hi)
+            lo, hi = doc_range
+            self.blocks = [b for b in self.blocks
+                           if b["last_doc"] >= lo and b["first_doc"] < hi]
         self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._full: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
 
@@ -180,23 +186,40 @@ class LocalSearcher:
     otherwise, or when the collector declines, the exhaustive evaluator
     `_eval` scores every match.  `pruning=False` is the exhaustive
     evaluator and nothing else.
+
+    `dtype="float64"` is the gate mode: leaf scores are the model's
+    ``weight64``/``score64`` over the exact docmap doc length, node sums
+    stay double, and only `_eval` runs.  `doc_range=(lo, hi)` (hi None:
+    open-ended) makes a shard of DistributedSearcher: only blocks
+    overlapping the range are decoded, term stats stay global, and a
+    doc outside the range is masked like a tombstone.
     """
 
     def __init__(self, index_dir: str, pruning: bool = True,
                  similarity: str = "bm25", mu: float = 2000.0,
                  lmjm_lambda: float = 0.1,
-                 dense_budget_mb: int | None = None):
+                 dense_budget_mb: int | None = None, dtype: str = "float32",
+                 doc_range: tuple[int, int | None] | None = None):
+        if dtype not in ("float32", "float64"):
+            raise ValueError(
+                f"dtype must be float32 or float64, got {dtype!r}")
         self.index_dir = index_dir
         self.pruning = pruning
         self.similarity = similarity
+        #: score type of every leaf and node (float32 serving, float64 gate)
+        self._st = np.dtype(dtype).type
+        #: [lo, hi) of a shard, None for the whole index
+        self._range = None if doc_range is None else (
+            int(doc_range[0]),
+            np.iinfo(np.int64).max if doc_range[1] is None
+            else int(doc_range[1]),
+        )
         # warm-path memory budget -> dense structure bounds (SCALE.md
         # "Warm-path memory budget"): maxDoc cap at 16 B/doc, and at
         # most half the budget for the hot-term table cache (5 B/doc
         # per cached term: float32 table + derived bool mask)
         if dense_budget_mb is None:
-            dense_budget_mb = int(os.environ.get(
-                "LSS_DENSE_BUDGET_MB", self._DENSE_BUDGET_MB_DEFAULT
-            ))
+            dense_budget_mb = self._DENSE_BUDGET_MB_DEFAULT
         self.dense_budget_bytes = dense_budget_mb << 20
         self._DENSE_MAX_DOC = max(1, self.dense_budget_bytes // 16)
         with open(os.path.join(index_dir, "_manifest.json")) as f:
@@ -227,6 +250,9 @@ class LocalSearcher:
         )
         self.sim = self._make_sim(self.doc_count, self.sum_ttf)
         self._field_sims = {"text": self.sim}
+        #: the collector and the dense-table paths assume float32 scores
+        #: that are positive at every posting
+        self._prunable = self.sim.prunable and self._st is np.float32
         self._postings_ds = pads.dataset(
             os.path.join(index_dir, "postings"), format="parquet",
             partitioning="hive",
@@ -239,6 +265,24 @@ class LocalSearcher:
         #: and stats unchanged until compaction — the reference's
         #: pre-merge delete semantics)
         self._deleted = read_deleted(index_dir)
+        if self._st is np.float64:
+            # exact doc lengths (docmap `dl`) of the searcher's range,
+            # sorted by doc_id, plus a sentinel for docs past the last
+            # one (outside the range, so masked anyway)
+            import pyarrow.compute as pc
+
+            lo, hi = self._range or (0, np.iinfo(np.int64).max)
+            tbl = pads.dataset(
+                os.path.join(index_dir, "docmap"), format="parquet",
+                partitioning="hive",
+            ).to_table(columns=["doc_id", "dl"],
+                       filter=(pc.field("doc_id") >= lo)
+                       & (pc.field("doc_id") < hi))
+            ids = tbl.column("doc_id").to_numpy()
+            order = np.argsort(ids)
+            self._dl_ids = ids[order]
+            self._dl = np.append(
+                tbl.column("dl").to_numpy().astype(np.float64)[order], 1.0)
 
     # ------------------------------------------------------------ fetch
     def _tp(self, term: str, field: str = "text") -> _TermPostings:
@@ -267,7 +311,8 @@ class LocalSearcher:
             if key in by_key:
                 by_key[key].append(r)
         for (f, t) in missing:
-            self._term_cache[(f, t)] = _TermPostings(t, by_key[(f, t)])
+            self._term_cache[(f, t)] = _TermPostings(t, by_key[(f, t)],
+                                                     self._range)
 
     # ---------------------------------------------------------- scoring
     def _field_sim(self, field: str):
@@ -280,6 +325,18 @@ class LocalSearcher:
                 fs.get("doc_count"), fs.get("sum_total_term_freq")
             )
         return got
+
+    def _leaf(self, clauses, freq, norms, docs, sim=None) -> np.ndarray:
+        """Scores of one leaf weighed over `clauses` at `docs`: float32
+        from the norm bytes, or in gate mode double from the exact docmap
+        `dl` (``norms=None``: an omitNorms keyword field)."""
+        sim = sim or self.sim
+        if self._st is np.float32:
+            return sim.score(sim.weight(clauses),
+                             freq.astype(np.float32, copy=False), norms)
+        dl = (None if norms is None
+              else self._dl[np.searchsorted(self._dl_ids, docs)])
+        return sim.score64(sim.weight64(clauses), freq, dl)
 
     def _term_full(self, term: str, ranked: bool = False):
         """(docs, scores) of the term's whole list; ranked=True adds
@@ -296,10 +353,8 @@ class LocalSearcher:
         if hit is None:
             tp = self._tp(term)
             docs, tfs, norms = tp.decode_all()
-            hit = got[term] = [
-                docs, self.sim.score(self.sim.weight([tp.clause]),
-                                     tfs.astype(np.float32), norms), None,
-            ]
+            hit = got[term] = [docs, self._leaf([tp.clause], tfs, norms, docs),
+                               None]
         if not ranked:
             return hit[0], hit[1]
         if hit[2] is None:
@@ -332,7 +387,7 @@ class LocalSearcher:
         hi = np.searchsorted(candidates, ld, side="right")
         idxs = np.flatnonzero(hi > lo)
         if (idxs.size * 4 >= len(tp.blocks)
-                and self.sim.prunable
+                and self._prunable
                 and tp.n_docs * self._DENSE_CACHE_FRAC
                 >= self.max_doc + 1
                 and self.max_doc + 1 <= self._DENSE_MAX_DOC):
@@ -354,10 +409,8 @@ class LocalSearcher:
         if docs.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         mask = _sorted_isin(docs, candidates)
-        return docs[mask], self.sim.score(
-            self.sim.weight([tp.clause]), tfs[mask].astype(np.float32),
-            norms[mask],
-        )
+        return docs[mask], self._leaf([tp.clause], tfs[mask], norms[mask],
+                                      docs[mask])
 
     # ---------------------------------------------------------- rewrite
     def _terms_dataset(self):
@@ -536,8 +589,8 @@ class LocalSearcher:
         if cand.size == 0:
             return empty
         # weight over clauses (duplicates included, like termStats[])
-        w = self.sim.weight([tp.clause for tp in tps])
-        return cand, self.sim.score(w, freqs, norms0)
+        return cand, self._leaf([tp.clause for tp in tps], freqs, norms0,
+                                cand)
 
     def _eval(self, node) -> tuple[np.ndarray, np.ndarray]:
         # per-search memo: composite subtrees are evaluated once even
@@ -557,9 +610,8 @@ class LocalSearcher:
         collection stats, omitNorms scoring (StringField norms == null)."""
         tp = self._tp(term, field)
         docs, tfs, _ = tp.decode_all()
-        sim = self._field_sim(field)
-        return docs, sim.score(sim.weight([tp.clause]),
-                               tfs.astype(np.float32), None)
+        return docs, self._leaf([tp.clause], tfs, None, docs,
+                                self._field_sim(field))
 
     def _ts_docs(self, node) -> np.ndarray:
         """Sorted docIDs whose `ts` lies in the range — the
@@ -785,11 +837,10 @@ class LocalSearcher:
         cand, freqs, normsb = cand[mask], freqs[mask], normsb[mask]
         if cand.size == 0:
             return empty
-        w = self.sim.weight(
+        return cand, self._leaf(
             [self._tp(t).clause
-             for t in sorted(set(span_terms(node, scoring=True, top=True)))]
-        )
-        return cand, self.sim.score(w, freqs, normsb)
+             for t in sorted(set(span_terms(node, scoring=True, top=True)))],
+            freqs, normsb, cand)
 
     def _synonym_eval(self, terms: list[str]
                       ) -> tuple[np.ndarray, np.ndarray]:
@@ -798,12 +849,14 @@ class LocalSearcher:
         (SynonymScorer), weight from pseudo stats docFreq = max,
         totalTermFreq = sum; same doc => same norm byte, so norms come
         from whichever synonym saw the doc."""
-        tps = [self._tp(t) for t in terms if self._tp(t).blocks]
-        if not tps:
+        tps = [self._tp(t) for t in terms]
+        if not any(tp.blocks for tp in tps):
             return np.empty(0, np.int64), np.empty(0, np.float32)
+        # the pseudo-term's stats cover every synonym, also one with no
+        # blocks in a shard's range
         df = max(tp.n_docs for tp in tps)
         ttf = sum(tp.ttf for tp in tps)
-        parts = [tp.decode_all() for tp in tps]
+        parts = [tp.decode_all() for tp in tps if tp.blocks]
         docs_u = np.unique(np.concatenate([p[0] for p in parts]))
         freq = np.zeros(docs_u.size, dtype=np.float32)
         norms = np.zeros(docs_u.size, dtype=np.uint8)
@@ -811,8 +864,7 @@ class LocalSearcher:
             idx = np.searchsorted(docs_u, d)
             np.add.at(freq, idx, tfs.astype(np.float32))
             norms[idx] = nb
-        return docs_u, self.sim.score(self.sim.weight([(df, ttf)]), freq,
-                                      norms)
+        return docs_u, self._leaf([(df, ttf)], freq, norms, docs_u)
 
     def _eval_inner(self, node) -> tuple[np.ndarray, np.ndarray]:
         kind = node[0]
@@ -829,7 +881,7 @@ class LocalSearcher:
         if kind == "tsrange":
             # PointRangeQuery is constant-score (1.0) as a scoring clause
             docs = self._ts_docs(node)
-            return docs, np.ones(docs.size, dtype=np.float32)
+            return docs, np.ones(docs.size, dtype=self._st)
         if kind == "reqfilter":
             # Occur.FILTER: must match, contributes no score
             # (BooleanQuery.java:184-205 needsScores=false clauses)
@@ -856,7 +908,8 @@ class LocalSearcher:
             return docs, np.ones(docs.size, dtype=np.float32)
         if kind == "boost":
             docs, scores = self._eval(node[1])
-            return docs, (scores * np.float32(node[2])).astype(np.float32)
+            return docs, (scores.astype(self._st, copy=False)
+                          * self._st(node[2])).astype(self._st)
         if kind == "phrase":
             return self._eval_phrase(node[1], node[2] if len(node) > 2 else 0)
         if kind == "msm_or":
@@ -885,7 +938,7 @@ class LocalSearcher:
                 c64 = cs.astype(np.float64)
                 np.add.at(total, idx, c64)
                 np.maximum.at(mx, idx, c64)
-            return docs, (mx + (total - mx) * tie).astype(np.float32)
+            return docs, (mx + (total - mx) * tie).astype(self._st)
         if kind == "andnot":
             docs, scores = self._eval(node[1])
             if docs.size == 0:
@@ -904,7 +957,7 @@ class LocalSearcher:
                 m = _sorted_isin(od, rd)
                 od, os_ = od[m], os_[m]
                 total[np.searchsorted(rd, od)] += os_.astype(np.float64)
-            return rd, total.astype(np.float32)
+            return rd, total.astype(self._st)
         children = node[1]
         if kind == "and":
             # WARM, comparably-sized lists: one dense count+sum pass
@@ -915,7 +968,7 @@ class LocalSearcher:
             # lookups touch only O(min df) postings, so it stays the
             # winner; cold term lists also keep the leapfrog, whose
             # block-range skipping avoids decoding non-candidate blocks.
-            if self.max_doc + 1 <= self._DENSE_MAX_DOC and self.sim.prunable:
+            if self.max_doc + 1 <= self._DENSE_MAX_DOC and self._prunable:
                 tnames = [t for f, t in self._collect_terms(node)
                           if f == "text"]
                 costs = [self._cost_of(c) for c in children]
@@ -979,7 +1032,7 @@ class LocalSearcher:
                     cd, cs = self._eval_at(ch, cand)
                 idx = np.searchsorted(cand, cd)
                 total[idx] += cs.astype(np.float64)
-            return cand, total.astype(np.float32)
+            return cand, total.astype(self._st)
         if kind == "or":
             # scatter-accumulate (_sum_parts): disjunction cost scales
             # with sum(df) — a mask-first gather would pay
@@ -989,15 +1042,14 @@ class LocalSearcher:
         raise ValueError(kind)
 
     #: default warm-path memory budget (MB) — overridable per instance
-    #: (LocalSearcher(dense_budget_mb=...)) or process
-    #: (LSS_DENSE_BUDGET_MB).  _DENSE_MAX_DOC is DERIVED from it in
-    #: __init__ as budget/16 bytes-per-doc (the per-doc residency of
-    #: the dense structures: 8 B transient float64 accumulator + 4 B
-    #: one hot score table + 1 B derived mask + 1 B TA seen bitmap +
-    #: slack — see SCALE.md "Warm-path memory budget"); the default
-    #: 128 MB keeps the historical 2^23-doc shard bound.  Beyond the
-    #: bound the sparse sort-merge path takes over — correctness never
-    #: depends on the budget.
+    #: (LocalSearcher(dense_budget_mb=...)).  _DENSE_MAX_DOC is DERIVED
+    #: from it in __init__ as budget/16 bytes-per-doc (the per-doc
+    #: residency of the dense structures: 8 B transient float64
+    #: accumulator + 4 B one hot score table + 1 B derived mask + 1 B TA
+    #: seen bitmap + slack — see SCALE.md "Warm-path memory budget");
+    #: the default 128 MB keeps the historical 2^23-doc shard bound.
+    #: Beyond the bound the sparse sort-merge path takes over —
+    #: correctness never depends on the budget.
     _DENSE_BUDGET_MB_DEFAULT = 128
     _DENSE_MAX_DOC = (128 << 20) // 16  # class fallback == default
 
@@ -1113,7 +1165,7 @@ class LocalSearcher:
         dense table for a cold high-df composite child would force a
         full-postings decode and defeat block pruning on first-touch
         queries."""
-        if self.max_doc + 1 <= self._DENSE_MAX_DOC and self.sim.prunable:
+        if self.max_doc + 1 <= self._DENSE_MAX_DOC and self._prunable:
             tnames = [t for f, t in self._collect_terms(node) if f == "text"]
             if not tnames or not self._mostly_undecoded(tnames):
                 m = self._dense_mask(node)
@@ -1168,7 +1220,7 @@ class LocalSearcher:
                     if min_match is not None:
                         cnt[cd] += 1
                 docs = np.flatnonzero(seen)
-                scores = buf[docs].astype(np.float32)
+                scores = buf[docs].astype(self._st)
                 if min_match is not None:
                     keep = cnt[docs] >= min_match
                     out = (docs[keep], scores[keep])
@@ -1197,8 +1249,8 @@ class LocalSearcher:
                 np.add.at(cnts, idx, 1)
         if min_match is not None:
             keep = cnts >= min_match
-            return docs[keep], total[keep].astype(np.float32)
-        return docs, total.astype(np.float32)
+            return docs[keep], total[keep].astype(self._st)
+        return docs, total.astype(self._st)
 
     # ------------------------------------------------------ collector
     def _mostly_undecoded(self, terms: list[str]) -> bool:
@@ -1259,7 +1311,7 @@ class LocalSearcher:
                 sel = order[pos:pos + step]
                 pos, step = pos + sel.size, 2 * step
                 d, sc = docs[sel], scores[sel]
-                keep = _live(d, sc, after, self._deleted)
+                keep = _live(d, sc, after, self._deleted, self._range)
                 hits += zip(d[keep].tolist(), sc[keep].tolist())
             return hits[:k]
         mask = None if flat else self._dense_mask(node)
@@ -1278,7 +1330,7 @@ class LocalSearcher:
                 cand = self._tp(lead[1]).decode_all()[0]
                 cand = cand[mask[cand]]
                 return _topk_hits(cand, self._dense_scores_at(node, cand),
-                                  k, after=after, deleted=self._deleted)
+                                  k, after, self._deleted, self._range)
         cursors = ([_BlockCursor(self._tp(t), self.sim) for t in terms]
                    if cold else
                    [_ListCursor(*self._term_full(t, ranked=True))
@@ -1332,7 +1384,7 @@ class LocalSearcher:
                 cand = np.sort(cand)
                 cs = (self._complete_scores(terms, cand) if cold
                       else self._dense_scores_at(node, cand))
-            keep = _live(cand, cs, after, self._deleted)
+            keep = _live(cand, cs, after, self._deleted, self._range)
             kept_d.append(cand[keep])
             kept_s.append(cs[keep])
             pool = np.concatenate([pool, cs[keep]])
@@ -1463,14 +1515,13 @@ class LocalSearcher:
             return []
         self._load_terms(self._collect_terms(node))
         self._eval_memo: dict = {}
-        if (self.pruning and k is not None and self.sim.prunable
+        if (self.pruning and k is not None and self._prunable
                 and node[0] in ("term", "and", "or", "msm_or")):
             hits = self._collect(node, k, after=after)
             if hits is not None:
                 return hits
         docs, scores = self._eval(node)
-        return _topk_hits(docs, scores, k, after=after,
-                          deleted=self._deleted)
+        return _topk_hits(docs, scores, k, after, self._deleted, self._range)
 
 
 def rewrite(node, terms_ds):
@@ -1540,16 +1591,19 @@ def _sorted_isin(values: np.ndarray, sorted_unique: np.ndarray) -> np.ndarray:
 
 
 def _live(docs: np.ndarray, scores: np.ndarray, after,
-          deleted: np.ndarray) -> np.ndarray:
-    """Collectable docs: not tombstoned (liveDocs) and strictly after
-    the (doc_id, score) `after` cursor in (score desc, docID asc) order
+          deleted: np.ndarray, doc_range=None) -> np.ndarray:
+    """Collectable docs: not tombstoned (liveDocs), inside the shard's
+    [lo, hi) `doc_range` when there is one, and strictly after the
+    (doc_id, score) `after` cursor in (score desc, docID asc) order
     (searchAfter pages compete only past the cursor,
     search/IndexSearcher.java:411-446)."""
     keep = np.ones(docs.size, dtype=bool)
     if deleted.size:
         keep &= ~_sorted_isin(docs, deleted)
+    if doc_range is not None:
+        keep &= (docs >= doc_range[0]) & (docs < doc_range[1])
     if after is not None:
-        a_doc, a_score = int(after[0]), np.float32(after[1])
+        a_doc, a_score = int(after[0]), scores.dtype.type(after[1])
         keep &= (scores < a_score) | ((scores == a_score) & (docs > a_doc))
     return keep
 
@@ -1621,18 +1675,17 @@ class _BlockCursor(_Cursor):
 
 
 def _topk_hits(docs: np.ndarray, scores: np.ndarray,
-               k: int | None, after=None,
-               deleted: np.ndarray | None = None) -> list[tuple[int, float]]:
+               k: int | None, after=None, deleted: np.ndarray | None = None,
+               doc_range=None) -> list[tuple[int, float]]:
     """(score desc, docID asc) top-k without a full sort: partition on
     the k-th score, lexsort only the surviving candidates (incl. ties at
     the threshold so the docID tie-break is exact —
-    HitQueue.java:76-81).  `after` filters to docs strictly after the
-    cursor before selection (searchAfter); `deleted` masks tombstoned
-    docs (liveDocs at collection time)."""
-    if docs.size and (after is not None
+    HitQueue.java:76-81).  `after`, `deleted` and `doc_range` mask docs
+    before selection (`_live`: searchAfter cursor, liveDocs, shard)."""
+    if docs.size and (after is not None or doc_range is not None
                       or deleted is not None and deleted.size):
         keep = _live(docs, scores, after,
-                     deleted if deleted is not None else docs[:0])
+                     deleted if deleted is not None else docs[:0], doc_range)
         docs, scores = docs[keep], scores[keep]
     if docs.size == 0:
         return []

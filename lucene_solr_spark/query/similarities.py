@@ -24,14 +24,10 @@ Each object has:
 - ``weight64(clauses)`` / ``score64(w, freq, dl)`` — float64 gate mode:
   all-double with the EXACT docmap length `dl`, in the operation order
   of the ANSI-SQL twin (DuckDB, ``oracle/simbase_sql.py`` and
-  ``__spark_entry__``).  numpy's ``np.log`` differs from libm's ``log``
-  by one ulp on about a fifth of doubles, so the phrase, span, synonym
-  and keyword gate leaves scored here match the twin after the gates'
-  ``ROUND(score, 4)``, not bit for bit; ``dl=None`` is the omitNorms
-  case.
-- ``gate_col()`` — the gate-mode Spark Column over ``tf``, ``dl``,
-  ``doc_freq`` and ``total_term_freq``, in the same double operation
-  order (``LN(1+x)``, not log1p).
+  ``__spark_entry__``; ``LN(1+x)``, not log1p).  numpy's ``np.log``
+  differs from libm's ``log`` by one ulp on about a fifth of doubles,
+  so gate scores match the twin after the gates' ``ROUND(score, 4)``,
+  not bit for bit; ``dl=None`` is the omitNorms case.
 - ``block_bound(w, max_tf, min_ntab)`` — for ``prunable`` models: a
   sound upper bound of ``score`` over a posting block from its stored
   (max_tf, min_ntab) metadata.  ``prunable`` also promises score > 0 at
@@ -140,19 +136,6 @@ class BM25(Similarity):
         )
         return w * (self.k1d + 1.0) * fq / (fq + norm)
 
-    def gate_col(self):
-        from pyspark.sql import functions as F
-
-        tf, df = F.col("tf").cast("double"), F.col("doc_freq")
-        return (
-            F.log(F.lit(1.0) + (F.lit(self.doc_count) - df + 0.5)
-                  / (df + 0.5))
-            * F.lit(self.k1d + 1.0) * tf
-            / (tf + F.lit(self.k1d) * (
-                F.lit(1.0 - self.bd)
-                + F.lit(self.bd) * F.col("dl") / F.lit(self.avgdl64)))
-        )
-
     def block_bound(self, w, max_tf, min_ntab):
         """score <= w * max_tf / (max_tf + k1 * ((1-b) + b * min_ntab /
         avgdl)): increasing in tf, decreasing in docLen; the 1+1e-6
@@ -209,16 +192,6 @@ class Classic(Similarity):
     def score64(self, w, freq, dl):
         raw = np.sqrt(freq.astype(np.float64)) * w
         return raw if dl is None else raw / np.sqrt(dl.astype(np.float64))
-
-    def gate_col(self):
-        from pyspark.sql import functions as F
-
-        return (
-            F.sqrt(F.col("tf").cast("double"))
-            * (F.log((F.lit(self.doc_count) + 1.0)
-                     / (F.col("doc_freq") + 1.0)) + F.lit(1.0))
-            / F.sqrt(F.col("dl").cast("double"))
-        )
 
     def block_bound(self, w, max_tf, min_ntab):
         """score <= sqrt(max_tf) * w / sqrt(min_ntab): the norm
@@ -288,18 +261,6 @@ class LMDirichlet(_LM):
             total += np.maximum(log(1.0 + fq / (mu * pc)) + dnorm, 0.0)
         return total
 
-    def gate_col(self):
-        from pyspark.sql import functions as F
-
-        mu = F.lit(self.mu)
-        pc = ((F.col("total_term_freq") + F.lit(1.0))
-              / F.lit(self.sum_ttf + 1.0))
-        return F.greatest(
-            F.lit(0.0),
-            F.log(F.lit(1.0) + F.col("tf").cast("double") / (mu * pc))
-            + F.log(mu / (F.col("dl") + mu)),
-        )
-
     def explain(self, clause, omit_norms=False):
         return {"mu": self.mu, **super().explain(clause)}
 
@@ -333,18 +294,6 @@ class LMJelinekMercer(_LM):
             total += log(1.0 + ((1.0 - lam) * fq / dl) / (lam * pc))
         return total
 
-    def gate_col(self):
-        from pyspark.sql import functions as F
-
-        pc = ((F.col("total_term_freq") + F.lit(1.0))
-              / F.lit(self.sum_ttf + 1.0))
-        return F.log(
-            F.lit(1.0)
-            + (F.lit(1.0 - self.lam) * F.col("tf").cast("double")
-               / F.col("dl"))
-            / (F.lit(self.lam) * pc)
-        )
-
     def block_bound(self, w, max_tf, min_ntab):
         """Rises with tf, falls with docLen (min_ntab is the block's
         smallest decoded docLen)."""
@@ -363,9 +312,8 @@ class SimilarityBase(Similarity):
     """SimilarityBase: the weight is the clause list itself, df clamped
     >= 1 (the reference only builds a SimScorer for terms that exist);
     the score sums one ``_clause`` per pair — float32 in serving mode,
-    double in gate mode — and ``_col`` is the gate Column of one
-    clause.  avgdl and numberOfFieldTokens come from the field's stats
-    (fillBasicStats)."""
+    double in gate mode.  avgdl and numberOfFieldTokens come from the
+    field's stats (fillBasicStats)."""
 
     def weight(self, clauses):
         return [(max(int(df), 1), int(ttf)) for df, ttf in clauses]
@@ -387,15 +335,6 @@ class SimilarityBase(Similarity):
             total += self._clause64(fq, dl, df, ttf)
         return total
 
-    def gate_col(self):
-        from pyspark.sql import functions as F
-
-        return self._col(
-            F, F.col("tf").cast("double"), F.col("dl").cast("double"),
-            F.col("doc_freq").cast("double"),
-            F.col("total_term_freq").cast("double"),
-        )
-
     def explain(self, clause, omit_norms=False):
         return {"totalTermFreq": int(clause[1]),
                 "numberOfFieldTokens": self.sum_ttf,
@@ -415,10 +354,6 @@ class SimilarityBase(Similarity):
 
     def _tfn64(self, fq, dl):
         return fq * (np.log(1.0 + self.avgdl64 / dl) / _LN2)
-
-    def _tfn_col(self, F, tf, dl):
-        return tf * (F.log(F.lit(1.0) + F.lit(self.avgdl64) / dl)
-                     / F.lit(_LN2))
 
 
 class DFR(SimilarityBase):
@@ -440,12 +375,6 @@ class DFR(SimilarityBase):
         tfn = self._tfn64(fq, dl)
         i_n = math.log((self.doc_count + 1) / (df + 0.5)) / _LN2
         return tfn * i_n / (tfn + 1.0)
-
-    def _col(self, F, tf, dl, df, ttf):
-        tfn = self._tfn_col(F, tf, dl)
-        i_n = (F.log(F.lit(float(self.doc_count + 1)) / (df + F.lit(0.5)))
-               / F.lit(_LN2))
-        return tfn * i_n / (tfn + F.lit(1.0))
 
 
 class IB(SimilarityBase):
@@ -469,11 +398,6 @@ class IB(SimilarityBase):
         tfn = self._tfn64(fq, dl)
         lam = (df + 1.0) / (self.doc_count + 1.0)
         return -np.log(lam / (tfn + lam))
-
-    def _col(self, F, tf, dl, df, ttf):
-        tfn = self._tfn_col(F, tf, dl)
-        lam = (df + F.lit(1.0)) / F.lit(self.doc_count + 1.0)
-        return -F.log(lam / (tfn + lam))
 
 
 class DFI(SimilarityBase):
@@ -506,12 +430,6 @@ class DFI(SimilarityBase):
         s = np.log(d * d / expected + 1.0) / _LN2
         return np.where(fq <= expected, 0.0, s)
 
-    def _col(self, F, tf, dl, df, ttf):
-        expected = (ttf + F.lit(1.0)) * dl / F.lit(self.sum_ttf + 1.0)
-        d = tf - expected
-        s = F.log(d * d / expected + F.lit(1.0)) / F.lit(_LN2)
-        return F.when(tf <= expected, F.lit(0.0)).otherwise(s)
-
 
 class Axiomatic(SimilarityBase):
     """AxiomaticF2EXP(s=0.25, k=0.35): tf / (tf + s + s*docLen/avgdl) *
@@ -536,13 +454,6 @@ class Axiomatic(SimilarityBase):
         return (fq / (fq + self.S + self.S * dl / self.avgdl64)
                 * math.pow((self.doc_count + 1.0) / df, self.K))
 
-    def _col(self, F, tf, dl, df, ttf):
-        return (
-            tf / (tf + F.lit(self.S) + F.lit(self.S) * dl
-                  / F.lit(self.avgdl64))
-            * F.pow(F.lit(self.doc_count + 1.0) / df, F.lit(self.K))
-        )
-
     def explain(self, clause, omit_norms=False):
         return {"s": self.S, "k": self.K, **super().explain(clause)}
 
@@ -558,9 +469,6 @@ class BooleanSim(SimilarityBase):
 
     def _clause64(self, fq, dl, df, ttf):
         return 1.0
-
-    def _col(self, F, tf, dl, df, ttf):
-        return F.lit(1.0)
 
     def explain(self, clause, omit_norms=False):
         return {}

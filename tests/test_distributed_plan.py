@@ -1,13 +1,13 @@
-"""DistributedSearcher plan shape and compiled-expression parity.
+"""DistributedSearcher plan shape and operator parity.
 
-Every query runs as one fixed plan: the term leaves come from one
-pruned scan and one Python decode + score pass, ONE groupBy(doc_id)
-builds the per-doc map cidx -> score, and the boolean tree is one
-compiled Column over that map.  The shape test locks that (one Python
-map node, one shuffle, no join but the deletes anti-join, at most two
-Spark jobs); the parity test covers the operators and edge cases of
-the compiler against LocalSearcher and the numpy oracle."""
+Every query runs as one fixed plan: ONE Python map over a Range of S
+shards, each a LocalSearcher on one doc range evaluating the whole
+tree, then the top-k merge.  The shape test locks that (one Python map
+node over a Range, no shuffle, no join, one Spark job); the parity test
+covers the operators and edge cases against LocalSearcher and the numpy
+oracle, and gate mode against a float64 reference evaluation."""
 
+import os
 import re
 
 import numpy as np
@@ -50,15 +50,16 @@ def test_plan_shape_is_fixed(spark, ds, oracle, name):
                  key=lambda t: (-oracle.postings[t][0].size, t))
     q = SHAPES[name](*top[:3])
     plan = ds.search_df(q, K)._jdf.queryExecution().executedPlan().toString()
-    ops = [ln.strip(" +-:") for ln in plan.splitlines()]
-    python_maps = [o for o in ops
+    ops = [re.sub(r"^\*\(\d+\) ", "", ln.strip(" +-:"))
+           for ln in plan.splitlines()]
+    python_maps = [i for i, o in enumerate(ops)
                    if re.match(r"(MapInPandas|\w*MapInArrow)", o)]
     assert len(python_maps) == 1, plan
-    shuffles = [o for o in ops if o.startswith("Exchange ")]
-    assert len(shuffles) == 1, plan
-    joins = [o for o in ops if re.match(r"\w*Join\b", o)
-             and "LeftAnti" not in o]
-    assert not joins, plan
+    # the map's only input is the Range of shard ids
+    below = [o for o in ops[python_maps[0] + 1:] if o]
+    assert len(below) == 1 and below[0].startswith("Range ("), plan
+    assert not [o for o in ops if o.startswith("Exchange")], plan
+    assert not [o for o in ops if re.match(r"\w*Join\b", o)], plan
     sc = spark.sparkContext
     group = f"distributed-plan-{name}"
     sc.setJobGroup(group, name)
@@ -67,7 +68,26 @@ def test_plan_shape_is_fixed(spark, ds, oracle, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert hits
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_unknown_dtype_raises_before_spark(spark, index_dir):
+    """An unknown score dtype is refused with ValueError (not an assert,
+    which `python -O` strips) before any Spark job runs."""
+    from lucene_solr_spark.query.distributed import DistributedSearcher
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-dtype", "bad-dtype")
+    try:
+        for bad in ("float16", "double", None):
+            with pytest.raises(ValueError):
+                DistributedSearcher(spark, index_dir, dtype=bad)
+            with pytest.raises(ValueError):
+                LocalSearcher(index_dir, dtype=bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("bad-dtype")
 
 
 def _overlapping_prefix(oracle):
@@ -128,8 +148,8 @@ def _text_terms(node):
 
 def _eval64(node, leaf) -> dict:
     """Reference evaluation of a rewritten tree over float64 leaf scores
-    ({doc: score} from `leaf`), in the compiled plan's arithmetic: double
-    sums over the present children in clause order."""
+    ({doc: score} from `leaf`), in gate mode's arithmetic: double sums
+    over the present children in clause order."""
     kind = node[0]
     if kind in ("term", "fterm"):
         return leaf(node)
@@ -164,20 +184,33 @@ def test_compiled_operators_parity(spark, index_dir, oracle, ds):
     """float32: distributed == LocalSearcher == oracle.  float64 (gate
     mode, exact dl — its ranks legitimately differ from the quantized
     float32 ones): every match equals a reference evaluation over the
-    float64 term-leaf scores, bit for bit, and the match set equals the
-    float32 one."""
+    float64 term-leaf scores (the model's ``score64`` over the docmap
+    `dl`), bit for bit, and the match set equals the float32 one."""
+    import pyarrow.dataset as pads
+
+    from lucene_solr_spark.index.builder import read_field_stats
     from lucene_solr_spark.query.distributed import DistributedSearcher
     from lucene_solr_spark.query.engine import LocalSearcher
+    from lucene_solr_spark.query.similarities import make_similarity
 
     ls = LocalSearcher(index_dir)
     ds64 = DistributedSearcher(spark, index_dir, dtype="float64")
     cases = _cases(oracle)
     terms = sorted({t for n in cases for t in _text_terms(ds64.rewrite(n))})
+    dm = pads.dataset(os.path.join(index_dir, "docmap"),
+                      partitioning="hive").to_table(columns=["doc_id", "dl"])
+    dl = dict(zip(dm.column("doc_id").to_pylist(),
+                  dm.column("dl").to_pylist()))
+    fs = read_field_stats(index_dir)
+    sim = make_similarity("bm25", fs["doc_count"], fs["sum_total_term_freq"])
     leaves: dict = {}
-    for r in ds64._scored_terms_df(
-            {t: [j] for j, t in enumerate(terms)}).collect():
-        leaves.setdefault(("term", terms[r["cidx"]]), {})[r["doc_id"]] = \
-            r["score"]
+    for t in terms:
+        if t not in oracle.postings:
+            continue
+        docs, tfs = oracle.postings[t]
+        sc = sim.score64(sim.weight64([(docs.size, int(tfs.sum()))]), tfs,
+                         np.array([dl[int(x)] for x in docs]))
+        leaves[("term", t)] = dict(zip(docs.tolist(), sc.tolist()))
     fterm = ("fterm", "role", "user")
     leaves[fterm] = dict(ds64.search(fterm, 10**6))
     n_nonempty = 0
@@ -193,18 +226,3 @@ def test_compiled_operators_parity(spark, index_dir, oracle, ds):
             node[0]
         assert {x for x, _ in got64} == {x for x, _ in ds.search(node, 10**6)}
     assert n_nonempty == len(cases) - 3  # the three absent-term cases
-
-
-def test_sql_literals_round_trip(spark):
-    """The compiled SQL text carries terms and boosts as literals: they
-    must come back from Spark exactly as Python holds them."""
-    from lucene_solr_spark.query.distributed import _double, _sql_str
-
-    strs = ["it's", "a\\b", "\\'", "''", "x\ny", "naïve", "%_*"]
-    floats = [0.3, 1e-05, 1.5, 2.0, 1 / 3, 123456.789]
-    row = spark.range(1).selectExpr(
-        *[f"{_sql_str(s)} AS s{i}" for i, s in enumerate(strs)],
-        *[f"{_double(x)} AS f{i}" for i, x in enumerate(floats)],
-    ).first()
-    assert [row[f"s{i}"] for i in range(len(strs))] == strs
-    assert [row[f"f{i}"] for i in range(len(floats))] == floats

@@ -4,6 +4,7 @@ delivered in corpus order), and the Structured Streaming path must
 ingest micro-batches into segments exactly once."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -209,7 +210,10 @@ def test_compaction_equals_fresh_build(spark, three_segments, tmp_path):
 def test_compaction_postings_plan(spark, three_segments, tmp_path):
     """Compaction writes postings through the build's path: the write
     runs one shuffle and no grouped-pandas operator (a grouped merge
-    holds a hot term's whole list in one task)."""
+    holds a hot term's whole list in one task), and its one sort above
+    the merge is keyed (bucket, field, term, salt, block_id): it meets
+    the writer's required ordering, so the plan keeps rows in key order
+    inside every file."""
     from lucene_solr_spark.index.builder import compact_index
 
     conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
@@ -232,6 +236,12 @@ def test_compaction_postings_plan(spark, three_segments, tmp_path):
     final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
     assert final.count("Exchange (") == 1, plan
     assert "FlatMapGroupsIn" not in plan, plan
+    above_merge = final.split("MapInPandas (")[0]
+    sorts = re.findall(r"Sort \((\d+)\)", above_merge)
+    assert len(sorts) == 1, plan
+    args = plan.split(f"({sorts[0]}) Sort")[1].split("Arguments: ")[1]
+    assert re.findall(r"(\w+)#\d+L? ASC", args.split("]")[0]) == [
+        "bucket", "field", "term", "salt", "block_id"], plan
 
 
 def test_compaction_refuses_its_source_dir(spark, tmp_path):

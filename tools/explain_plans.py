@@ -22,22 +22,22 @@ def main(sf_dir: str) -> None:
     spark = get_spark("explain", cores=8, shuffle_partitions=8)
     qs = E.queries()
     picks = [
-        ("bm25_and", "boolean AND: pruned postings scan -> decode -> ONE "
-                     "groupBy(doc_id) score map -> compiled AND expression"),
+        ("bm25_and", "boolean AND: Range of S shard ids -> ONE "
+                     "MapInPandas (a LocalSearcher per doc range runs the "
+                     "whole query) -> TakeOrderedAndProject merge"),
         ("field_filter_bm25",
-         "text BM25 + keyword/ts FILTER clauses: field+term pushdown, "
-         "ts row-group pruning, filters as leaves of the doc_id map"),
+         "text BM25 + keyword/ts FILTER clauses: the same shard plan; "
+         "filters evaluate inside each shard's LocalSearcher"),
         ("phrase_query",
-         "distributed phrase: pruned positional scan -> doc_id join -> "
-         "Arrow freq/score kernel -> one leaf of the doc_id map"),
-        ("bm25_msm", "minShouldMatch: one doc_id map agg + compiled "
-                     "present-clause count >= n"),
+         "distributed phrase: the same shard plan; each shard decodes "
+         "positions only for its range's candidate blocks"),
+        ("bm25_msm", "minShouldMatch: the same shard plan, no shuffle"),
         ("span_near_membership",
-         "distributed span: pruned position scan -> doc-level candidate "
-         "conjunction -> executor Arrow span kernel (r3)"),
+         "distributed span: the same shard plan; the span spec runs "
+         "on executors over each range's candidates"),
         ("tfidf_term_topk",
-         "ClassicSimilarity over the same index: similarity is a "
-         "scoring-expression swap, identical plan shape (r3)"),
+         "ClassicSimilarity over the same index: the similarity is a "
+         "shard argument, identical plan shape (r3)"),
         ("dedup_embedding_cosine",
          "embedding near-dup: LSH bucket self-join, never all-pairs (r3)"),
         ("stream_rollup", "partial+final hash aggregation (map_reduce)"),
@@ -52,7 +52,7 @@ def main(sf_dir: str) -> None:
         ("text_features", "whole-stage codegen text ops, no Python UDF"),
         ("dfr_term_topk",
          "SimilarityBase family over the same index: another "
-         "scoring-expression swap, identical plan shape (r4)"),
+         "shard argument, identical plan shape (r4)"),
         ("facet_range_events",
          "range facet: bucket id as arithmetic projection, one hash "
          "agg, range predicate pushed to the scan (r4)"),
@@ -62,25 +62,24 @@ def main(sf_dir: str) -> None:
         ("stream_outer_hash_join",
          "OuterHashJoinStream: broadcast left-outer hash join (r4)"),
         ("collapse_expand",
-         "field collapsing: one window agg over the match set, heads "
-         "kept via broadcast semi-join (r4)"),
+         "field collapsing: every shard's live matches joined to the "
+         "docmap, one window agg, heads kept via broadcast semi-join"),
         ("graph_gather_nodes",
          "gatherNodes hop: frontier join + grouped ancestors (r4)"),
         ("synonym_topk",
-         "SynonymQuery: pruned decode -> groupBy(doc_id) freq sum -> "
-         "one pseudo-term scoring pass (r4)"),
+         "SynonymQuery: the same shard plan; each shard sums the "
+         "synonyms' freqs into one pseudo-term (r4)"),
         ("dismax_topk",
-         "DisjunctionMax: leaves -> ONE groupBy(doc_id) score map -> "
-         "compiled max + tie * (clause-order sum - max) — the same "
-         "single-shuffle shape as every query"),
+         "DisjunctionMax: the same shard plan as every query — one "
+         "Python map over the shard Range, no shuffle"),
         ("rescore_topk",
          "QueryRescorer: first-pass top-n broadcast-probes the second "
-         "query's pruned plan; no rescan beyond the candidates (r5)"),
+         "query's shard matches (r5)"),
         ("facet_pivot_counts",
          "facet.pivot: one layered agg per LEVEL, broadcast semi-join "
          "to surviving parents, window rank within tuple (r5)"),
         ("analyzer_chain_topk",
-         "configured analyzer chain index: identical scan/plan shape "
+         "configured analyzer chain index: identical shard plan "
          "— stemming/synonyms live in the build kernels (r5)"),
         ("classify_perceptron",
          "perceptron classify: pruned postings decode joined to "
