@@ -1468,8 +1468,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def rescore_topk(spark, sf):
         # QueryRescorer (search/QueryRescorer.java:51-140 + the
         # :165-177 sugar combine): first-pass top-50 of "batch OR
-        # query", second pass scores "dup" restricted to those hits
-        # (broadcast probe), combined = first + 2.0*second when the
+        # query", second pass scores "dup" at those hits (inside the
+        # same shard pass), combined = first + 2.0*second when the
         # second query matches, re-sorted (score desc, docID asc),
         # top-10 — the LTR/model-rescore discipline
         return (

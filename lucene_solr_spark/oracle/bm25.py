@@ -122,7 +122,9 @@ class LuceneOracle:
 
     # ---- stats ---------------------------------------------------------
     def idf(self, term: str) -> np.float32:
-        df = len(self.postings.get(term, ((), ()))[0])
+        return self._idf(len(self.postings.get(term, ((), ()))[0]))
+
+    def _idf(self, df: int) -> np.float32:
         dc = self.doc_count
         return np.float32(np.log(1 + (dc - df + 0.5) / (df + 0.5)))
 
@@ -146,20 +148,39 @@ class LuceneOracle:
         if term not in self.postings:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
         docs, tfs = self.postings[term]
-        idf = self.idf(term)
+        return docs, self._score_freqs(docs, tfs.astype(np.float32),
+                                       self.idf(term))
+
+    def _score_freqs(self, docs, freq, idf) -> np.ndarray:
+        """float32 BM25 of per-doc float32 `freq` under one `idf`."""
         k1 = np.float32(self.params.k1)
         weight_value = np.float32(idf * np.float32(1.0) * (k1 + np.float32(1.0)))
-        cache = self.norm_cache()
-        norms = cache[self.norm_bytes[docs]]
-        freq = tfs.astype(np.float32)
-        scores = (weight_value * freq / (freq + norms)).astype(np.float32)
-        return docs, scores
+        norms = self.norm_cache()[self.norm_bytes[docs]]
+        return (weight_value * freq / (freq + norms)).astype(np.float32)
+
+    def _score_synonym(self, terms) -> tuple[np.ndarray, np.ndarray]:
+        """SynonymQuery (search/SynonymQuery.java): the terms score as
+        ONE pseudo-term — per doc, freq = SUM of the synonyms' freqs
+        (SynonymScorer); docFreq = max and totalTermFreq = sum of the
+        terms' stats (BM25's idf reads only docFreq)."""
+        parts = [self.postings[t] for t in sorted(set(terms))
+                 if t in self.postings]
+        if not parts:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
+        docs = np.unique(np.concatenate([d for d, _ in parts]))
+        freq = np.zeros(docs.size, dtype=np.float32)
+        for d, tfs in parts:
+            freq[np.searchsorted(docs, d)] += tfs.astype(np.float32)
+        return docs, self._score_freqs(
+            docs, freq, self._idf(max(d.size for d, _ in parts)))
 
     def _eval(self, node: QueryNode) -> tuple[np.ndarray, np.ndarray]:
         kind = node[0]
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32))
         if kind == "term":
             return self._score_term(node[1])
+        if kind == "synonym":
+            return self._score_synonym(node[1])
         if kind == "fterm":
             # keyword StringField: per-field stats, omitNorms -> norm = k1
             f, v = node[1], node[2]

@@ -139,14 +139,19 @@ class DistributedSearcher:
         process, with no Spark job."""
         return rewrite(node, self._terms_ds)
 
-    def _hits(self, query, k: int | None = None, after=None) -> DataFrame:
-        """DF(doc_id, score) of each shard's top-k live hits past the
-        `after` cursor (k=None: all of its live matches), for a query
-        string or tree parsed and rewritten here, once."""
+    def _node(self, query):
+        """A query string or tree parsed and rewritten here, once; None
+        when it matches nothing."""
         node = self.rewrite(parse_query(query, opts=self.analyzer_opts)
                             if isinstance(query, str) else query)
+        return None if node is None or node[0] == "matchnone" else node
+
+    def _hits(self, query, k: int | None = None, after=None) -> DataFrame:
+        """DF(doc_id, score) of each shard's top-k live hits past the
+        `after` cursor (k=None: all of its live matches)."""
+        node = self._node(query)
         schema = f"doc_id long, score {self._st}"
-        if node is None or node[0] == "matchnone":
+        if node is None:
             return self.spark.createDataFrame([], schema)
         dt = np.dtype(self.dtype)
 
@@ -358,37 +363,61 @@ class DistributedSearcher:
 
         Re-sorted by (score desc, docID asc) and truncated to `k`,
         exactly the reference's post-combine comparator (:113-127).
-        Two-phase: the first pass is the normal pruned top-n (n rows),
-        left-joined to the second query's live matches."""
+        A second query runs in the same shard pass as the first, with no
+        join: each shard combines its own top-n with the second query's
+        scores at those docs, and the driver keeps the global top-n by
+        (first-pass score desc, docID asc) — a subset of the union of
+        the shards' top-n lists — then ranks by the combined score."""
         st = self._st
+        if rescore_expr is None:
+            return (self._rescored(query, rescore_query, weight, n)
+                    .orderBy(F.desc("s1"), F.asc("doc_id")).limit(n)
+                    .select("doc_id", "score")
+                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
         first = self.search_df(query, n).select(
             "doc_id", F.col("score").cast("double").alias("s1")
         )
-        if rescore_expr is not None:
-            dm = self._docmap.select("doc_id", *cols)
-            joined = first.join(dm, "doc_id").withColumn(
-                "s2", F.expr(rescore_expr).cast("double")
-            )
-            if mode == "replace":
-                comb = F.lit(float(weight)) * F.col("s2")
-            elif mode == "multiply":
-                comb = F.col("s1") * F.col("s2")
-            else:
-                comb = F.col("s1") + F.lit(float(weight)) * F.col("s2")
+        dm = self._docmap.select("doc_id", *cols)
+        joined = first.join(dm, "doc_id").withColumn(
+            "s2", F.expr(rescore_expr).cast("double")
+        )
+        if mode == "replace":
+            comb = F.lit(float(weight)) * F.col("s2")
+        elif mode == "multiply":
+            comb = F.col("s1") * F.col("s2")
         else:
-            second = self._hits(rescore_query).select(
-                "doc_id", F.col("score").cast("double").alias("s2")
-            )
-            # first-pass set is n rows — broadcast so the second pass
-            # is a map-side probe, no shuffle of the second plan
-            joined = F.broadcast(first).join(second, "doc_id", "left")
-            comb = (F.col("s1")
-                    + F.lit(float(weight)) * F.coalesce("s2", F.lit(0.0)))
+            comb = F.col("s1") + F.lit(float(weight)) * F.col("s2")
         return (
             joined.select("doc_id", comb.cast(st).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
+
+    def _rescored(self, query, rescore_query, weight: float, n: int
+                  ) -> DataFrame:
+        """DF(doc_id, s1, score) of each shard's first-pass top-n: `s1`
+        the first query's score, `score` = s1 + weight * the second
+        query's score where it matches the doc (QueryRescorer.combine,
+        double sum, one cast)."""
+        first, second = self._node(query), self._node(rescore_query)
+        schema = f"doc_id long, s1 {self._st}, score {self._st}"
+        if first is None:
+            return self.spark.createDataFrame([], schema)
+        dt, w = np.dtype(self.dtype), np.float64(weight)
+
+        def top(searcher) -> pd.DataFrame:
+            hits = searcher.search(first, n)
+            s2 = (dict(searcher.search(second, None))
+                  if hits and second is not None else {})
+            return pd.DataFrame({
+                "doc_id": np.array([d for d, _ in hits], dtype=np.int64),
+                "s1": np.array([s for _, s in hits], dtype=dt),
+                "score": np.array([np.float64(s) + w * s2.get(d, 0.0)
+                                   for d, s in hits], dtype=np.float64
+                                  ).astype(dt),
+            })
+
+        return self._on_shards(top, schema)
 
     def fetch_topk_with_source(self, query, transcripts: DataFrame, k: int = 10
                                ) -> DataFrame:

@@ -35,6 +35,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+from collections import OrderedDict
 
 import numpy as np
 import pyarrow.dataset as pads
@@ -47,11 +48,17 @@ from .similarities import make_similarity
 
 
 class _TermPostings:
-    """Decoded-on-demand posting list of one term: sorted docs, tfs, norms,
-    plus per-block metadata for range skipping."""
+    """One term's entry in the searcher's term cache, holding all that
+    is derived from the term: block rows plus per-block columns built at
+    load; decoded postings held once (per-block (docs, tfs) in
+    `_decoded` until `decode_all` makes `postings`, whose slices serve
+    block decodes from then on); the list's `scores`, `order` and
+    cached `dense` (mask, table).  `nbytes` grows with the entry;
+    `counted` is the part the searcher's cache total holds."""
 
-    __slots__ = ("term", "n_docs", "ttf", "clause", "blocks", "_decoded",
-                 "_full")
+    __slots__ = ("term", "n_docs", "ttf", "clause", "blocks", "first_doc",
+                 "last_doc", "max_tf", "min_ntab", "offs", "_decoded",
+                 "postings", "scores", "order", "dense", "nbytes", "counted")
 
     def __init__(self, term: str, block_rows: list[dict], doc_range=None):
         self.term = term
@@ -73,30 +80,35 @@ class _TermPostings:
             lo, hi = doc_range
             self.blocks = [b for b in self.blocks
                            if b["last_doc"] >= lo and b["first_doc"] < hi]
-        self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        self._full: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        # block columns; (max_tf, min_ntab) is the block-max metadata a
+        # Similarity's ``block_bound`` reads; `offs` the posting offsets
+        cols = [np.array([b[k] for b in self.blocks], dtype=t) for k, t in (
+            ("first_doc", np.int64), ("last_doc", np.int64),
+            ("max_tf", np.float64), ("min_ntab", np.float64))]
+        self.first_doc, self.last_doc, self.max_tf, self.min_ntab = cols
+        self.offs = np.cumsum([0] + [b["doc_count"] for b in self.blocks])
+        self._decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self.postings = self.scores = self.order = self.dense = None
+        self.nbytes = self.counted = self.offs.nbytes + sum(
+            a.nbytes for a in cols) + sum(
+            len(b[k]) for b in self.blocks
+            for k in ("payload", "norms_payload", "pos_payload") if b.get(k))
 
-    def block_ranges(self) -> tuple[np.ndarray, np.ndarray]:
-        fd = np.array([b["first_doc"] for b in self.blocks], dtype=np.int64)
-        ld = np.array([b["last_doc"] for b in self.blocks], dtype=np.int64)
-        return fd, ld
-
-    def block_maxes(self) -> tuple[np.ndarray, np.ndarray]:
-        """Per-block (max_tf, min_ntab): the block-max metadata a
-        Similarity's ``block_bound`` reads."""
-        mt = np.array([b["max_tf"] for b in self.blocks], dtype=np.float64)
-        mn = np.array([b["min_ntab"] for b in self.blocks], dtype=np.float64)
-        return mt, mn
+    @property
+    def n_decoded(self) -> int:
+        return (len(self.blocks) if self.postings is not None
+                else len(self._decoded))
 
     def decode(self, idx: int):
+        if self.postings is not None:
+            sl = slice(self.offs[idx], self.offs[idx + 1])
+            return tuple(a[sl] for a in self.postings)
         got = self._decoded.get(idx)
         if got is None:
-            b = self.blocks[idx]
-            docs, tfs = decode_block(b)
-            norms = np.frombuffer(b["norms_payload"], dtype=np.uint8)
-            got = (docs, tfs, norms)
-            self._decoded[idx] = got
-        return got
+            got = self._decoded[idx] = decode_block(self.blocks[idx])
+            self.nbytes += got[0].nbytes + got[1].nbytes
+        return (*got, np.frombuffer(self.blocks[idx]["norms_payload"],
+                                    dtype=np.uint8))
 
     def decode_positions_blocks(self, idxs):
         """(docs, tfs, norms, positions list-per-posting) for the given
@@ -118,14 +130,17 @@ class _TermPostings:
         return docs, tfs, norms, pos
 
     def decode_blocks(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        if len(idxs) == 0:
-            return (
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.uint8),
-            )
         if len(idxs) == len(self.blocks):
-            return self.decode_all()  # cached concatenation
+            return self.decode_all()
+        if self.postings is not None:
+            # one gather of the blocks' posting ranges [offs[i], offs[i+1])
+            i = np.asarray(idxs, dtype=np.int64)
+            lo = self.offs[i]
+            n = self.offs[i + 1] - lo
+            at = np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n)
+            return tuple(a[at] for a in self.postings)
+        if len(idxs) == 0:
+            return tuple(np.empty(0, t) for t in (np.int64, np.int64, np.uint8))
         parts = [self.decode(i) for i in idxs]
         return (
             np.concatenate([p[0] for p in parts]),
@@ -134,14 +149,17 @@ class _TermPostings:
         )
 
     def decode_all(self):
-        if self._full is None:
-            # batch-decode the not-yet-cached full (kind-0) blocks in
+        """The whole list (docs, tfs, norms), decoded once into
+        `postings`; the per-block decodes it replaces are dropped."""
+        if self.postings is None:
+            # batch-decode the not-yet-decoded full (kind-0) blocks in
             # one vectorized pass — the first touch of a hot term costs
             # a few unpackbits/cumsum passes instead of ~10^3 python
             # block loops (cold-path p95; codec.decode_full_blocks_batch
             # is bit-identical to per-block decode)
+            got = dict(self._decoded)
             todo = [i for i, b in enumerate(self.blocks)
-                    if b["kind"] == 0 and i not in self._decoded]
+                    if b["kind"] == 0 and i not in got]
             if len(todo) > 1:
                 from ..index.codec import BLOCK_SIZE, decode_full_blocks_batch
 
@@ -150,24 +168,18 @@ class _TermPostings:
                 )
                 for j, i in enumerate(todo):
                     sl = slice(j * BLOCK_SIZE, (j + 1) * BLOCK_SIZE)
-                    self._decoded[i] = (
-                        docs[sl], tfs[sl],
-                        np.frombuffer(self.blocks[i]["norms_payload"],
-                                      dtype=np.uint8),
-                    )
-            parts = [self.decode(i) for i in range(len(self.blocks))]
-            if not parts:
-                return (
-                    np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.uint8),
-                )
-            self._full = (
-                np.concatenate([p[0] for p in parts]),
-                np.concatenate([p[1] for p in parts]),
-                np.concatenate([p[2] for p in parts]),
-            )
-        return self._full
+                    got[i] = (docs[sl], tfs[sl])
+            parts = [got[i] if i in got else decode_block(b)
+                     for i, b in enumerate(self.blocks)]
+            self.postings = tuple(
+                np.concatenate([p[j] for p in parts]) if parts
+                else np.empty(0, dtype=np.int64) for j in (0, 1)
+            ) + (np.frombuffer(b"".join(b["norms_payload"]
+                                        for b in self.blocks), np.uint8),)
+            self.nbytes += sum(a.nbytes for a in self.postings) - sum(
+                d.nbytes + t.nbytes for d, t in self._decoded.values())
+            self._decoded.clear()
+        return self.postings
 
 
 class LocalSearcher:
@@ -186,6 +198,11 @@ class LocalSearcher:
     otherwise, or when the collector declines, the exhaustive evaluator
     `_eval` scores every match.  `pruning=False` is the exhaustive
     evaluator and nothing else.
+
+    `dense_budget_mb` (default 128) is the one memory setting: the term
+    cache (an LRU of one byte-accounted `_TermPostings` per term) is cut
+    to half of it after every query, and dense per-query structures run
+    only when maxDoc <= budget/16 (else sparse paths, same results).
 
     `dtype="float64"` is the gate mode: leaf scores are the model's
     ``weight64``/``score64`` over the exact docmap doc length, node sums
@@ -214,10 +231,9 @@ class LocalSearcher:
             np.iinfo(np.int64).max if doc_range[1] is None
             else int(doc_range[1]),
         )
-        # warm-path memory budget -> dense structure bounds (SCALE.md
-        # "Warm-path memory budget"): maxDoc cap at 16 B/doc, and at
-        # most half the budget for the hot-term table cache (5 B/doc
-        # per cached term: float32 table + derived bool mask)
+        # warm-path memory budget (SCALE.md "Warm-path memory budget"):
+        # per-query dense structures need maxDoc <= budget/16 (16 B/doc),
+        # and the term cache holds at most half the budget between queries
         if dense_budget_mb is None:
             dense_budget_mb = self._DENSE_BUDGET_MB_DEFAULT
         self.dense_budget_bytes = dense_budget_mb << 20
@@ -257,8 +273,12 @@ class LocalSearcher:
             os.path.join(index_dir, "postings"), format="parquet",
             partitioning="hive",
         )
-        #: decoded posting lists keyed (field, term)
-        self._term_cache: dict[tuple[str, str], _TermPostings] = {}
+        #: the term cache: one entry per (field, term), least recently
+        #: used first, `_cache_bytes` their summed `counted` bytes
+        self._terms: OrderedDict[tuple, _TermPostings] = OrderedDict()
+        self._cache_bytes = 0
+        #: per-query memo of `_eval` results and ephemeral dense tables
+        self._eval_memo: dict = {}
         from ..index.deletes import read_deleted
 
         #: tombstoned docIDs, masked at collection like liveDocs (scores
@@ -286,12 +306,12 @@ class LocalSearcher:
 
     # ------------------------------------------------------------ fetch
     def _tp(self, term: str, field: str = "text") -> _TermPostings:
-        return self._term_cache[(field, term)]
+        return self._terms[(field, term)]
 
     def _load_terms(self, pairs: list[tuple[str, str]]) -> None:
         """Fetch posting blocks for (field, term) pairs not yet cached —
         ONE bucket-pruned, predicate-pushed scan for all of them."""
-        missing = [p for p in set(pairs) if p not in self._term_cache]
+        missing = [p for p in set(pairs) if p not in self._terms]
         if not missing:
             return
         buckets = sorted(
@@ -311,8 +331,24 @@ class LocalSearcher:
             if key in by_key:
                 by_key[key].append(r)
         for (f, t) in missing:
-            self._term_cache[(f, t)] = _TermPostings(t, by_key[(f, t)],
+            tp = self._terms[(f, t)] = _TermPostings(t, by_key[(f, t)],
                                                      self._range)
+            self._cache_bytes += tp.counted
+
+    def _end_query(self, keys) -> None:
+        """After a query: drop its memo, move its terms' entries to the
+        MRU end with their growth added to the cache total, and evict
+        least-recently-used entries until the total is within half the
+        budget (never mid-query, so `_tp` always hits)."""
+        self._eval_memo = {}
+        for key in keys:
+            self._terms.move_to_end(key)
+            tp = self._terms[key]
+            if tp.nbytes != tp.counted:
+                self._cache_bytes += tp.nbytes - tp.counted
+                tp.counted = tp.nbytes
+        while self._cache_bytes > self.dense_budget_bytes // 2:
+            self._cache_bytes -= self._terms.popitem(last=False)[1].counted
 
     # ---------------------------------------------------------- scoring
     def _field_sim(self, field: str):
@@ -343,25 +379,21 @@ class LocalSearcher:
         `order`, the list's (score desc, docID asc) permutation that a
         warm collector cursor walks, built on first use."""
         # full-list scores are a pure function of the searcher's fixed
-        # global stats — cache them (the hot-postings-in-page-cache
-        # trade; ~12 B/posting on top of the decoded blocks, +8 B for
+        # global stats — kept on the term's entry (4 B/posting, +8 B for
         # the order)
-        got = getattr(self, "_fullscore_cache", None)
-        if got is None:
-            got = self._fullscore_cache = {}
-        hit = got.get(term)
-        if hit is None:
-            tp = self._tp(term)
+        tp = self._tp(term)
+        if tp.scores is None:
             docs, tfs, norms = tp.decode_all()
-            hit = got[term] = [docs, self._leaf([tp.clause], tfs, norms, docs),
-                               None]
+            tp.scores = self._leaf([tp.clause], tfs, norms, docs)
+            tp.nbytes += tp.scores.nbytes
         if not ranked:
-            return hit[0], hit[1]
-        if hit[2] is None:
+            return tp.postings[0], tp.scores
+        if tp.order is None:
             # docs ascend, so a stable sort on -score breaks ties by
             # docID; kept intp (an int32 index array gathers ~4x slower)
-            hit[2] = np.argsort(-hit[1], kind="stable")
-        return hit[0], hit[1], hit[2]
+            tp.order = np.argsort(-tp.scores, kind="stable")
+            tp.nbytes += tp.order.nbytes
+        return tp.postings[0], tp.scores, tp.order
 
     def _term_lookup(self, term: str, candidates: np.ndarray
                      ) -> tuple[np.ndarray, np.ndarray]:
@@ -370,7 +402,7 @@ class LocalSearcher:
         tp = self._tp(term)
         if not tp.blocks or candidates.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        dense = getattr(self, "_dense_tables", {}).get(term)
+        dense = tp.dense
         if dense is not None:
             # hot term with a cached dense table: O(|cand|) gather
             # beats re-concatenating ~all of a high-df posting list
@@ -381,10 +413,9 @@ class LocalSearcher:
             hit = m[candidates]
             cd = candidates[hit]
             return cd, sc[cd]
-        fd, ld = tp.block_ranges()
-        # block i relevant iff any candidate in [fd[i], ld[i]]
-        lo = np.searchsorted(candidates, fd, side="left")
-        hi = np.searchsorted(candidates, ld, side="right")
+        # block i relevant iff any candidate in [first_doc, last_doc]
+        lo = np.searchsorted(candidates, tp.first_doc, side="left")
+        hi = np.searchsorted(candidates, tp.last_doc, side="right")
         idxs = np.flatnonzero(hi > lo)
         if (idxs.size * 4 >= len(tp.blocks)
                 and self._prunable
@@ -413,20 +444,19 @@ class LocalSearcher:
                                       docs[mask])
 
     # ---------------------------------------------------------- rewrite
-    def _terms_dataset(self):
+    @functools.cached_property
+    def _terms_ds(self):
         """Lazy pyarrow dataset over the term dictionary — multi-term
         rewrites push range predicates into this scan instead of ever
         materializing the dictionary in Python (VERDICT r1 scale fix:
         at 10^12-turn scale the dictionary alone would OOM the serving
         process)."""
-        if not hasattr(self, "_terms_ds"):
-            self._terms_ds = pads.dataset(
-                os.path.join(self.index_dir, "term_stats"), format="parquet"
-            )
-        return self._terms_ds
+        return pads.dataset(
+            os.path.join(self.index_dir, "term_stats"), format="parquet"
+        )
 
     def rewrite(self, node):
-        return rewrite(node, self._terms_dataset())
+        return rewrite(node, self._terms_ds)
 
     # ------------------------------------------------------------- eval
     def _collect_terms(self, node) -> list[tuple[str, str]]:
@@ -527,9 +557,8 @@ class LocalSearcher:
             if cand.size == 0:
                 return empty
             tp = tps[oi]
-            fd, ld = tp.block_ranges()
-            lo = np.searchsorted(cand, fd, side="left")
-            hi = np.searchsorted(cand, ld, side="right")
+            lo = np.searchsorted(cand, tp.first_doc, side="left")
+            hi = np.searchsorted(cand, tp.last_doc, side="right")
             docs = tp.decode_blocks(np.flatnonzero(hi > lo))[0]
             cand = cand[_sorted_isin(cand, docs)]
         if cand.size == 0:
@@ -538,9 +567,8 @@ class LocalSearcher:
         datas = []  # (poslists aligned to cand, rel)
         norms0 = None
         for (term, rel), tp in zip(clauses, tps):
-            fd, ld = tp.block_ranges()
-            lo = np.searchsorted(cand, fd, side="left")
-            hi = np.searchsorted(cand, ld, side="right")
+            lo = np.searchsorted(cand, tp.first_doc, side="left")
+            hi = np.searchsorted(cand, tp.last_doc, side="right")
             docs, _, norms, pos = tp.decode_positions_blocks(
                 np.flatnonzero(hi > lo)
             )
@@ -596,13 +624,10 @@ class LocalSearcher:
         # per-search memo: composite subtrees are evaluated once even
         # when referenced by both the candidate pass and the scoring
         # pass of an enclosing AND (results are immutable arrays)
-        memo = getattr(self, "_eval_memo", None)
-        if memo is not None and id(node) in memo:
-            return memo[id(node)]
-        out = self._eval_inner(node)
-        if memo is not None:
-            memo[id(node)] = out
-        return out
+        got = self._eval_memo.get(id(node))
+        if got is None:
+            got = self._eval_memo[id(node)] = self._eval_inner(node)
+        return got
 
     def _fterm_scores(self, field: str, term: str
                       ) -> tuple[np.ndarray, np.ndarray]:
@@ -621,11 +646,6 @@ class LocalSearcher:
         import pyarrow.compute as pc
 
         _, lo, hi, il, ih = node
-        if not hasattr(self, "_docmap_ds"):
-            self._docmap_ds = pads.dataset(
-                os.path.join(self.index_dir, "docmap"), format="parquet",
-                partitioning="hive",
-            )
         filt = pc.field("ts").is_valid()
         if lo is not None:
             lov = np.datetime64(lo)
@@ -639,6 +659,11 @@ class LocalSearcher:
             )
         tbl = self._docmap_ds.to_table(columns=["doc_id"], filter=filt)
         return np.sort(tbl.column("doc_id").to_numpy())
+
+    @functools.cached_property
+    def _docmap_ds(self):
+        return pads.dataset(os.path.join(self.index_dir, "docmap"),
+                            format="parquet", partitioning="hive")
 
     def _span_required_docs(self, clause) -> np.ndarray:
         """Docs that can possibly match a span clause (the two-phase
@@ -688,9 +713,8 @@ class LocalSearcher:
             tp = self._tp(t)
             if not tp.blocks:
                 continue
-            fd, ld = tp.block_ranges()
-            lo = np.searchsorted(cand, fd, side="left")
-            hi = np.searchsorted(cand, ld, side="right")
+            lo = np.searchsorted(cand, tp.first_doc, side="left")
+            hi = np.searchsorted(cand, tp.last_doc, side="right")
             docs, _, norms, pos = tp.decode_positions_blocks(
                 np.flatnonzero(hi > lo)
             )
@@ -1042,10 +1066,10 @@ class LocalSearcher:
         raise ValueError(kind)
 
     #: default warm-path memory budget (MB) — overridable per instance
-    #: (LocalSearcher(dense_budget_mb=...)).  _DENSE_MAX_DOC is DERIVED
-    #: from it in __init__ as budget/16 bytes-per-doc (the per-doc
-    #: residency of the dense structures: 8 B transient float64
-    #: accumulator + 4 B one hot score table + 1 B derived mask + 1 B TA
+    #: (LocalSearcher(dense_budget_mb=...)).  Half of it bounds the
+    #: term cache between queries (`_end_query`); _DENSE_MAX_DOC,
+    #: budget/16 bytes per doc, bounds each query's dense structures
+    #: (8 B float64 accumulator + 4 B score table + 1 B mask + 1 B TA
     #: seen bitmap + slack — see SCALE.md "Warm-path memory budget");
     #: the default 128 MB keeps the historical 2^23-doc shard bound.
     #: Beyond the bound the sparse sort-merge path takes over —
@@ -1066,33 +1090,20 @@ class LocalSearcher:
         (BM25 and classic scores are strictly positive for any present
         posting: idf > 0, freq >= 1, norm > 0 for dl >= 1), so the mask
         is derived, not stored separately on disk."""
-        cache = getattr(self, "_dense_tables", None)
-        if cache is None:
-            from collections import OrderedDict
-
-            cache = self._dense_tables = OrderedDict()
-        got = cache.get(term)
+        tp = self._tp(term)
+        got = tp.dense or self._eval_memo.get(("dtbl", term))
         if got is not None:
-            cache.move_to_end(term)  # LRU touch
             return got
-        memo = getattr(self, "_eval_memo", None)
-        key = ("dtbl", term)
-        if memo is not None and key in memo:
-            return memo[key]
         n = self.max_doc + 1
         docs, scores = self._term_full(term)
         tbl = np.zeros(n, dtype=np.float32)
         tbl[docs] = scores
         out = (tbl != np.float32(0.0), tbl)
         if docs.size * self._DENSE_CACHE_FRAC >= n:
-            cache[term] = out
-            # half the budget bounds the hot-table cache (5 B/doc per
-            # entry); evict least-recently-used beyond it
-            max_tables = max(1, (self.dense_budget_bytes // 2) // (5 * n))
-            while len(cache) > max_tables:
-                cache.popitem(last=False)
-        elif memo is not None:
-            memo[key] = out  # ephemeral: reused within this search only
+            tp.dense = out  # a hot term's table lives on its entry
+            tp.nbytes += out[0].nbytes + tbl.nbytes
+        else:
+            self._eval_memo[("dtbl", term)] = out  # this query only
         return out
 
     def _dense_mask(self, node) -> np.ndarray | None:
@@ -1101,10 +1112,9 @@ class LocalSearcher:
         AND prunes the scoring domain to its intersection for free.
         None for an unsupported shape."""
         kind = node[0]
-        memo = getattr(self, "_eval_memo", None)
         key = ("dmask", id(node))
-        if memo is not None and key in memo:
-            return memo[key]
+        if key in self._eval_memo:
+            return self._eval_memo[key]
         if kind == "term":
             out = self._term_dense(node[1])[0]
         else:
@@ -1129,8 +1139,7 @@ class LocalSearcher:
                 out = masks[0].copy()
                 for m in masks[1:]:
                     (out.__iand__ if kind == "and" else out.__ior__)(m)
-        if memo is not None:
-            memo[key] = out
+        self._eval_memo[key] = out
         return out
 
     def _dense_scores_at(self, node, docs: np.ndarray) -> np.ndarray:
@@ -1207,11 +1216,7 @@ class LocalSearcher:
             return np.empty(0, np.int64), np.empty(0, np.float32)
         n = self.max_doc + 1
         if 0 < n <= self._DENSE_MAX_DOC:
-            if not hasattr(self, "_acc_buf"):
-                self._acc_buf = np.zeros(n, dtype=np.float64)
-                self._seen_buf = np.zeros(n, dtype=bool)
-                self._cnt_buf = np.zeros(n, dtype=np.int32)
-            buf, seen, cnt = self._acc_buf, self._seen_buf, self._cnt_buf
+            buf, seen, cnt = self._sum_bufs
             docs = np.empty(0, np.int64)
             try:
                 for cd, cs in parts:
@@ -1252,10 +1257,17 @@ class LocalSearcher:
             return docs[keep], total[keep].astype(self._st)
         return docs, total.astype(self._st)
 
+    @functools.cached_property
+    def _sum_bufs(self):
+        """`_sum_parts`'s scratch tables, all-zero between calls."""
+        n = self.max_doc + 1
+        return (np.zeros(n, dtype=np.float64), np.zeros(n, dtype=bool),
+                np.zeros(n, dtype=np.int32))
+
     # ------------------------------------------------------ collector
     def _mostly_undecoded(self, terms: list[str]) -> bool:
         total = sum(len(self._tp(t).blocks) for t in terms)
-        cached = sum(len(self._tp(t)._decoded) for t in terms)
+        cached = sum(self._tp(t).n_decoded for t in terms)
         return total > 0 and cached < total // 2
 
     def _collect(self, node, k: int, after=None):
@@ -1422,9 +1434,12 @@ class LocalSearcher:
         if node is None or node[0] == "matchnone":
             return {"match": False, "value": None,
                     "description": "MatchNoDocsQuery"}
-        self._load_terms(self._collect_terms(node))
-        self._eval_memo = {}
-        return self._explain_node(node, int(doc_id))
+        keys = self._collect_terms(node)
+        self._load_terms(keys)
+        try:
+            return self._explain_node(node, int(doc_id))
+        finally:
+            self._end_query(keys)
 
     def _node_value(self, node, doc: int):
         docs, scores = self._eval(node)
@@ -1513,15 +1528,19 @@ class LocalSearcher:
         node = self.rewrite(node)
         if node is None or node[0] == "matchnone":
             return []
-        self._load_terms(self._collect_terms(node))
-        self._eval_memo: dict = {}
-        if (self.pruning and k is not None and self._prunable
-                and node[0] in ("term", "and", "or", "msm_or")):
-            hits = self._collect(node, k, after=after)
-            if hits is not None:
-                return hits
-        docs, scores = self._eval(node)
-        return _topk_hits(docs, scores, k, after, self._deleted, self._range)
+        keys = self._collect_terms(node)
+        self._load_terms(keys)
+        try:
+            if (self.pruning and k is not None and self._prunable
+                    and node[0] in ("term", "and", "or", "msm_or")):
+                hits = self._collect(node, k, after=after)
+                if hits is not None:
+                    return hits
+            docs, scores = self._eval(node)
+            return _topk_hits(docs, scores, k, after, self._deleted,
+                              self._range)
+        finally:
+            self._end_query(keys)
 
 
 def rewrite(node, terms_ds):
@@ -1664,7 +1683,7 @@ class _BlockCursor(_Cursor):
     def __init__(self, tp: _TermPostings, sim):
         self.tp, self.sim = tp, sim
         self.w = sim.weight([tp.clause])
-        self.ubs = sim.block_bound(self.w, *tp.block_maxes())
+        self.ubs = sim.block_bound(self.w, tp.max_tf, tp.min_ntab)
         self.order = np.argsort(-self.ubs, kind="stable")
         self.pos, self.size = 0, len(tp.blocks)
 

@@ -97,7 +97,7 @@ def more_like_this_local(searcher, text: str,
     cand = sorted({t for t, c in Counter(terms).items()
                    if c >= kw.get("min_term_freq", 2)})
     if cand:
-        tbl = searcher._terms_dataset().to_table(
+        tbl = searcher._terms_ds.to_table(
             columns=["term", "doc_freq"],
             filter=(pc.field("field") == "text")
             & pc.field("term").isin(cand),

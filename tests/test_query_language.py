@@ -239,7 +239,7 @@ def test_expand_from_dataset_matches_full_expand(searcher):
     every multi-term kind (the pruning must never change the match set)."""
     from lucene_solr_spark.query.multiterm import expand, expand_from_dataset
 
-    ds = searcher._terms_dataset()
+    ds = searcher._terms_ds
     all_terms = ds.to_table(columns=["term"]).column("term").to_pylist()
     for node in [
         ("prefix", "ba"),
@@ -899,10 +899,10 @@ def test_search_after_block_pruned(spark, tmp_path_factory):
     page2 = s.search_after("hot", page1[-1], 10)
     assert page1 == full[:10]
     assert page2 == full[10:20]
-    tp = s._term_cache[("text", "hot")]
+    tp = s._tp("hot")
     assert len(tp.blocks) > 10  # the term is actually hot (19 blocks)
     # both pages together decoded only the competitive head blocks
-    assert len(tp._decoded) < len(tp.blocks) // 2
+    assert tp.n_decoded < len(tp.blocks) // 2
     # a cold two-term flat OR walks both terms' blocks by bound: its
     # pages equal the exhaustive ranking and decode under half the blocks
     q = "hot OR zap"
@@ -912,9 +912,9 @@ def test_search_after_block_pruned(spark, tmp_path_factory):
     page2 = s.search_after(q, page1[-1], 10)
     assert page1 == full[:10]
     assert page2 == full[10:20]
-    tps = [s._term_cache[("text", t)] for t in ("hot", "zap")]
+    tps = [s._tp(t) for t in ("hot", "zap")]
     assert all(len(tp.blocks) > 5 for tp in tps)
-    assert (sum(len(tp._decoded) for tp in tps)
+    assert (sum(tp.n_decoded for tp in tps)
             < sum(len(tp.blocks) for tp in tps) // 2)
 
 

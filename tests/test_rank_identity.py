@@ -286,12 +286,9 @@ def test_lmd_similarity_distributed_matches_local(spark, index_dir):
 def test_dense_budget_knob(index_dir, oracle, query_set):
     """The warm-path memory budget is a real bound, not a comment: a
     tiny budget forces _DENSE_MAX_DOC below the corpus (every query
-    falls to the sparse paths, results unchanged), and the hot-table
-    cache evicts LRU beyond its half-budget share."""
-    import numpy as np
-
+    falls to the sparse paths, results unchanged), and the term cache,
+    dense tables included, evicts LRU beyond its half-budget share."""
     from lucene_solr_spark.query.engine import LocalSearcher
-    from lucene_solr_spark.query.parser import parse_query
 
     tiny = LocalSearcher(index_dir, dense_budget_mb=1)
     # budget/16 bytes per doc
@@ -302,20 +299,73 @@ def test_dense_budget_knob(index_dir, oracle, query_set):
         node = parse_query(qtext)
         want = oracle.search(node, K) if node is not None else []
         _assert_identical(f"tinybudget:{name}", tiny.search(qtext, K), want)
-    # LRU eviction: cap the cache to ~1 table and touch several hot
-    # terms — the cache must never exceed its derived bound
+    # LRU eviction: a share of about one dense table, and several hot
+    # terms' tables built — the cache must never exceed that share
     s = LocalSearcher(index_dir)
     n = s.max_doc + 1
-    s.dense_budget_bytes = 2 * 5 * n  # max_tables == 1
+    s.dense_budget_bytes = 2 * 5 * n
     hot = sorted(
         ((t, len(p[0])) for t, p in oracle.postings.items()),
         key=lambda x: -x[1],
     )[:4]
     for t, df in hot:
         if df * s._DENSE_CACHE_FRAC >= n:
-            s.search(t, 1)  # loads the term's postings
+            s._load_terms([("text", t)])
             s._term_dense(t)
-            assert len(s._dense_tables) <= 1
+            s._end_query([("text", t)])
+            assert s._cache_bytes <= s.dense_budget_bytes // 2
+            assert sum(tp.dense is not None for tp in s._terms.values()) <= 1
+
+
+def _entry_bytes(tp) -> int:
+    """Recount of every payload and array a term-cache entry holds."""
+    arrays = [tp.first_doc, tp.last_doc, tp.max_tf, tp.min_ntab, tp.offs,
+              tp.scores, tp.order, *(tp.postings or ()), *(tp.dense or ()),
+              *(a for got in tp._decoded.values() for a in got)]
+    return sum(len(b[k]) for b in tp.blocks
+               for k in ("payload", "norms_payload", "pos_payload")
+               if b.get(k)) + sum(a.nbytes for a in arrays if a is not None)
+
+
+def test_term_cache_byte_budget(index_dir, oracle):
+    """One byte budget over every per-term structure: sweeping every
+    text term plus ANDs and ORs of neighbours, a searcher whose budget
+    evicts between queries keeps its accounted cache total within half
+    the budget, equal to a recount of what its entries hold, after
+    every search and explain; its pages equal an unbudgeted searcher's
+    and the oracle's, also for a term larger than the whole budget."""
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    terms = sorted(oracle.postings,
+                   key=lambda t: (-oracle.postings[t][0].size, t))
+    queries = [("term", t) for t in terms]
+    for a, b in zip(terms, terms[1:]):
+        queries += [("and", [("term", a), ("term", b)]),
+                    ("or", [("term", a), ("term", b)])]
+    free = LocalSearcher(index_dir)
+    want = [free.search(q, K) for q in queries]
+    probe = LocalSearcher(index_dir)
+    probe.search(queries[0], K)
+    s = LocalSearcher(index_dir)
+    # the top term's entry after its own query is larger than the budget
+    s.dense_budget_bytes = probe._tp(terms[0]).nbytes - 1
+
+    def within_budget(q):
+        assert s._cache_bytes <= s.dense_budget_bytes // 2, q
+        assert s._cache_bytes == sum(
+            _entry_bytes(tp) for tp in s._terms.values()), q
+
+    for q, page in zip(queries, want):
+        _assert_identical(f"budget:{q}", page, oracle.search(q, K))
+        got = s.search(q, K)
+        _assert_identical(f"budget:{q}", got, page)
+        within_budget(q)
+        if got:
+            assert s.explain(q, got[0][0])["value"] == got[0][1], q
+            within_budget(q)
+        if q == queries[0]:
+            assert not s._terms  # evicted after its query
+    assert len(s._terms) < len(terms)  # entries were evicted
 
 
 def test_lmjm_similarity_rank_identity(index_dir, oracle):

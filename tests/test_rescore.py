@@ -3,6 +3,8 @@ QueryRescorer.java:51-140 discipline): combine semantics vs an
 independent numpy replay from the oracle, tie-break preservation, and
 the expression (LTR-seam) modes."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -42,6 +44,24 @@ def test_rescore_matches_oracle_replay(ds, oracle):
     want = [(d, np.float32(s))
             for d, s in _replay(oracle, FIRST, "batch", 2.0, 25, 10)]
     assert got == want and len(got) > 0
+
+
+def test_rescore_query_is_one_shard_pass(spark, ds):
+    """The query rescorer is the shard pass plus the driver's top-n and
+    top-k: one Python map over the shard Range, no join (the second
+    query is scored inside the shards at their top-n docs), and one
+    Spark job."""
+    df = ds.rescore_df(FIRST, "batch", weight=2.0, n=25, k=10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"MapInPandas", plan)) == 1, plan
+    assert not re.search(r"\w*Join\b", plan), plan
+    sc = spark.sparkContext
+    sc.setJobGroup("rescore-plan", "rescore-plan")
+    try:
+        assert df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("rescore-plan")) == 1
 
 
 def test_rescore_nonmatching_second_keeps_first_pass(ds):

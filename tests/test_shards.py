@@ -114,7 +114,8 @@ def test_blocks_straddle_the_shard_boundaries(shard_setup):
     d, _, _ = shard_setup
     ls = LocalSearcher(d)
     ls._load_terms([("text", t) for t in ("hot", "alpha", "beta")])
-    ranges = {t: ls._tp(t).block_ranges() for t in ("hot", "alpha", "beta")}
+    ranges = {t: (ls._tp(t).first_doc, ls._tp(t).last_doc)
+              for t in ("hot", "alpha", "beta")}
     for n in SHARDS[1:]:
         for _, b in _bounds(ls.max_doc, n):
             fd, ld = ranges["hot"]
@@ -186,9 +187,7 @@ def test_distributed_equals_local_equals_oracle(spark, shard_setup):
     ls64 = LocalSearcher(d, dtype="float64")
     for name, q in QUERIES.items():
         local = _f32(ls.search(q, 2 * K))
-        # the oracle has no SynonymQuery; LocalSearcher is its reference
-        want = (local if name == "synonym"
-                else _f32(oracle.search(_node(q), 2 * K)))
+        want = _f32(oracle.search(_node(q), 2 * K))
         assert local == want, name
         assert _f32(ds.search(q, 2 * K)) == want, name
         page = ds.search_df(q, K, after=want[K - 1]).collect()

@@ -73,8 +73,9 @@ def main(sf_dir: str) -> None:
          "DisjunctionMax: the same shard plan as every query — one "
          "Python map over the shard Range, no shuffle"),
         ("rescore_topk",
-         "QueryRescorer: first-pass top-n broadcast-probes the second "
-         "query's shard matches (r5)"),
+         "QueryRescorer: one shard pass scores the second query at "
+         "each shard's first-pass top-n, then the global top-n and "
+         "top-k — no join"),
         ("facet_pivot_counts",
          "facet.pivot: one layered agg per LEVEL, broadcast semi-join "
          "to surviving parents, window rank within tuple (r5)"),
