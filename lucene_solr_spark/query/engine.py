@@ -132,13 +132,6 @@ class _TermPostings:
     def decode_blocks(self, idxs) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         if len(idxs) == len(self.blocks):
             return self.decode_all()
-        if self.postings is not None:
-            # one gather of the blocks' posting ranges [offs[i], offs[i+1])
-            i = np.asarray(idxs, dtype=np.int64)
-            lo = self.offs[i]
-            n = self.offs[i + 1] - lo
-            at = np.arange(n.sum()) + np.repeat(lo - np.cumsum(n) + n, n)
-            return tuple(a[at] for a in self.postings)
         if len(idxs) == 0:
             return tuple(np.empty(0, t) for t in (np.int64, np.int64, np.uint8))
         parts = [self.decode(i) for i in idxs]
@@ -1100,8 +1093,15 @@ class LocalSearcher:
         tbl[docs] = scores
         out = (tbl != np.float32(0.0), tbl)
         if docs.size * self._DENSE_CACHE_FRAC >= n:
-            tp.dense = out  # a hot term's table lives on its entry
-            tp.nbytes += out[0].nbytes + tbl.nbytes
+            # a hot term's table lives on its entry only while the cache
+            # total plus this query's uncounted growth leaves room for it
+            # (else it is rebuilt on reuse), so a wide query's tables
+            # never hold more than half the budget
+            if self._cache_bytes + 5 * n + sum(
+                    e.nbytes - e.counted for e in self._terms.values()
+            ) <= self.dense_budget_bytes // 2:
+                tp.dense = out
+                tp.nbytes += out[0].nbytes + tbl.nbytes
         else:
             self._eval_memo[("dtbl", term)] = out  # this query only
         return out

@@ -315,6 +315,26 @@ def test_dense_budget_knob(index_dir, oracle, query_set):
             s._end_query([("text", t)])
             assert s._cache_bytes <= s.dense_budget_bytes // 2
             assert sum(tp.dense is not None for tp in s._terms.values()) <= 1
+    # within one query too: with room for one table beside the hot
+    # entries, one table joins its entry and the others are dropped
+    keys = [("text", t) for t, df in hot if df * s._DENSE_CACHE_FRAC >= n]
+    assert len(keys) >= 2
+    s = LocalSearcher(index_dir)
+    s._load_terms(keys)
+    for _, t in keys:
+        s._term_full(t, ranked=True)
+    s._end_query(keys)
+    s.dense_budget_bytes = 2 * (s._cache_bytes + 5 * n + 5 * n // 2)
+    for _, t in keys:
+        mask, tbl = s._term_dense(t)
+        docs, scores = s._term_full(t)
+        assert np.array_equal(np.flatnonzero(mask), docs)
+        assert np.array_equal(tbl[docs], scores)
+    held = sum(_entry_bytes(tp) for tp in s._terms.values())
+    assert held <= s.dense_budget_bytes // 2
+    assert sum(tp.dense is not None for tp in s._terms.values()) == 1
+    s._end_query(keys)
+    assert s._cache_bytes == held
 
 
 def _entry_bytes(tp) -> int:
