@@ -12,10 +12,15 @@ codec, and scores with exactly Lucene's float discipline:
 - top-k tie-break (score desc, docID asc) (HitQueue.java:76-81).
 
 Physical optimizations (SURVEY.md §4.2):
-- AND: cost-ordered intersection, cheapest (lowest-df) list leads
-  (ConjunctionDISI.java:150,175-210); larger lists decode only blocks
-  whose [first_doc, last_doc] range intersects surviving candidates —
-  the skip-list advance() analogue over our block-max metadata.
+- the exhaustive evaluator `_eval` runs one algorithm per node kind.
+  AND is the cost-ordered intersection (leapfrog): the cheapest
+  (lowest-df) list leads (ConjunctionDISI.java:150,175-210); larger
+  lists decode only blocks whose [first_doc, last_doc] range
+  intersects surviving candidates — the skip-list advance() analogue
+  over our block-max metadata.  OR and msm_or sum their parts in
+  `_sum_parts`' bucket table (BooleanScorer); every span shape runs
+  the query/spans_batch.py kernels.  Per-term dense score tables,
+  tree masks and gathers belong to the collector alone.
 - top-k with pruning: ONE collector (`LocalSearcher._collect`, the
   threshold algorithm) over one cursor per leaf term of a
   term/and/or/msm_or tree.  Warm lists walk in score order; cold lists
@@ -194,8 +199,10 @@ class LocalSearcher:
 
     `dense_budget_mb` (default 128) is the one memory setting: the term
     cache (an LRU of one byte-accounted `_TermPostings` per term) is cut
-    to half of it after every query, and dense per-query structures run
-    only when maxDoc <= budget/16 (else sparse paths, same results).
+    to half of it after every query, and the per-query dense structures
+    (the collector's tables, masks and seen bitmap, `_sum_parts`'
+    bucket table) run only when maxDoc <= budget/16 (else sparse paths,
+    same results).
 
     `dtype="float64"` is the gate mode: leaf scores are the model's
     ``weight64``/``score64`` over the exact docmap doc length, node sums
@@ -259,8 +266,8 @@ class LocalSearcher:
         )
         self.sim = self._make_sim(self.doc_count, self.sum_ttf)
         self._field_sims = {"text": self.sim}
-        #: the collector and the dense-table paths assume float32 scores
-        #: that are positive at every posting
+        #: the collector and its dense tables assume float32 scores that
+        #: are positive at every posting
         self._prunable = self.sim.prunable and self._st is np.float32
         self._postings_ds = pads.dataset(
             os.path.join(index_dir, "postings"), format="parquet",
@@ -395,35 +402,10 @@ class LocalSearcher:
         tp = self._tp(term)
         if not tp.blocks or candidates.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        dense = tp.dense
-        if dense is not None:
-            # hot term with a cached dense table: O(|cand|) gather
-            # beats re-concatenating ~all of a high-df posting list
-            # on every repeated conjunction (the table exists exactly
-            # when df*_DENSE_CACHE_FRAC >= max_doc, i.e. when the
-            # block-subset path below would touch most blocks anyway)
-            m, sc = dense
-            hit = m[candidates]
-            cd = candidates[hit]
-            return cd, sc[cd]
         # block i relevant iff any candidate in [first_doc, last_doc]
         lo = np.searchsorted(candidates, tp.first_doc, side="left")
         hi = np.searchsorted(candidates, tp.last_doc, side="right")
         idxs = np.flatnonzero(hi > lo)
-        if (idxs.size * 4 >= len(tp.blocks)
-                and self._prunable
-                and tp.n_docs * self._DENSE_CACHE_FRAC
-                >= self.max_doc + 1
-                and self.max_doc + 1 <= self._DENSE_MAX_DOC):
-            # dense-cacheable hot term whose blocks the candidates
-            # touch broadly (>= 1/4): build its score table ONCE and
-            # gather — every later lookup is O(|cand|) instead of an
-            # O(touched-df) per-query block concat + sorted filter
-            # (the per-block python overhead of a wide subset decode
-            # costs more than the one-time full-table scatter)
-            m, sc = self._term_dense(term)
-            cd = candidates[m[candidates]]
-            return cd, sc[cd]
         if idxs.size * 4 >= len(tp.blocks) * 3:
             # nearly all blocks relevant: the cached full concatenation
             # beats re-concatenating a per-query block subset (the
@@ -483,33 +465,12 @@ class LocalSearcher:
         return out
 
     def _cost_of(self, node) -> int:
-        """Upper-bound match count of a node (the Weight.cost() analogue,
-        search/Weight.java) — drives the dense-vs-leapfrog AND choice."""
+        """Upper-bound match count of a term/and/or/msm_or tree (the
+        Weight.cost() analogue, search/Weight.java) — the collector's
+        empty-AND and selective-AND tests."""
         kind = node[0]
         if kind == "term":
             return self._tp(node[1]).n_docs
-        if kind == "fterm":
-            return self._tp(node[2], node[1]).n_docs
-        if kind in ("const_or", "synonym"):
-            return sum(self._tp(t).n_docs for t in node[1])
-        if kind == "matchnone":
-            return 0
-        if kind in ("tsrange", "filter0"):
-            return self.max_doc
-        if kind in ("andnot", "reqopt", "reqfilter", "boost"):
-            return self._cost_of(node[1])
-        if kind == "phrase":
-            return min(self._tp(t).n_docs for t, _ in node[1])
-        if kind == "span_near":
-            return min(self._cost_of(c) for c in node[1])
-        if kind == "sterm":
-            return self._tp(node[1]).n_docs
-        if kind == "sor":
-            return sum(self._tp(t).n_docs for t in node[1])
-        if kind in ("span_first", "span_not", "span_range"):
-            return self._cost_of(node[1])
-        if kind in ("span_containing", "span_within"):
-            return min(self._cost_of(node[1]), self._cost_of(node[2]))
         if kind == "and":
             return min(self._cost_of(c) for c in node[1])
         children = node[2] if kind == "msm_or" else node[1]
@@ -719,68 +680,6 @@ class LocalSearcher:
             term_data[t] = (present, row, pos, norms)
         return term_data
 
-    def _span_freqs_ordered_terms(self, clauses, slop: int, cand: np.ndarray,
-                                  term_data) -> np.ndarray:
-        """Vectorized NearSpansOrdered over ALL candidate docs at once for
-        the all-SpanTermQuery clause case (the common shape): flatten each
-        clause's candidate positions into (doc_index << 32 | pos) keys;
-        stretchToOrder is one searchsorted per later clause over all
-        clause-0 occurrences simultaneously (NearSpansOrdered.java:95-125
-        semantics, batch form).  freq accumulates per doc in enumeration
-        (start) order with EXACT float32 sequential discipline via
-        per-rank rounds, matching span_freq bit-for-bit."""
-        n = cand.size
-        terms = [c[1] for c in clauses]
-        flats, cis, keys = [], [], []
-        for t in terms:
-            present, row, pos, _ = term_data[t]
-            # every cand doc contains every clause term (cand is the
-            # conjunction), so present is all-True here
-            plists = [pos[r] for r in row.tolist()]
-            counts = np.array([p.size for p in plists], dtype=np.int64)
-            flat = (
-                np.concatenate(plists) if plists else np.empty(0, np.int64)
-            ).astype(np.int64)
-            ci = np.repeat(np.arange(n, dtype=np.int64), counts)
-            flats.append(flat)
-            cis.append(ci)
-            keys.append((ci << 32) | flat)
-        # enumerate from clause 0's occurrences
-        ci0 = cis[0]
-        width = np.zeros(ci0.size, dtype=np.int64)
-        prev_end = flats[0] + 1
-        valid = np.ones(ci0.size, dtype=bool)
-        for i in range(1, len(clauses)):
-            want = (ci0 << 32) | prev_end
-            j = np.searchsorted(keys[i], want, side="left")
-            j_c = np.minimum(j, keys[i].size - 1) if keys[i].size else j
-            ok = (keys[i].size > 0) & (j < keys[i].size)
-            ok &= cis[i][j_c] == ci0
-            valid &= ok
-            pos_i = flats[i][j_c]
-            width += np.where(valid, pos_i - prev_end, 0)
-            prev_end = np.where(valid, pos_i + 1, prev_end)
-        match = valid & (width <= slop)
-        freqs = np.zeros(n, dtype=np.float32)
-        if not match.any():
-            return freqs
-        mci = ci0[match]
-        factors = (
-            np.float32(1.0)
-            / (width[match].astype(np.float32) + np.float32(1.0))
-        ).astype(np.float32)
-        # per-doc sequential float32 accumulation, one vectorized round
-        # per within-doc match rank (matches are already in start order)
-        rank = np.arange(mci.size, dtype=np.int64)
-        first = np.concatenate(([0], np.flatnonzero(np.diff(mci)) + 1))
-        rank = rank - np.repeat(first, np.diff(np.concatenate((first, [mci.size]))))
-        for r in range(int(rank.max()) + 1):
-            sel = rank == r
-            freqs[mci[sel]] = (freqs[mci[sel]] + factors[sel]).astype(
-                np.float32
-            )
-        return freqs
-
     def _eval_span(self, node) -> tuple[np.ndarray, np.ndarray]:
         """Span-query evaluation (SpanNear ordered/unordered, SpanOr,
         SpanFirst, SpanNot, SpanContaining/Within/PositionRange —
@@ -791,11 +690,14 @@ class LocalSearcher:
         (SpanWeight.buildSimWeight — a top-level SpanNot weights
         include+exclude terms, a nested one only include).
 
-        The ordered all-term SpanNear (the common shape) runs through a
-        fully-vectorized batch enumeration; every other shape runs the
-        CSR batch kernels of query/spans_batch.py — no per-doc Python
+        Every shape runs the CSR batch kernels of query/spans_batch.py
+        (the vectorized restatement of doc_spans) — no per-doc Python
         in any span path."""
         from .spans import span_terms
+        from .spans_batch import (
+            batch_doc_spans, batch_span_freqs, from_positions,
+        )
+        from .spans_batch import empty as empty_batch
 
         empty = (np.empty(0, np.int64), np.empty(0, np.float32))
         all_terms = sorted(set(span_terms(node)))
@@ -814,42 +716,25 @@ class LocalSearcher:
             take = present & ~havenorm
             normsb[take] = norms[row[take]]
             havenorm |= present
-        if (
-            node[0] == "span_near" and node[3]
-            and all(c[0] == "sterm" for c in node[1])
-            and all(c[1] in term_data for c in node[1])
-        ):
-            freqs = self._span_freqs_ordered_terms(
-                node[1], node[2], cand, term_data
-            )
-        else:
-            # general shapes (unordered near, nesting, contain family):
-            # batch CSR evaluation — no per-doc Python (spans_batch is
-            # the vectorized restatement of doc_spans)
-            from .spans_batch import (
-                batch_doc_spans, batch_span_freqs, from_positions,
-            )
-            from .spans_batch import empty as empty_batch
+        n = cand.size
+        bs_cache: dict[str, object] = {}
 
-            n = cand.size
-            bs_cache: dict[str, object] = {}
+        def term_batch(t):
+            bs = bs_cache.get(t)
+            if bs is None:
+                got = term_data.get(t)
+                if got is None:
+                    bs = empty_batch(n)
+                else:
+                    present, row, pos, _ = got
+                    bs = from_positions(
+                        [pos[r] if p else None for p, r in
+                         zip(present.tolist(), row.tolist())], n
+                    )
+                bs_cache[t] = bs
+            return bs
 
-            def term_batch(t):
-                bs = bs_cache.get(t)
-                if bs is None:
-                    got = term_data.get(t)
-                    if got is None:
-                        bs = empty_batch(n)
-                    else:
-                        present, row, pos, _ = got
-                        bs = from_positions(
-                            [pos[r] if p else None for p, r in
-                             zip(present.tolist(), row.tolist())], n
-                        )
-                    bs_cache[t] = bs
-                return bs
-
-            freqs = batch_span_freqs(batch_doc_spans(node, n, term_batch))
+        freqs = batch_span_freqs(batch_doc_spans(node, n, term_batch))
         mask = freqs > 0
         cand, freqs, normsb = cand[mask], freqs[mask], normsb[mask]
         if cand.size == 0:
@@ -977,33 +862,9 @@ class LocalSearcher:
             return rd, total.astype(self._st)
         children = node[1]
         if kind == "and":
-            # WARM, comparably-sized lists: one dense count+sum pass
-            # over the full child lists beats the leapfrog (no
-            # searchsorted chains) — the windowed-BooleanScorer cost
-            # choice.  When one clause is much rarer than the rest
-            # (min-cost << total) the leapfrog's candidate-driven
-            # lookups touch only O(min df) postings, so it stays the
-            # winner; cold term lists also keep the leapfrog, whose
-            # block-range skipping avoids decoding non-candidate blocks.
-            if self.max_doc + 1 <= self._DENSE_MAX_DOC and self._prunable:
-                tnames = [t for f, t in self._collect_terms(node)
-                          if f == "text"]
-                costs = [self._cost_of(c) for c in children]
-                warm = not tnames or not self._mostly_undecoded(tnames)
-                # dense when the cheapest clause is not tiny: the
-                # leapfrog touches O(min df) postings, so a rare lead
-                # keeps it; otherwise mask-first dense evaluation costs
-                # a few contiguous full-array passes regardless of
-                # clause balance (the windowed-BooleanScorer choice)
-                if warm and min(costs) * 16 >= self.max_doc + 1:
-                    got = self._dense_tree_eval(node)
-                    if got is not None:
-                        return got
-                if warm and min(costs) * 4 >= sum(costs):
-                    parts = [self._eval(c) for c in children]
-                    return self._sum_parts(parts, min_match=len(children))
-
-            # cost order: cheapest df leads (ConjunctionDISI discipline)
+            # leapfrog (ConjunctionDISI): the cheapest df leads, and
+            # each later clause is looked up only at the surviving
+            # candidates, decoding just the blocks that hold them
             def df_of(n):
                 if n[0] == "term":
                     return self._tp(n[1]).n_docs
@@ -1060,15 +921,14 @@ class LocalSearcher:
 
     #: default warm-path memory budget (MB) — overridable per instance
     #: (LocalSearcher(dense_budget_mb=...)).  Half of it bounds the
-    #: term cache between queries (`_end_query`); _DENSE_MAX_DOC,
-    #: budget/16 bytes per doc, bounds each query's dense structures
-    #: (8 B float64 accumulator + 4 B score table + 1 B mask + 1 B TA
+    #: term cache between queries (`_end_query`); budget/16 bytes per
+    #: doc bounds each query's dense structures (set in `__init__`;
+    #: 8 B float64 accumulator + 4 B score table + 1 B mask + 1 B TA
     #: seen bitmap + slack — see SCALE.md "Warm-path memory budget");
     #: the default 128 MB keeps the historical 2^23-doc shard bound.
-    #: Beyond the bound the sparse sort-merge path takes over —
-    #: correctness never depends on the budget.
+    #: Beyond the bound the sparse paths take over — correctness never
+    #: depends on the budget.
     _DENSE_BUDGET_MB_DEFAULT = 128
-    _DENSE_MAX_DOC = (128 << 20) // 16  # class fallback == default
 
     #: a term's dense score table is CACHED when df * 64 >= max_doc
     #: (sparser terms get an ephemeral table per query — a cheap
@@ -1106,11 +966,10 @@ class LocalSearcher:
             self._eval_memo[("dtbl", term)] = out  # this query only
         return out
 
-    def _dense_mask(self, node) -> np.ndarray | None:
+    def _dense_mask(self, node) -> np.ndarray:
         """Boolean match mask of an and/or/msm_or tree of TERM leaves —
         masks combine with full-array bool ops BEFORE any scoring, so an
-        AND prunes the scoring domain to its intersection for free.
-        None for an unsupported shape."""
+        AND prunes the collector's scoring domain to its intersection."""
         kind = node[0]
         key = ("dmask", id(node))
         if key in self._eval_memo:
@@ -1118,23 +977,13 @@ class LocalSearcher:
         if kind == "term":
             out = self._term_dense(node[1])[0]
         else:
-            if kind == "msm_or":
-                children, n_min = node[2], node[1]
-            elif kind in ("and", "or"):
-                children, n_min = node[1], None
-            else:
-                return None
-            masks = []
-            for c in children:
-                m = self._dense_mask(c)
-                if m is None:
-                    return None
-                masks.append(m)
+            children = node[2] if kind == "msm_or" else node[1]
+            masks = [self._dense_mask(c) for c in children]
             if kind == "msm_or":
                 cnt = masks[0].astype(np.int16)
                 for m in masks[1:]:
                     cnt += m
-                out = cnt >= n_min
+                out = cnt >= node[1]
             else:
                 out = masks[0].copy()
                 for m in masks[1:]:
@@ -1164,38 +1013,11 @@ class LocalSearcher:
         return out
 
     def _eval_at(self, node, cand: np.ndarray):
-        """(docs, scores) of `node` restricted to the sorted candidate
-        set — dense-table gather when the node supports it (O(|cand|)
-        per clause instead of a full disjunction scatter), else full
-        evaluation + filter.  Used for composite clauses inside the
-        AND leapfrog, where `cand` is already small.  The dense path is
-        gated on the node's term lists being mostly decoded already
-        (same cold-list guard as the sibling gates above): building a
-        dense table for a cold high-df composite child would force a
-        full-postings decode and defeat block pruning on first-touch
-        queries."""
-        if self.max_doc + 1 <= self._DENSE_MAX_DOC and self._prunable:
-            tnames = [t for f, t in self._collect_terms(node) if f == "text"]
-            if not tnames or not self._mostly_undecoded(tnames):
-                m = self._dense_mask(node)
-                if m is not None:
-                    cd = cand[m[cand]]
-                    return cd, self._dense_scores_at(node, cd)
+        """(docs, scores) of a composite AND clause restricted to the
+        sorted candidate set: full evaluation + filter."""
         cd, cs = self._eval(node)
         m = _sorted_isin(cd, cand)
         return cd[m], cs[m]
-
-    def _dense_tree_eval(self, node):
-        """(docs, scores) via mask-first dense evaluation: masks combine
-        before any scoring, so scores are gathered only at matching
-        docs.  Returns None for unsupported shapes."""
-        mask = self._dense_mask(node)
-        if mask is None:
-            return None
-        docs = np.flatnonzero(mask)
-        if docs.size == 0:
-            return docs, np.empty(0, np.float32)
-        return docs, self._dense_scores_at(node, docs)
 
     def _sum_parts(self, parts, min_match: int | None = None
                    ) -> tuple[np.ndarray, np.ndarray]:
@@ -1208,8 +1030,8 @@ class LocalSearcher:
         dense bucket array instead of merging sorted streams).  Each
         part lands with one vectorized scatter-add (docs are unique per
         part), so the per-query cost is O(sum of list lengths), with no
-        sort and no per-part searchsorted.  Falls back to the sparse
-        unique+add.at merge when the shard's docID space exceeds
+        sort and no per-part searchsorted.  Falls back to a sparse
+        unique + bincount merge when the shard's docID space exceeds
         _DENSE_MAX_DOC."""
         parts = [p for p in parts if p[0].size]
         if not parts:
@@ -1243,17 +1065,15 @@ class LocalSearcher:
                         seen[cd] = False
                         cnt[cd] = 0
             return out
-        all_docs = np.concatenate([p[0] for p in parts])
-        docs = np.unique(all_docs)
-        total = np.zeros(docs.size, dtype=np.float64)
-        cnts = np.zeros(docs.size, dtype=np.int64)
-        for cd, cs in parts:
-            idx = np.searchsorted(docs, cd)
-            np.add.at(total, idx, cs.astype(np.float64))
-            if min_match is not None:
-                np.add.at(cnts, idx, 1)
+        # sparse: docs are unique within a part and the parts are
+        # concatenated in clause order, so bincount adds each doc's
+        # scores to 0.0 in clause order, like the dense table
+        docs, inv = np.unique(np.concatenate([p[0] for p in parts]),
+                              return_inverse=True)
+        total = np.bincount(inv, np.concatenate(
+            [p[1].astype(np.float64) for p in parts]), docs.size)
         if min_match is not None:
-            keep = cnts >= min_match
+            keep = np.bincount(inv, minlength=docs.size) >= min_match
             return docs[keep], total[keep].astype(self._st)
         return docs, total.astype(self._st)
 

@@ -708,10 +708,17 @@ def test_span_near_rank_identity(searcher, oracle):
           ("sterm", "pipeline")], 2, True),
         ([("sterm", "retry"), ("sterm", "deploy"),
           ("sterm", "pipeline")], 4, False),
-        # duplicate sterm clauses through the vectorized ordered path
+        # duplicate sterm clauses, ordered: two and three clauses, at
+        # slop 0 and slop > 0
         ([("sterm", "busu0"), ("sterm", "busu0")], 4, True),
         ([("sterm", "busu0"), ("sterm", "ralove"),
           ("sterm", "busu0")], 6, True),
+        ([("sterm", "busu0"), ("sterm", "ralove"),
+          ("sterm", "busu0")], 0, True),
+        ([("sterm", "busu0"), ("sterm", "busu0"),
+          ("sterm", "busu0")], 0, True),
+        ([("sterm", "busu0"), ("sterm", "busu0"),
+          ("sterm", "busu0")], 3, True),
     ]
     nodes = [("span_near", c, s, o) for c, s, o in cases]
     near_rd = ("span_near", [("sterm", "retry"), ("sterm", "deploy")], 3, True)

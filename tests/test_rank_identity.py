@@ -285,20 +285,41 @@ def test_lmd_similarity_distributed_matches_local(spark, index_dir):
 
 def test_dense_budget_knob(index_dir, oracle, query_set):
     """The warm-path memory budget is a real bound, not a comment: a
-    tiny budget forces _DENSE_MAX_DOC below the corpus (every query
-    falls to the sparse paths, results unchanged), and the term cache,
-    dense tables included, evicts LRU beyond its half-budget share."""
+    budget too small for the corpus (0 MB) puts _DENSE_MAX_DOC below it,
+    so every query falls to the sparse paths — the OR and msm_or sums
+    included — with results unchanged, and the term cache, dense tables
+    included, evicts LRU beyond its half-budget share."""
     from lucene_solr_spark.query.engine import LocalSearcher
 
-    tiny = LocalSearcher(index_dir, dense_budget_mb=1)
     # budget/16 bytes per doc
-    assert tiny._DENSE_MAX_DOC == (1 << 20) // 16
+    assert LocalSearcher(index_dir, dense_budget_mb=1)._DENSE_MAX_DOC == (
+        1 << 20) // 16
     big = LocalSearcher(index_dir)
     assert big._DENSE_MAX_DOC == (128 << 20) // 16
-    for name, qtext in query_set[:12]:
+    tiny = LocalSearcher(index_dir, dense_budget_mb=0)
+    assert tiny._DENSE_MAX_DOC < tiny.max_doc + 1
+    sums = []
+    sum_parts = tiny._sum_parts
+
+    def spy(parts, min_match=None):
+        sums.append(min_match)
+        return sum_parts(parts, min_match)
+
+    tiny._sum_parts = spy
+    for name, qtext in query_set:
         node = parse_query(qtext)
         want = oracle.search(node, K) if node is not None else []
         _assert_identical(f"tinybudget:{name}", tiny.search(qtext, K), want)
+    # an msm_or tree node, every match ranked
+    terms = sorted(oracle.postings, key=lambda t: -oracle.postings[t][0].size)
+    msm = ("msm_or", 2, [("term", t) for t in terms[:2] + terms[8:10]])
+    want = oracle.search(msm, tiny.max_doc + 1)
+    assert want
+    _assert_identical("tinybudget:msm_or", tiny.search(msm, None), want)
+    # the sparse sums ran, for ORs and for the msm_or, and the dense
+    # scratch table was never allocated
+    assert None in sums and 2 in sums
+    assert "_sum_bufs" not in vars(tiny)
     # LRU eviction: a share of about one dense table, and several hot
     # terms' tables built — the cache must never exceed that share
     s = LocalSearcher(index_dir)
@@ -335,6 +356,68 @@ def test_dense_budget_knob(index_dir, oracle, query_set):
     assert sum(tp.dense is not None for tp in s._terms.values()) == 1
     s._end_query(keys)
     assert s._cache_bytes == held
+
+
+def test_exhaustive_evaluator_builds_no_dense_structure(index_dir, query_set,
+                                                        monkeypatch):
+    """The exhaustive evaluator runs one algorithm per node kind and
+    leaves dense per-doc tables and masks to the collector: a warm
+    pruning=False searcher, on its second pass over the query set,
+    holds no term's dense table and memoizes no table or mask; a fresh
+    shard searcher (a DistributedSearcher task) per AND and mixed query
+    builds a dense table or mask only inside the collector."""
+    from lucene_solr_spark.query.distributed import shard_ranges
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    memo_keys: list = []
+    end_query = LocalSearcher._end_query
+
+    def spy_end_query(self, keys):
+        memo_keys.extend(k for k in self._eval_memo if isinstance(k, tuple))
+        return end_query(self, keys)
+
+    monkeypatch.setattr(LocalSearcher, "_end_query", spy_end_query)
+    warm = LocalSearcher(index_dir, pruning=False)
+    for _, q in query_set:
+        warm.search(q, K)
+    for name, q in query_set:
+        memo_keys.clear()
+        warm.search(q, K)
+        assert not memo_keys, name
+        assert all(tp.dense is None for tp in warm._terms.values()), name
+
+    depth = [0]  # > 0 while the collector runs
+    outside: list = []
+    collect = LocalSearcher._collect
+
+    def spy_collect(self, *a, **kw):
+        depth[0] += 1
+        try:
+            return collect(self, *a, **kw)
+        finally:
+            depth[0] -= 1
+
+    def spy_dense(fn):
+        def spy(self, *a):
+            if not depth[0]:
+                outside.append((fn.__name__, a[0]))
+            return fn(self, *a)
+        return spy
+
+    monkeypatch.setattr(LocalSearcher, "_collect", spy_collect)
+    for name in ("_term_dense", "_dense_mask", "_dense_scores_at"):
+        monkeypatch.setattr(LocalSearcher, name,
+                            spy_dense(getattr(LocalSearcher, name)))
+    ranges = shard_ranges(warm.max_doc, 4)
+    n_and = 0
+    for name, q in query_set:
+        if not name.startswith(("and", "mixed", "stop_1", "stop_2")):
+            continue
+        n_and += 1
+        for r in ranges:
+            LocalSearcher(index_dir, doc_range=r).search(q, K)
+            assert not outside, (name, r, outside)
+    assert n_and >= 25
 
 
 def _entry_bytes(tp) -> int:
