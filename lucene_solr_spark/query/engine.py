@@ -1086,9 +1086,12 @@ class LocalSearcher:
 
     # ------------------------------------------------------ collector
     def _mostly_undecoded(self, terms: list[str]) -> bool:
+        """Cold: no block decoded (a fresh shard's one-block term set
+        included, where the half rule alone reads 0 < 0), or under half
+        of them."""
         total = sum(len(self._tp(t).blocks) for t in terms)
         cached = sum(self._tp(t).n_decoded for t in terms)
-        return total > 0 and cached < total // 2
+        return cached == 0 or cached < total // 2
 
     def _collect(self, node, k: int, after=None):
         """Exact top-k of a term/and/or/msm_or tree of term leaves by

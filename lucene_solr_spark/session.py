@@ -25,5 +25,8 @@ def get_spark(app: str = "lucene-solr-spark", cores: int | None = None,
         .config("spark.sql.files.maxPartitionBytes", "256m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.security.manager=allow")
+        # workers without Spark's zip/jar importers: no per-task
+        # re-read of their archives (see `_daemon`)
+        .config("spark.python.daemon.module", "lucene_solr_spark._daemon")
     )
     return b.getOrCreate()

@@ -194,3 +194,39 @@ def test_distributed_equals_local_equals_oracle(spark, shard_setup):
         assert _f32([(r["doc_id"], r["score"]) for r in page]) == \
             want[K:], name
         assert ds64.search(q, K) == ls64.search(q, K), name
+
+
+@pytest.mark.parametrize("q, lo", [
+    ("velasasi AND mavabi", 229),  # one block in range between them
+    ("velasasi OR sanikame", 229),
+    ("mavabi AND sanikame", 0),  # no block in range
+])
+def test_fresh_shard_builds_no_whole_index_tables(index_dir, oracle, q, lo):
+    """A fresh shard whose query terms hold one block (or none) in its
+    range decodes nothing before collecting, so it is cold: no dense
+    table or mask sized for the whole index, and the page still equals
+    unsharded `pruning=False` and the oracle (913-doc corpus, S = 4)."""
+    from lucene_solr_spark.query.distributed import shard_ranges
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    whole = LocalSearcher(index_dir, pruning=False)
+    (r,) = [r for r in shard_ranges(whole.max_doc, 4) if r[0] == lo]
+    hi = np.inf if r[1] is None else r[1]
+    s = LocalSearcher(index_dir, doc_range=r)
+    memo: list = []
+    end = s._end_query
+
+    def spy(keys):
+        memo.extend(s._eval_memo)
+        end(keys)
+
+    s._end_query = spy
+    got = s.search(q, K)
+    assert sum(len(tp.blocks) for tp in s._terms.values()) <= 1
+    assert not [m for m in memo if isinstance(m, tuple)
+                and m[0] in ("dtbl", "dmask")]
+    assert all(tp.dense is None for tp in s._terms.values())
+    want = [h for h in whole.search(q, None) if lo <= h[0] < hi][:K]
+    assert _f32(got) == _f32(want)
+    full = oracle.search(_node(q), 10**9)
+    assert _f32(got) == _f32([h for h in full if lo <= h[0] < hi][:K])
