@@ -12,9 +12,9 @@ no Python at all.
 It drops those entries, and every importer cached under them, before
 anything imports ``pyspark``, then runs the stock
 ``pyspark.daemon.manager()`` (its fork, SIGTERM and child handling
-unchanged).  The zips are dropped only when the same ``pyspark`` and
-``py4j`` versions resolve without them; otherwise ``sys.path`` is left
-as it was and the daemon runs exactly as the stock one.
+unchanged).  The jar always goes.  The zips are dropped only when the
+same ``pyspark`` and ``py4j`` versions resolve without them; otherwise
+they stay, and pyspark is imported from them as in the stock daemon.
 
 Nothing here may import ``pyspark`` at module level: the strip has to
 run first in the daemon process, or the zipimporters of the package's
@@ -27,7 +27,7 @@ import fnmatch
 import os
 import sys
 
-#: Spark's archives by basename; the jar is dropped whatever it holds
+#: Spark's archives by basename; the jar goes whatever the zips hold
 _ZIPS = {"pyspark": "pyspark.zip", "py4j": "py4j-*.zip"}
 _JAR = "spark-core_*.jar"
 
@@ -59,27 +59,30 @@ def _resolved_version_file(path: list[str], pkg: str) -> bytes | None:
         return None
 
 
+def _same_version(entry: str, pkg: str, path: list[str]) -> bool:
+    """The archive `entry` holds the same ``<pkg>/version.py`` as the
+    `pkg` that resolves on `path`."""
+    want = _version_file(entry, pkg)
+    return want is not None and want == _resolved_version_file(path, pkg)
+
+
 def strip_spark_archives(path: list[str], cache: dict) -> list[str]:
     """Remove Spark's zip and jar entries from `path` (in place) and
     every `cache` key at or under them; return the removed entries.
 
-    All or nothing: when a zip's ``pyspark``/``py4j`` ``version.py``
-    differs from the one that resolves without the zips, or none
-    resolves, `path` and `cache` are left unchanged.  Every other entry
-    (user ``--py-files`` zips included) stays."""
+    The spark-core jar holds no Python and always goes.  The pyspark and
+    py4j zips go together, and only when each zip's ``version.py``
+    equals the one that resolves without them; otherwise both stay.
+    Every other entry (user ``--py-files`` zips included) stays."""
     name = os.path.basename
     zips = {e: pkg for e in path for pkg, pat in _ZIPS.items()
             if fnmatch.fnmatch(name(e), pat)}
-    drop = set(zips) | {e for e in path if fnmatch.fnmatch(name(e), _JAR)}
-    if not drop:
-        return []
-    kept = [e for e in path if e not in drop]
-    for entry, pkg in zips.items():
-        want = _version_file(entry, pkg)
-        if want is None or want != _resolved_version_file(kept, pkg):
-            return []
+    drop = {e for e in path if fnmatch.fnmatch(name(e), _JAR)}
+    kept = [e for e in path if e not in zips and e not in drop]
+    if all(_same_version(e, pkg, kept) for e, pkg in zips.items()):
+        drop |= set(zips)
     removed = [e for e in path if e in drop]
-    path[:] = kept
+    path[:] = [e for e in path if e not in drop]
     for key in list(cache):
         if any(key == e or key.startswith(e + os.sep) for e in drop):
             del cache[key]

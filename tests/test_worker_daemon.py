@@ -4,6 +4,7 @@ importers, the strip falls back to the stock layout whenever it cannot
 prove the same pyspark/py4j resolve without them, and a stopped session
 leaves no daemon or worker process behind."""
 
+import glob
 import json
 import os
 import subprocess
@@ -14,7 +15,7 @@ import zipfile
 import pandas as pd
 import pytest
 
-from lucene_solr_spark._daemon import strip_spark_archives
+from lucene_solr_spark._daemon import _ZIPS, _same_version, strip_spark_archives
 
 MODULE = "lucene_solr_spark._daemon"
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -29,8 +30,25 @@ def _in_spark_archive(entry: str) -> bool:
     return False
 
 
+def _zips_strippable() -> bool:
+    """Spark's pyspark and py4j zips hold the versions that resolve
+    without them on this interpreter's path (local workers share its
+    site-packages), so the daemon can drop them."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    lib = os.path.join(_find_spark_home(), "python", "lib")
+    path = [e for e in sys.path if not _in_spark_archive(e)]
+    return all(_same_version(z, pkg, path)
+               for pkg, pat in _ZIPS.items()
+               for z in glob.glob(os.path.join(lib, pat)))
+
+
 @pytest.mark.spark
 def test_worker_imports_nothing_from_spark_archives(spark):
+    if not _zips_strippable():
+        pytest.skip("no same-version pyspark/py4j outside Spark's zips; "
+                    "the daemon keeps them")
+
     def probe(batches):
         import sys
 
@@ -105,23 +123,28 @@ def test_strip_drops_spark_archives_and_their_importers(layout):
     assert user in path
 
 
-def test_strip_keeps_everything_on_a_version_mismatch(layout):
-    _, path, cache, (pz, _, _), _ = layout
+def _drops_only_the_jar(path, cache, jar):
+    """`strip_spark_archives` removes the jar and its importer and leaves
+    every other entry, both zips and their subpath importers included."""
+    before, cache_before = list(path), dict(cache)
+    assert strip_spark_archives(path, cache) == [jar]
+    assert path == [e for e in before if e != jar]
+    assert cache == {k: v for k, v in cache_before.items() if k != jar}
+
+
+def test_strip_keeps_the_zips_on_a_version_mismatch(layout):
+    _, path, cache, (pz, _, jar), _ = layout
     os.remove(pz)
     _zip(pz, {"pyspark/__init__.py": "",
               "pyspark/version.py": "__version__ = '4.0.0'\n"})
-    before, cache_before = list(path), dict(cache)
-    assert strip_spark_archives(path, cache) == []
-    assert path == before and cache == cache_before
+    _drops_only_the_jar(path, cache, jar)
 
 
-def test_strip_keeps_everything_without_pyspark_outside_the_zip(layout):
-    tmp, path, cache, _, _ = layout
+def test_strip_keeps_the_zips_without_pyspark_outside_the_zip(layout):
+    tmp, path, cache, (_, _, jar), _ = layout
     site = path[-1]
     os.rename(os.path.join(site, "pyspark"), str(tmp / "elsewhere"))
-    before, cache_before = list(path), dict(cache)
-    assert strip_spark_archives(path, cache) == []
-    assert path == before and cache == cache_before
+    _drops_only_the_jar(path, cache, jar)
 
 
 def test_strip_never_drops_a_user_zip(tmp_path):
