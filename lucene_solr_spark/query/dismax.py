@@ -15,10 +15,11 @@ minimum-match semantics (mm) — the "search the way Solr does by
 default" composition.
 
 Spark-first: both are pure REWRITES into the engines' existing node
-algebra — dismax is one new scorer node evaluated as
-groupBy(doc_id).agg(max, clause-order sum) distributed-side and a
-scatter max/sum locally; the field/boost machinery reuses the existing
-``fterm`` / ``boost`` nodes, so no new scan shape is introduced.
+algebra — dismax is one new scorer node, scored by the engine's one
+clause-order sum (`LocalSearcher._sum_parts` with a max over the same
+sorted union), locally and in every distributed shard; the field/boost
+machinery reuses the existing ``fterm`` / ``boost`` nodes, so no new
+scan shape is introduced.
 """
 from __future__ import annotations
 

